@@ -317,20 +317,25 @@ object Dedup {
                                           (inline: => DataFrame): DataFrame =
     if (usable) bucketed
     else {
+      val root = scala.util.Try(graft.similarity.Ann.cacheRoot)
+        .fold(_.getMessage, identity)
       System.err.println(s"[graft] $what: layout root not writable " +
-        s"(${graft.similarity.Ann.cacheRoot}) — serving the inline plan " +
+        s"($root) — serving the inline plan " +
         "(bit-identical; no shared bucketed layout on this host)")
       inline
     }
 
   /** Can the shared layout root be created and written? One mkdirs +
-    * one probe-file per call — cheap against a corpus-scale query. */
+    * one probe-file per call — cheap against a corpus-scale query.
+    * `root` is by-name so a cache root that `Ann.cacheRoot` refuses (a
+    * default owned by another user) counts as unusable too. */
   private[graft] def layoutRootUsable(
-      root: java.io.File = new java.io.File(
+      root: => java.io.File = new java.io.File(
         graft.similarity.Ann.cacheRoot, "graft-ann-index")): Boolean =
     try {
-      root.mkdirs()
-      val probe = java.io.File.createTempFile(".probe", null, root)
+      val dir = root
+      dir.mkdirs()
+      val probe = java.io.File.createTempFile(".probe", null, dir)
       probe.delete()
       true
     } catch { case _: Exception => false }

@@ -6,15 +6,17 @@ import org.apache.spark.sql.functions._
 
 /** Distributed driver for the frame-EPPA kernel (SURVEY §3.2):
   * normalized tracking → `groupByKey((gameId, playId, frameId))` →
-  * `flatMapGroups(kernel)` → pass/player/field outputs.
+  * one [[FrameEppa.FrameInput]] per frame → range exchange on the frame
+  * key → one [[FrameEppa.Kernel]] per task over its run of frames →
+  * pass/player/field outputs.
   *
   * The reference loops plays in a Python process pool
-  * (`comb_model_big_run_cpu.py:29-41`); here every frame is one Spark task
-  * — embarrassingly parallel after a single shuffle on the group key. Per-
-  * play EPA tables and priors ride as broadcast values. At 100 TB: ~17k
-  * plays × ~34 frames = ~580k tasks of ~50 MB peak each; AQE coalesces the
-  * small shuffle, and output is written partitioned by (gameId, playId)
-  * mirroring the reference's output tree (S8).
+  * (`comb_model_big_run_cpu.py:29-41`); here a kernel task takes a
+  * contiguous, count-balanced run of frames — embarrassingly parallel
+  * after the frame shuffle. Per-play EPA tables and priors ride as
+  * broadcast values. Output is written partitioned by (gameId, playId)
+  * mirroring the reference's output tree (S8); contiguous frame runs keep
+  * the number of play directories each task writes small.
   */
 object EppaJob {
 
@@ -109,19 +111,27 @@ object EppaJob {
     import spark.implicits._
     val bEpa = spark.sparkContext.broadcast(epaTables)
     val bPriors = spark.sparkContext.broadcast(priors)
+    // A frame costs a few hundred ms of CPU but is only a few KB, so the
+    // frame shuffle's key hash and AQE's byte-based sizing both leave the
+    // kernel tasks uneven. A range exchange on the frame key gives every
+    // task a contiguous run of frames, balanced by count; an explicit
+    // partition count is never coalesced by AQE, so the count is the
+    // task slots: one run of frames per slot.
+    val n = spark.sparkContext.defaultParallelism
     // one kernel per partition: its scratch buffers (~100 MB) are reused
     // across the partition's frames instead of reallocated per frame
-    inputs.mapPartitions { it =>
-      val kernel = new FrameEppa.Kernel(params, bPriors.value,
-        xyacScore, xyacBatch)
-      it.flatMap { in =>
-        bEpa.value.get((in.gameId, in.playId)) match {
-          case Some((comp, inc)) =>
-            Iterator.single(kernel.compute(in, comp, inc))
-          case None => Iterator.empty
+    inputs.repartitionByRange(n, col("gameId"), col("playId"), col("frameId"))
+      .mapPartitions { it =>
+        val kernel = new FrameEppa.Kernel(params, bPriors.value,
+          xyacScore, xyacBatch)
+        it.flatMap { in =>
+          bEpa.value.get((in.gameId, in.playId)) match {
+            case Some((comp, inc)) =>
+              Iterator.single(kernel.compute(in, comp, inc))
+            case None => Iterator.empty
+          }
         }
       }
-    }
   }
 
   /** Write the four output tables partitioned like the reference's

@@ -19,7 +19,8 @@ package graft.nfl
   * never do. p_int_adj is the only (F,T,J) array (~44 MB); the trajectory
   * integration walks τ per (f,T) with a running survival product —
   * O(F·ΣT·J) ops, O(J) extra space. That is what makes one frame a
-  * sane Spark task at 100 TB: ~50 MB peak, a few hundred ms of CPU.
+  * sane unit of Spark work at 100 TB: ~50 MB peak, a few hundred ms of
+  * CPU.
   */
 object FrameEppa {
 
@@ -306,10 +307,11 @@ object FrameEppa {
           var tau = 0
           while (tau <= k) {
             val tt = tOf(tau)
-            val cx = math.rint(math.max(0.0, math.min(Nx - 1.0, bx + vx * tt))).toInt
-            val cy = math.rint(math.max(0.0, math.min(Ny - 1.0, by + vy * tt))).toInt
             val z = 2.0 + vz0 * tt - 0.5 * G * tt * tt
+            // the ball's cell matters only inside the catchable z window
             if (z > params.zMin && z < params.zMax) {
+              val cx = math.rint(math.max(0.0, math.min(Nx - 1.0, bx + vx * tt))).toInt
+              val cy = math.rint(math.max(0.0, math.min(Ny - 1.0, by + vy * tt))).toInt
               val cell = cy * Nx + cx
               val cb = (cell * NT + tau) * J
               var prodAll = 1.0
@@ -532,19 +534,26 @@ object FrameEppa {
             trueEppa1 = eppa1(ti), trueTrans = trans(ti))
         } else pass0
 
-      val stats = Array.tabulate(J) { jj =>
-        var sV = 0.0; var sW = 0.0
-        var idx = jj
-        val xepaDiffBase = epaInc
-        var c = 0
-        while (c < F * NT) {
-          val w = ppcInd(c * J + jj) * trans(c)
-          sW += w
-          sV += w * (xepaComp(c) - xepaDiffBase)
-          c += 1
+      // one sequential pass over ppcInd (cell-outer, player-inner); each
+      // player's sums still accumulate in cell order, so bits are unchanged
+      val sV = new Array[Double](J); val sW = new Array[Double](J)
+      var c = 0
+      while (c < F * NT) {
+        val tr = trans(c)
+        val dv = xepaComp(c) - epaInc
+        val cb = c * J
+        j = 0
+        while (j < J) {
+          val w = ppcInd(cb + j) * tr
+          sW(j) += w
+          sV(j) += w * dv
+          j += 1
         }
+        c += 1
+      }
+      val stats = Array.tabulate(J) { jj =>
         PlayerStat(in.gameId, in.playId, in.frameId, ps(jj).nflId, ps(jj).name,
-          if (ps(jj).isOff) "OFF" else "DEF", sV, sW)
+          if (ps(jj).isOff) "OFF" else "DEF", sV(jj), sW(jj))
       }
 
       val field = Array.tabulate(F) { ff =>

@@ -16,10 +16,10 @@ import graft.ml.GbdtScorer
   * Scale notes: the per-play EPA tables (120 doubles + 1 each) collect
   * to the driver and broadcast — a full season (~17k plays) is ~17 MB,
   * the same artifact the reference holds in memory per process. Frames
-  * parallelize as one task each (EppaJob); failed plays surface as
-  * empty output rather than an errors.txt (Spark retries tasks; a play
-  * with no QB or no throw simply yields no frames — same skip semantics
-  * as the reference's try/except).
+  * spread over the kernel tasks in contiguous, count-balanced runs
+  * (EppaJob.run); failed plays surface as empty output rather than an
+  * errors.txt (Spark retries tasks; a play with no QB or no throw simply
+  * yields no frames — same skip semantics as the reference's try/except).
   */
 object SeasonJob {
 

@@ -32,8 +32,8 @@ object ThroughputBench {
     val replicated = (0 until nPlays).flatMap { p =>
       baseFrames.map(f => f.copy(gameId = 100L + p / 16, playId = p * 1000L + f.playId))
     }
+    // EppaJob.run partitions the kernel stage itself
     val inputs = spark.createDataset(replicated)
-      .repartition(cpus.toInt)
 
     val epaTables = replicated.map(f => (f.gameId, f.playId))
       .distinct.map(k => k -> (Array.tabulate(120)(i => i / 60.0), -0.5)).toMap

@@ -1242,15 +1242,46 @@ object Ann {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Root of the persisted-index cache. Defaults to the JVM temp dir for
-    * single-tenant dev boxes; on a shared host point it at a job-private
-    * path (`GRAFT_ANN_CACHE_DIR` env or `graft.ann.cache.dir` system
-    * property) — a world-writable /tmp would let another local user
-    * pre-plant index files. */
+  /** Root of the persisted-index cache: `GRAFT_ANN_CACHE_DIR` env, else
+    * the `graft.ann.cache.dir` system property, else a per-user
+    * `graft-<user>` directory under the JVM temp dir, owned by this user
+    * and mode 0700 — the temp dir itself is world-writable, and another
+    * local user must not be able to pre-plant index files. The default
+    * is re-checked on every call: a temp cleaner may delete it, and
+    * another user may then recreate it. */
   private[graft] def cacheRoot: String =
     sys.env.get("GRAFT_ANN_CACHE_DIR")
       .orElse(sys.props.get("graft.ann.cache.dir"))
-      .getOrElse(System.getProperty("java.io.tmpdir"))
+      .getOrElse(defaultCacheRoot)
+
+  private[graft] def defaultCacheRoot: String = privateDir(java.nio.file.Paths.get(
+    System.getProperty("java.io.tmpdir"), s"graft-${System.getProperty("user.name")}"))
+
+  /** `dir`, created if missing, as a real directory (not a symlink) owned
+    * by the JVM's uid with mode 0700. A directory another uid owns is
+    * refused loudly: its contents could be planted. If `dir` cannot be
+    * created at all (read-only temp dir), the path is returned as is: its
+    * writes fail, and layout serves fall back to their inline plans. */
+  private[graft] def privateDir(dir: java.nio.file.Path): String = {
+    import java.nio.file.{FileAlreadyExistsException, Files, LinkOption}
+    import java.nio.file.attribute.PosixFilePermissions
+    val mode = PosixFilePermissions.fromString("rwx------")
+    try Files.createDirectory(dir, PosixFilePermissions.asFileAttribute(mode))
+    catch {
+      case _: FileAlreadyExistsException =>
+      case _: java.io.IOException if !Files.exists(dir, LinkOption.NOFOLLOW_LINKS) =>
+        return dir.toString
+    }
+    val uid = new com.sun.security.auth.module.UnixSystem().getUid
+    val owner = Files.getAttribute(dir, "unix:uid", LinkOption.NOFOLLOW_LINKS)
+      .asInstanceOf[Int].toLong
+    if (!Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS) || owner != uid)
+      throw new IllegalStateException(s"cache root $dir is not a directory " +
+        s"owned by uid $uid (owner: uid $owner); set GRAFT_ANN_CACHE_DIR " +
+        "to a private directory")
+    Files.setPosixFilePermissions(dir, mode)
+    dir.toString
+  }
 
   private[graft] def cachedIndexDir(dir: String, kind: String): String = {
     // full path (sanitized) PLUS a digest of the raw path: readable, and

@@ -121,6 +121,32 @@ class AnnIndexSpec extends SparkTestBase {
       Ann.ivfTopK(spark, dir).collect().map(_.toSeq).toSet)
   }
 
+  test("default cache root is a per-user directory with mode 0700") {
+    import java.nio.file.{Files, LinkOption, Paths}
+    import java.nio.file.attribute.PosixFilePermissions.{fromString, toString => modeOf}
+    val user = System.getProperty("user.name")
+    val root = Paths.get(Ann.defaultCacheRoot)
+    assert(root == Paths.get(System.getProperty("java.io.tmpdir"), s"graft-$user"))
+    assert(Files.isDirectory(root, LinkOption.NOFOLLOW_LINKS))
+    assert(Files.getAttribute(root, "unix:uid", LinkOption.NOFOLLOW_LINKS) ==
+      new com.sun.security.auth.module.UnixSystem().getUid.toInt)
+    assert(modeOf(Files.getPosixFilePermissions(root)) == "rwx------")
+
+    val parent = Files.createTempDirectory("cache_root_mode")
+    // created fresh at 0700; an own directory left wider is tightened
+    val fresh = parent.resolve("fresh")
+    Ann.privateDir(fresh)
+    assert(modeOf(Files.getPosixFilePermissions(fresh)) == "rwx------")
+    val wide = Files.createDirectory(parent.resolve("wide"))
+    Files.setPosixFilePermissions(wide, fromString("rwxrwxrwx"))
+    Ann.privateDir(wide)
+    assert(modeOf(Files.getPosixFilePermissions(wide)) == "rwx------")
+    // a symlink planted at the path is refused, not followed
+    val target = Files.createDirectory(parent.resolve("target"))
+    val link = Files.createSymbolicLink(parent.resolve("link"), target)
+    intercept[IllegalStateException](Ann.privateDir(link))
+  }
+
   test("two source dirs never alias one cache entry") {
     val a = stageEmbeddings(); val b = stageEmbeddings()
     assert(Ann.cachedIndexDir(a, "pq") != Ann.cachedIndexDir(b, "pq"))

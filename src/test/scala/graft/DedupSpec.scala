@@ -200,6 +200,29 @@ class DedupSpec extends SparkTestBase {
     assert(routed.collect().map(_.toSeq).toSeq == inline, "fallback is bit-identical")
   }
 
+  test("a default cache root owned by another user is refused and the entries serve inline") {
+    import java.nio.file.Files
+    // another local user got to the per-user path first
+    val foreign = Files.createTempDirectory("foreign_root")
+    val otherUid = new com.sun.security.auth.module.UnixSystem().getUid.toInt + 4242
+    assume(scala.util.Try(Files.setAttribute(foreign, "unix:uid", otherUid)).isSuccess,
+      "changing a directory's owner needs a privileged test user")
+    try {
+      intercept[IllegalStateException](Ann.privateDir(foreign))
+      // the refusal is read inside the usability check, not thrown past it
+      val usable = Dedup.layoutRootUsable(
+        new java.io.File(Ann.privateDir(foreign), "graft-ann-index"))
+      assert(!usable, "a refused root must count as unusable")
+      val routed = Dedup.serveBucketedOrInline(spark, "spec-foreign", usable)(
+        sys.error("bucketed path must not run"))(
+        Dedup.lshJaccardInline(spark, sfDir))
+      assert(routed.collect().map(_.toSeq).toSeq ==
+        Dedup.lshJaccardInline(spark, sfDir).collect().map(_.toSeq).toSeq)
+      assert(Option(foreign.toFile.list()).exists(_.isEmpty),
+        "nothing is written into the foreign root")
+    } finally Files.delete(foreign)
+  }
+
   test("inline fallback stays result-identical under the production posture") {
     // r12 VERDICT item 7: the unwritable-root fallback serves the INLINE
     // plans, and the r10 inline hazards lived exactly under the 100-TB

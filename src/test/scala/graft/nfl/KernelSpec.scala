@@ -156,6 +156,38 @@ class KernelSpec extends SparkTestBase {
     assert(out.proj.isEmpty)
   }
 
+  test("bit-exact pin: every output field of six varied frames") {
+    // J, ball position and true-pass indices vary per frame; the xyac
+    // scorer depends on its features, so endpoints differ per cell
+    val xyac: Array[Double] => Double =
+      fs => 3.0 + 0.11 * fs(0) - 0.07 * fs(1) + 0.9 * fs(3) - 0.2 * fs(4)
+    val epa = Array.tabulate(120)(i => math.sin(i / 17.0) + i / 40.0)
+    def team(n: Int, off: Boolean, x0: Double, seed: Int) = Array.tabulate(n) { i =>
+      val r = new scala.util.Random(seed * 31 + i)
+      Player(seed * 100L + i + (if (off) 50 else 0), s"P$seed-$i", off,
+        x0 + r.nextDouble() * 20, 3 + r.nextDouble() * 47,
+        r.nextGaussian() * 3, r.nextGaussian() * 3,
+        r.nextGaussian(), r.nextGaussian())
+    }
+    val frames = Seq(
+      // (offense, defense, ball x, ball y, true cell, true T index)
+      (1, 1, 30.0, 26.0, -1, -1),
+      (3, 4, 42.5, 12.0, 20 * Nx + 55, 9),
+      (5, 6, 25.0, 40.0, -1, -1),
+      (4, 7, 61.0, 30.5, 33 * Nx + 78, 24),
+      (5, 5, 88.0, 20.0, 10 * Nx + 97, 39),
+      (2, 3, 12.0, 50.0, 45 * Nx + 20, 0)
+    ).zipWithIndex.map { case ((nOff, nDef, bx, by, tf, tt), s) =>
+      FrameInput(7L, 40L + s, 30 + s, 14 + s, bx, by,
+        team(nOff, off = true, bx + 2, s) ++ team(nDef, off = false, bx + 4, s + 9),
+        tf, tt)
+    }
+    val k = kernel(xyac)
+    val digest = KernelSpec.digest(frames.map(k.compute(_, epa, -0.35)))
+    assert(digest == "4bb4110a1cec67350344491fbc0a4d5f73954bb4589c6c5780f38de4969b3c4b",
+      s"kernel output digest moved: $digest")
+  }
+
   test("spark job end-to-end over toy play") {
     val norm = Normalize(ToyData.tracking(spark), ToyData.games(spark),
       ToyData.plays(spark))
@@ -172,5 +204,23 @@ class KernelSpec extends SparkTestBase {
       assert(r.players.nonEmpty)
       assert(!r.pass.eppa1Tot.isNaN)
     }
+  }
+}
+
+object KernelSpec {
+  /** SHA-256 over every field of `outs`, doubles by their raw bits. */
+  def digest(outs: Seq[FrameOutput]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(v: Any): Unit = v match {
+      case d: Double => buf.clear(); md.update(buf.putLong(java.lang.Double.doubleToLongBits(d)).array())
+      case l: Long => buf.clear(); md.update(buf.putLong(l).array())
+      case i: Int => buf.clear(); md.update(buf.putLong(i.toLong).array())
+      case s: String => md.update(s.getBytes("UTF-8"))
+      case p: Product => p.productIterator.foreach(put)
+      case a: Array[_] => put(a.length); a.foreach(put)
+    }
+    outs.foreach(put)
+    md.digest().map("%02x".format(_)).mkString
   }
 }
