@@ -2,36 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Two-class calibration classifier (r14 VERDICT finding 2): a query is
-    * SHUFFLE-CLASS when it writes more shuffle bytes than it reads input
-    * bytes — exchange/sort/join dominated — and SCAN-CLASS otherwise.
-    * The split exists because machine-state contention taxes the two
-    * shapes differently (CALIB_r14: a 2.18× busy-spin state shift read
-    * as 14.3% through the single scan+agg probe, and the residual was
-    * exactly the shuffle/GC-heavy queries inflating more than the
-    * probe). Normalizing each class by a probe of its own shape cuts
-    * that residual; tools/probe_calibration.scala measures by how much.
-    * The rule must be a property of the PLAN, not the session: task
-    * input/shuffle bytes are bit-identical across machine states
-    * (SCALE_PROBE_INREGIME_r14), so the classification is stable — with
-    * one measured caveat (r15 ADVICE): a query at the boundary can still
-    * flip when CACHED reads deflate input_bytes (the shingle-persisting
-    * dedup family), which is why the bench no longer applies this rule
-    * per session. Membership is PINNED ([[BenchCalib.pinned]], derived
-    * once from an idle run at sf0.1 with the byte pair committed beside
-    * each class); this predicate remains the derivation rule and the
-    * flip DETECTOR — a session whose measured bytes disagree with the
-    * pinned class is reported in `class_flips`, not reclassified. */
-  def shuffleHeavy(metrics: Map[String, Long]): Boolean =
-    metrics.getOrElse("shuffle_write_bytes", 0L) >
-      metrics.getOrElse("input_bytes", 0L)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus.toInt, appName = "graft-bench")
-    val listener = new graft.scale.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
 
     // Free any cached/persisted intermediates a query left behind (the
     // dedup family persists its shingle table) so run 2 measures the same
@@ -47,25 +21,27 @@ object Bench {
       Thread.sleep(50)
     }
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Map[String, Double], Map[String, Long]) = {
+    // A FAILED run's wall is NaN, never its elapsed-to-failure time: a
+    // query that starts throwing must not make the total faster. Failed
+    // runs drop out of the per-query median and name the query in the
+    // published `failed` list.
+    def runOnce(name: String,
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Map[String, Double]) = {
       graft.ops.Legs.drain() // clear any leftover from a failed prior run
-      listener.reset()
       val t0 = System.nanoTime()
       // toRdd.count() executes the FULL physical plan (a plain .count()
       // lets the optimizer drop final sorts and projections)
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // task metrics settle AFTER the wall is taken (the bus drain is not
-      // measured); they exist to classify the query for the two-class
-      // normalized total, never to time it
-      graft.scale.MetricsListener.drainBus(spark)
-      val metrics = listener.snapshot
+      val dt =
+        try {
+          fn(spark, sfDir).queryExecution.toRdd.count()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Double.NaN
+        }
       clearPersisted()
-      (dt, graft.ops.Legs.drain(), metrics)
+      (dt, graft.ops.Legs.drain())
     }
 
     // JVM/codegen warm-up: one untimed scan+agg so the first timed query
@@ -83,8 +59,9 @@ object Bench {
     // run; the probes adopted the same statistic in r12 and reproduce
     // across independent runs. Each run also drains any per-leg wall
     // times the lifecycle queries recorded (graft.ops.Legs); the
-    // published legs are the MEDIAN run's (same statistic as the total,
-    // so legs + lazy-serve remainder stay internally consistent).
+    // published legs are the middle successful run's (same statistic as
+    // the total, so legs + lazy-serve remainder stay internally
+    // consistent).
     //
     // The three repeats run as INTERLEAVED WHOLE-SUITE PASSES, not
     // back-to-back: a transient machine stall (page-cache eviction,
@@ -98,26 +75,18 @@ object Bench {
     // clearPersisted() runs after every execution), and pass 1 doubles
     // as the global warm-up the per-query cold run used to absorb.
     //
-    // Machine-state calibration probes (r13 item 1, widened r15 per the
-    // r14 verdict's finding 2): raw totals are comparable only WITHIN a
-    // session — the same tree measured 14% apart across sessions — so
-    // the bench publishes state-normalized statistics. TWO fixed probes
-    // run once per pass:
+    // Machine-state probes, published as SESSION DIAGNOSTICS only: raw
+    // totals are comparable only WITHIN a session (the same tree measured
+    // 14% apart across sessions), and no fixed probe-normalized statistic
+    // held across sessions (CALIB_r16: ±20%). Two fixed probes run at the
+    // start and end of every pass, so a reader can see the machine state
+    // a total was measured in:
     //  - SCAN probe: scan + hash-agg + sort over lineitem (the suite's
-    //    dominant cost shape) → `calib_sec`; `total_per_calib` =
-    //    total / calib_sec is the r14 single-class statistic (CALIB_r14:
-    //    a 2.18× busy-spin raw shift reads as 14.3% through it).
+    //    dominant cost shape) → `calib_sec`;
     //  - SHUFFLE probe: a two-sided repartition sort-merge self-join of
     //    lineitem on l_orderkey + aggregation → `calib_shuffle_sec`.
-    //    Contention taxes exchange/sort/join harder than scans (the
-    //    measured CALIB_r14 residual), so shuffle-class queries (see
-    //    [[shuffleHeavy]]) normalize by this probe instead:
-    //    `total_per_calib2` = scan_class_sec / calib_sec +
-    //    shuffle_class_sec / calib_shuffle_sec. CALIB_r15 re-runs the
-    //    busy-spin experiment and reports both residuals.
     // A FAILED probe publishes `calib_error` and a null wall instead of
-    // its elapsed-to-failure time (r14 ADVICE: a near-zero denominator
-    // would make the trusted statistic silently garbage).
+    // its elapsed-to-failure time.
     var calibError: Option[String] = None
     def timedProbe(label: String)(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -151,7 +120,7 @@ object Bench {
         .select(col("l_orderkey"), col("l_suppkey"))
       // both sides repartitioned + merge-hinted: the probe must pay two
       // exchanges, two sorts, and a fan-out join even if stats would
-      // broadcast one side — that is the shape being calibrated
+      // broadcast one side — that is the shape being probed
       l.repartition(64, col("l_orderkey")).hint("merge")
         .join(r.repartition(64, col("l_orderkey")), "l_orderkey")
         .groupBy(pmod(col("l_partkey"), lit(97)).as("g"))
@@ -169,55 +138,39 @@ object Bench {
       else (ok(ok.length / 2 - 1) + ok(ok.length / 2)) / 2.0
     }
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-    // TWO probe walls per pass (start + end, 6 walls each probe): the r15
-    // builder/driver session pair showed the 3-wall probe medians moving
-    // OPPOSITE to the suite at near-idle states (0.316 vs 0.362 s while
-    // the suite went the other way), amplifying a 9% raw gap into ~21%
-    // normalized — short-wall sampling noise, so double the sample at a
-    // cost of ~5 s per run
+    // TWO probe walls per pass (start + end, 6 walls each probe): 3-wall
+    // probe medians moved opposite to the suite at near-idle states
+    // (short-wall sampling noise), so the sample is doubled at a cost of
+    // ~5 s per run
     val calibWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val calibShufWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passes = Vector.fill(3) {
       calibWalls += calibScanOnce()
       calibShufWalls += calibShuffleOnce()
-      val pass = qs.map { case (_, fn) => runOnce(fn) }
+      val pass = qs.map { case (name, fn) => runOnce(name, fn) }
       calibWalls += calibScanOnce()
       calibShufWalls += calibShuffleOnce()
       pass
     }
     val calib = med(calibWalls.toSeq)
     val calibShuf = med(calibShufWalls.toSeq)
+    // per query: the median over SUCCESSFUL runs (NaN when none
+    // succeeded, published as null) and the legs of the middle
+    // successful run
     val runs = qs.zipWithIndex.map { case ((name, _), i) =>
-      name -> passes.map(_(i)).sortBy(_._1).apply(1)
+      val ok = passes.map(_(i)).filterNot(_._1.isNaN).sortBy(_._1)
+      val legs = if (ok.isEmpty) Map.empty[String, Double]
+                 else ok((ok.length - 1) / 2)._2
+      (name, med(ok.map(_._1)), legs, ok.length < passes.length)
     }
-    val results = runs.map { case (n, (dt, _, _)) => n -> dt }.toMap
-    // class membership is PINNED (BenchCalib, r15 VERDICT finding 2): the
-    // per-session predicate let boundary queries flip populations between
-    // sessions (118 vs 117 across the r15 artifacts), making the
-    // two-class statistic subtly non-comparable. The session's measured
-    // bytes still run the predicate — as a FLIP DETECTOR: disagreements
-    // are published (with the byte pairs) instead of moving the statistic.
-    // A query not in the pinned file (should be impossible — BenchCalibSpec
-    // fails first) falls back to the session measurement and is reported.
-    val sessionClass = runs.map { case (n, (_, _, m)) =>
-      n -> shuffleHeavy(m) }.toMap
-    val classes = runs.map { case (n, _) =>
-      n -> BenchCalib.pinned.get(n).map(_.shuffle).getOrElse(sessionClass(n))
-    }.toMap
-    val unpinned = runs.map(_._1).filterNot(BenchCalib.pinned.contains).sorted
-    val flips = runs.collect {
-      case (n, (_, _, m)) if BenchCalib.pinned.contains(n) &&
-          BenchCalib.pinned(n).shuffle != sessionClass(n) =>
-        (n, m.getOrElse("shuffle_write_bytes", 0L),
-          m.getOrElse("input_bytes", 0L))
-    }.sortBy(_._1)
+    val failed = runs.collect { case (n, _, _, true) => n }
     // serve_overhead legs (the per-call lock/DDL/sweep segment of the
     // bucketed serve path) are recorded by EVERY query that serves a
     // layout; publishing them under the bare layout key would collide
     // across queries. Keep them for the bucketed attach cells — the
     // attribution target (r13 VERDICT item 3) — prefixed by the query,
     // and drop the rest (their per-cell split lives in SCALE's legs).
-    val legs: Map[String, Double] = runs.flatMap { case (qname, (_, ls, _)) =>
+    val legs: Map[String, Double] = runs.flatMap { case (qname, _, ls, _) =>
       ls.flatMap { case (k, v) =>
         if (!k.endsWith(".serve_overhead")) Some(k -> v)
         else if (qname.contains("_bucketed")) Some(s"$qname.$k" -> v)
@@ -234,9 +187,7 @@ object Bench {
       if (v.isNaN || v.isInfinite) "null"
       else BigDecimal(v)
         .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val shufClassSec = results.collect { case (n, dt) if classes(n) => dt }.sum
-    val scanClassSec = total - shufClassSec
+    val total = runs.map(_._2).filterNot(_.isNaN).sum
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     // JSON string escaping incl. control chars (r15 ADVICE: Spark
     // exception messages often carry newlines inside the first 160 chars,
@@ -249,46 +200,16 @@ object Bench {
       case c => c.toString
     } + "\""
     val calibErrJson = calibError.fold("")(e => s""""calib_error":${jstr(e)},""")
-    // headline cross-session comparators (r15 VERDICT finding 1): the
-    // per-class numerator over its own probe, plus the DAMPENED
-    // adjusted-seconds form — CALIB_r15 measured the scan probe
-    // over-reacting to contention (probe 2.37× vs class 1.86×) and the
-    // shuffle probe under-reacting (1.77× vs 1.91×), so the raw quotients
-    // overshoot; probe_shift^lambda with the BenchCalib pre-registered
-    // exponents is the measured correction (derivation in BenchCalib's
-    // scaladoc; CALIB_r16 validates on fresh induced-state sessions)
-    val scanShift = calib / BenchCalib.RefScanWall
-    val shufShift = calibShuf / BenchCalib.RefShuffleWall
-    val scanAdj = scanClassSec / math.pow(scanShift, BenchCalib.LambdaScan)
-    val shufAdj = shufClassSec / math.pow(shufShift, BenchCalib.LambdaShuffle)
     val calibJson = s""""calib_sec":${fmt(calib, 3)},"calib_walls":[${
       calibWalls.map(fmt(_, 3)).mkString(",")
     }],"calib_shuffle_sec":${fmt(calibShuf, 3)},"calib_shuffle_walls":[${
       calibShufWalls.map(fmt(_, 3)).mkString(",")
-    }],$calibErrJson"total_sec_adj":${fmt(scanAdj + shufAdj, 1)
-    },"scan_class_sec_adj":${fmt(scanAdj, 1)
-    },"shuffle_class_sec_adj":${fmt(shufAdj, 1)
-    },"scan_class_per_calib":${fmt(scanClassSec / calib, 1)
-    },"shuffle_class_per_calib":${fmt(shufClassSec / calibShuf, 1)
-    },"scan_shift":${fmt(scanShift, 3)},"shuffle_shift":${fmt(shufShift, 3)
-    },"total_per_calib":${
-      fmt(total / calib, 1)},"total_per_calib2":${
-      fmt(scanClassSec / calib + shufClassSec / calibShuf, 1)
-    },"scan_class_sec":${fmt(scanClassSec, 1)},"shuffle_class_sec":${
-      fmt(shufClassSec, 1)},"n_shuffle_class":${classes.count(_._2)
-    },"n_class_flips":${flips.length},"""
-    val shufClassJson = classes.toSeq.filter(_._2).map(_._1).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // flips carry the session byte pair so a boundary disagreement with
-    // the pinned class is diagnosable from the artifact (r15 ADVICE)
-    val flipsJson = flips.map { case (n, sw, ib) =>
-      s"""{"query":${jstr(n)},"shuffle_write_bytes":$sw,"input_bytes":$ib,"pinned":"${
-        if (BenchCalib.pinned(n).shuffle) "shuffle" else "scan"}"}"""
-    }.mkString("[", ",", "]")
-    val unpinnedJson = unpinned.map(jstr).mkString("[", ",", "]")
+    }],$calibErrJson"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec",$calibJson"queries":${
-      results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    },"shuffle_class":$shufClassJson,"class_flips":$flipsJson,"class_unpinned":$unpinnedJson,"legs":${
+      runs.map { case (k, v, _, _) =>
+        jstr(k) + ":" + (if (v.isNaN) "null" else v.toString)
+      }.mkString("{", ",", "}")
+    },"failed":${failed.map(jstr).mkString("[", ",", "]")},"legs":${
       legs.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fmt(v, 3) }
         .mkString("{", ",", "}")
     },"sf":"$sfDir"}"""
@@ -302,23 +223,23 @@ object Bench {
     val legsShort = legs.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v, 2) }.mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
-      s""""n_queries":${results.size},$calibJson"file":"$outFile","md5":"$md5",""" +
+      s""""n_queries":${runs.size},"n_failed":${failed.size},""" +
+      s"""$calibJson"file":"$outFile","md5":"$md5",""" +
       s""""legs":$legsShort,"sf":"$sfDir"}"""
     spark.stop()
-    // r18 (VERDICT r17 item 1): the per-query median map now rides stdout
-    // too — the FULL line (identical bytes to BENCH.json, same md5) is
-    // printed FIRST, and the short line stays the process's FINAL line.
-    // The contract's "queries" map cannot live on the parsed line itself:
-    // the driver keeps the last ~2 KB of stdout and parses the FINAL line
-    // as JSON (build.sbt comment; every BENCH_r07..r17 driver artifact
-    // stores exactly 2000 tail bytes), while the 184 query names alone are
-    // ~3.4 KB — the r07/r08 map-bearing line came back "parsed": null and
-    // lost even the total. Printing full-then-short is additions-only: a
-    // final-line parser sees exactly the r17 line; any full-stdout parser
-    // finds the complete per-query map one line up.
+    // The FULL line (identical bytes to BENCH.json, same md5) is printed
+    // FIRST, and the short line stays the process's FINAL line. The
+    // "queries" map cannot live on the parsed line itself: the driver
+    // keeps the last ~2 KB of stdout and parses the FINAL line as JSON
+    // (build.sbt comment), while the 184 query names alone are ~3.4 KB.
     println(full)
     // print LAST, after spark.stop(), so no executor-shutdown log lands
     // between the JSON and the end of this JVM's output
     println(json)
+    // a failed query fails the process, after both lines are out
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

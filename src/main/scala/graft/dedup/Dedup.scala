@@ -557,48 +557,35 @@ object Dedup {
   private[graft] def bucketedBuildsFor(dir: String, kind: String): Long =
     bucketedBuildsByEntry.getOrElse(layoutEntry(dir, kind).getName, 0L)
 
-  /** Governance-sweep gate (r13 VERDICT item 6): the dead-process-table
-    * and orphaned-entry sweeps used to run on EVERY [[bucketedPair]]
-    * call. Both are listdir-cheap at today's cache sizes, but they are
-    * O(cache entries) per query — at a shared cache root with thousands
-    * of entries that's real per-query money at 100 TB, for hygiene that
-    * only needs to happen occasionally. Gate: the FIRST call in a
-    * process always sweeps (fresh processes still reap dead owners'
-    * leftovers and takedown orphans immediately), later calls sweep at
-    * most once per [[SweepIntervalNanos]]. Takedown CORRECTNESS never
-    * rode the sweeps — deleteKeys reaches layouts through the
-    * registered derived-store hooks synchronously; the sweeps are
-    * backstops for processes that died without running their hooks. */
+  /** Governance-sweep gate (r13 VERDICT item 6): the orphaned-entry
+    * sweep used to run on EVERY [[bucketedPair]] call. It is
+    * listdir-cheap at today's cache sizes, but it is O(cache entries)
+    * per query — at a shared cache root with thousands of entries that's
+    * real per-query money at 100 TB, for hygiene that only needs to
+    * happen occasionally. Gate: the FIRST call in a process always
+    * sweeps (fresh processes still reap takedown orphans immediately),
+    * later calls sweep at most once per [[SweepIntervalNanos]]. Takedown
+    * CORRECTNESS never rode the sweep — deleteKeys reaches layouts
+    * through the registered derived-store hooks synchronously; the sweep
+    * is a backstop for processes that died without running their hooks. */
   private[graft] val SweepIntervalNanos: Long = 60L * 1000L * 1000L * 1000L
   private val lastSweepAt = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Spec observability: how many times the gated sweep actually ran. */
   private[graft] val sweepRuns = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Spec hook: model a fresh process (next serve call sweeps). */
   private[graft] def resetSweepGate(): Unit = lastSweepAt.set(0L)
-  private def sweepIfDue(spark: SparkSession): Unit = {
+  private def sweepIfDue(): Unit = {
     val now = System.nanoTime()
     val prev = lastSweepAt.get()
     if ((prev == 0L || now - prev >= SweepIntervalNanos) &&
         lastSweepAt.compareAndSet(prev, now)) {
       sweepRuns.incrementAndGet()
-      // the sweeps are HYGIENE BACKSTOPS that never carry correctness
-      // (takedown reaches layouts synchronously via the registered
-      // hooks, and Store.deleteKeys reaps dead owners itself) — so a
-      // sweep failure must neither fail the serve call it happened to
-      // ride on nor, having advanced the gate above, silently skip the
-      // OTHER sweep for the full interval (r14 ADVICE)
+      // governance sweep: cache entries whose corpus was DELETED outright
+      // (retired dataset, cleaned temp dir) are otherwise immortal — no
+      // later probe ever fingerprints them. A HYGIENE BACKSTOP that never
+      // carries correctness, so a failure must not fail the serve call it
+      // happened to ride on
       try {
-        // migration sweep: pre-r12 processes left pid-suffixed bucketed
-        // copies in the shared warehouse; reap dead owners' leftovers
-        graft.sources.Store.sweepDeadProcessTables(spark)
-        ()
-      } catch { case e: Throwable =>
-        System.err.println(s"[dedup] dead-process sweep failed (non-fatal): ${e.getMessage}")
-      }
-      try {
-        // governance sweep: cache entries whose corpus was DELETED outright
-        // (retired dataset, cleaned temp dir) are otherwise immortal — no
-        // later probe ever fingerprints them
         graft.similarity.Ann.sweepOrphanedEntries()
         ()
       } catch { case e: Throwable =>
@@ -725,7 +712,7 @@ object Dedup {
     // bucketed query at any scale; it is measured, not inferred.
     val callT0 = System.nanoTime()
     var buildSec = 0.0
-    sweepIfDue(spark)
+    sweepIfDue()
     val nb = if (nBuckets > 0) nBuckets else bucketsForCorpus(spark, dir)
     val entry = layoutEntry(dir, kind)
     val (setsName, candsName) = bucketedTableNames(dir, kind)

@@ -69,31 +69,23 @@ object SeasonBench {
 
     // task-metric ceilings for the timed run: the per-task peak execution
     // memory is the number that decides executor sizing at season scale
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      }
-    })
+    val listener = new graft.scale.MetricsListener
+    spark.sparkContext.addSparkListener(listener)
 
     val t0 = System.nanoTime()
     val norm = Normalize(tracking, games, plays)
     val frames = SeasonJob.run(norm, preState, s"$outDir/run")
     val wall = (System.nanoTime() - t0) / 1e9
+    graft.scale.MetricsListener.drainBus(spark)
+    val metrics = listener.snapshot
 
     val json =
       s"""{"metric":"season_wall","value":${f"$wall%.1f"},"unit":"sec",""" +
       s""""raw_rows":$rawRows,"plays":$nPlays,"weeks":17,""" +
       s""""frames":$frames,"frames_per_sec":${f"${frames / wall}%.2f"},""" +
       s""""sec_per_play":${f"${wall / nPlays}%.3f"},"cpus":$cpus,""" +
-      s""""peak_task_mem_bytes":${peakMem.get()},""" +
-      s""""shuffle_write_bytes":${shuffleWrite.get()},""" +
+      s""""peak_task_mem_bytes":${metrics("peak_task_memory")},""" +
+      s""""shuffle_write_bytes":${metrics("shuffle_write_bytes")},""" +
       s""""reference_sec_per_play":"7-26 (CUDA, play_eppa_gpu.py:46-47)"}"""
     println(json)
     val w = new java.io.PrintWriter(outFile)

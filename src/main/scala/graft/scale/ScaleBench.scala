@@ -1,16 +1,24 @@
 package graft.scale
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.concurrent.TrieMap
 
 /** Per-task metric accumulation across whole queries: wall time alone
   * can't distinguish "the algorithm stayed linear" from "the box got
   * lucky"; shuffle bytes/records and input bytes are the scale-invariant
-  * evidence. Registered once, snapshotted around each measured query. */
+  * evidence. Registered once, snapshotted around each measured query.
+  *
+  * It also keeps peak task memory PER STAGE (r14 VERDICT item 5): a
+  * whole-run `peak_task_memory` is a single max that cannot say WHERE
+  * growth lives, so [[topStages]] publishes the top stages by peak,
+  * labeled by the plan segments they run. */
 final class MetricsListener extends SparkListener {
   val shuffleReadB, shuffleWriteB, shuffleWriteRec, inputB, spillB, peakMem,
     runTimeMs, cpuTimeNs, gcTimeMs = new AtomicLong(0)
+  private val stagePeaks = TrieMap.empty[Int, Long]
+  private val stageLabels = TrieMap.empty[Int, String]
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
     if (m != null) {
@@ -20,6 +28,8 @@ final class MetricsListener extends SparkListener {
       inputB.addAndGet(m.inputMetrics.bytesRead)
       spillB.addAndGet(m.diskBytesSpilled)
       peakMem.updateAndGet(p => math.max(p, m.peakExecutionMemory))
+      stagePeaks.updateWith(t.stageId)(p =>
+        Some(math.max(p.getOrElse(0L), m.peakExecutionMemory)))
       // wall-attribution trio (r11 VERDICT item 2): summed task run time
       // vs cpu time vs GC time separates "the plan did more work" from
       // "the JVM was digesting another cell's garbage" — the ×50
@@ -28,6 +38,18 @@ final class MetricsListener extends SparkListener {
       cpuTimeNs.addAndGet(m.executorCpuTime)
       gcTimeMs.addAndGet(m.jvmGCTime)
     }
+  }
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+    // SQL jobs are submitted from a pooled execution thread, so the
+    // stage's CALLSITE is a useless internal frame; the RDD OPERATION
+    // SCOPES (Exchange, Sort, WholeStageCodegen, MapGroups, ...) are the
+    // plan segments a reader can attribute memory to
+    val ops = s.stageInfo.rddInfos
+      .flatMap(r => Option(r.scope)).flatten.map(_.name)
+      .distinct.take(8)
+    val label =
+      if (ops.nonEmpty) ops.mkString("+") else s.stageInfo.name
+    stageLabels.update(s.stageInfo.stageId, label)
   }
   def snapshot: Map[String, Long] = Map(
     "shuffle_read_bytes" -> shuffleReadB.get,
@@ -39,9 +61,17 @@ final class MetricsListener extends SparkListener {
     "task_run_ms" -> runTimeMs.get,
     "task_cpu_ms" -> cpuTimeNs.get / 1000000L,
     "task_gc_ms" -> gcTimeMs.get)
-  def reset(): Unit =
+  /** Top-k stages by peak task memory, as (stage label, peak bytes). */
+  def topStages(k: Int): Seq[(String, Long)] =
+    stagePeaks.toSeq.sortBy(-_._2).take(k).map { case (id, p) =>
+      (stageLabels.getOrElse(id, s"stage-$id"), p)
+    }
+  def reset(): Unit = {
     Seq(shuffleReadB, shuffleWriteB, shuffleWriteRec, inputB, spillB, peakMem,
       runTimeMs, cpuTimeNs, gcTimeMs).foreach(_.set(0))
+    stagePeaks.clear()
+    stageLabels.clear()
+  }
 }
 
 object MetricsListener {
@@ -49,8 +79,8 @@ object MetricsListener {
     * of the query that just ran. `listenerBus` is `private[spark]` at the
     * source level but public in bytecode — reflection reaches it; if the
     * internals ever move, a half-second settle keeps the numbers sane.
-    * Shared by every main that snapshots task metrics (Bench for the
-    * two-class calibration split, ScaleBench/SeasonScaleBench for cells). */
+    * Shared by every main that snapshots task metrics (ScaleBench,
+    * SeasonScaleBench and SeasonBench). */
   def drainBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext

@@ -1,46 +1,6 @@
 package graft.scale
 
 import graft.nfl.{Normalize, SeasonBench, SeasonJob}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-
-/** Per-STAGE peak task memory (r14 VERDICT item 5): the season cells'
-  * whole-run `peak_task_memory` is a single max that cannot say WHERE
-  * the ×30 growth lives — the kernel's per-play state (claimed constant)
-  * or the AQE-coalesced sort/agg stages around it (claimed to carry the
-  * growth). Tracking the max per stage and publishing the top stages BY
-  * NAME turns that attribution into a measurement: the stage names carry
-  * the callsite of the action/exchange they serve, so a reader sees
-  * which plan segment owns the peak at each scale. */
-final class StagePeakListener extends SparkListener {
-  private val peaks = scala.collection.concurrent.TrieMap.empty[Int, Long]
-  private val names = scala.collection.concurrent.TrieMap.empty[Int, String]
-  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-    val m = t.taskMetrics
-    if (m != null) {
-      peaks.updateWith(t.stageId)(p =>
-        Some(math.max(p.getOrElse(0L), m.peakExecutionMemory)))
-      ()
-    }
-  }
-  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-    // SQL jobs are submitted from a pooled execution thread, so the
-    // stage's CALLSITE is a useless internal frame; the RDD OPERATION
-    // SCOPES (Exchange, Sort, WholeStageCodegen, MapGroups, ...) are the
-    // plan segments a reader can attribute memory to
-    val ops = s.stageInfo.rddInfos
-      .flatMap(r => Option(r.scope)).flatten.map(_.name)
-      .distinct.take(8)
-    val label =
-      if (ops.nonEmpty) ops.mkString("+") else s.stageInfo.name
-    names.update(s.stageInfo.stageId, label); ()
-  }
-  /** Top-k stages by peak task memory, as (stage name, peak bytes). */
-  def top(k: Int): Seq[(String, Long)] =
-    peaks.toSeq.sortBy(-_._2).take(k).map { case (id, p) =>
-      (names.getOrElse(id, s"stage-$id"), p)
-    }
-  def reset(): Unit = { peaks.clear(); names.clear() }
-}
 
 /** Season-kernel scale rehearsal (round-7 verdict item 7): SCALE_r7
   * measured the §2.13 families at ×10/×50 but the NFL frame-EPPA kernel
@@ -103,8 +63,6 @@ object SeasonScaleBench {
       } else graft.GraftSession.local(cpus, appName = "graft-season-scale")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
-    val stagePeaks = new StagePeakListener
-    spark.sparkContext.addSparkListener(stagePeaks)
 
     // warm-up: one-copy season primes codegen + model broadcast
     val (t1, g1, p1, s1) = SeasonBench.replicate(spark, 1)
@@ -123,13 +81,12 @@ object SeasonScaleBench {
       spark.catalog.clearCache()
       System.gc()
       listener.reset()
-      stagePeaks.reset()
       val t0 = System.nanoTime()
       val frames = SeasonJob.run(Normalize(tracking, games, plays), preState, outDir)
       val sec = (System.nanoTime() - t0) / 1e9
       MetricsListener.drainBus(spark)
       val cell = Cell(label, copies, nPlays, rawRows, frames, sec,
-        listener.snapshot, stagePeaks.top(6))
+        listener.snapshot, listener.topStages(6))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outDir))
       System.err.println(f"[season-scale] $label copies=$copies%-4d plays=$nPlays%-6d " +
         f"${sec}%8.1f s  ${frames / sec}%6.2f frames/s  " +

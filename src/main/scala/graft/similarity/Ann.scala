@@ -1331,10 +1331,9 @@ object Ann {
       .getOrElse(Array.empty).toSeq.filter(_.isDirectory)
       .flatMap { d =>
         val m = new java.io.File(d, "_scratch")
-        if (m.exists())
-          new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")
-            .trim.toLongOption.map(d -> _)
-        else legacyScratchPid(d) // pre-marker upgrade generation (below)
+        if (!m.exists()) None
+        else new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")
+          .trim.toLongOption.map(d -> _)
       }
       .filter { case (_, p) =>
         p != pid && { val h = ProcessHandle.of(p); !(h.isPresent && h.get.isAlive) }
@@ -1343,23 +1342,6 @@ object Ann {
     new java.io.File(cachedIndexDir(dir, s"$kind-p$pid")).getPath
   }
 
-  /** One-time upgrade path for the marker-file reaper: scratch dirs left
-    * by pre-marker processes (which never wrote `_scratch`) would
-    * otherwise be permanently unreapable orphans — the unbounded-growth
-    * leak the reaper exists to prevent, frozen in for one generation.
-    * A markerless dir is treated as legacy scratch ONLY under all three
-    * guards: (a) it carries no completion marker of any cache family
-    * (`_built` for ensureFresh entries, `_vpin` for version-pinned ones,
-    * `_source` for the versioned-corpus bootstrap root) — a LEGITIMATE
-    * cached index always has one, so the corpus-path false-positive the
-    * r10 name-regex reaper had (`/data/set-p2-v1` embedding a pid-shaped
-    * fragment) is excluded; (b) its name matches the old scratch shape
-    * `<kind>-p<pid>-…` from the name START; (c) that pid is dead (checked
-    * by the shared liveness filter above). A torn non-scratch entry
-    * (crash between install and marker — impossible by construction, the
-    * marker lands before the rename) has no marker either, but such an
-    * entry is unreadable garbage the next ensureFresh rebuilds anyway, so
-    * deleting it is a no-op semantically. */
   /** Reap cache entries whose SOURCE CORPUS no longer exists (r12).
     *
     * Takedown hooks and data fingerprints govern entries whose corpus
@@ -1410,20 +1392,6 @@ object Ann {
         (path.startsWith("file:") && !path.contains("://"))
       local && !new java.io.File(path.stripPrefix("file:")).exists()
     }
-  }
-
-  private def legacyScratchPid(d: java.io.File): Option[(java.io.File, Long)] = {
-    val hasMarker = Seq("_built", "_vpin", "_source")
-      .exists(m => new java.io.File(d, m).exists())
-    // the kind prefix itself contains hyphens (ngram-inc, selfdedup-store),
-    // so the alternation must admit them or the `-p<pid>-` fragment is
-    // unreachable and legacy orphans stay unreapable forever; non-greedy
-    // so the FIRST pid-shaped fragment wins. The marker-absence guard
-    // above still excludes legitimate cached indexes whose sanitized
-    // corpus path happens to embed a `-p<digits>-` fragment.
-    if (hasMarker) None
-    else "^[A-Za-z0-9-]+?-p(\\d+)-".r.findFirstMatchIn(d.getName)
-      .flatMap(_.group(1).toLongOption).map(d -> _)
   }
 
   /** Wipe-and-recreate a [[scratchDir]] path — called by the owner

@@ -206,56 +206,6 @@ object Store {
   /** Bucketed managed table: hash-clustered and sorted by the join key.
     * Requires a warehouse-backed catalog (default in-memory catalog
     * works locally; external metastore on a cluster). */
-  /** Per-process name for a derived bucketed table: the managed warehouse
-    * is shared across JVMs (bench, verify, and scale runs can overlap on
-    * one box), and [[writeBucketed]] drop-and-recreates — two processes
-    * materializing the same name clobber each other mid-read, the same
-    * race the index scratch dirs had (Ann.scratchDir). The suffix gives
-    * each process its own copy; within a process the name is stable, so
-    * the one-time-write amortization across passes is untouched. */
-  def processTable(name: String): String =
-    s"${name}_p${ProcessHandle.current().pid()}"
-
-  private def deleteDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteDir)
-    f.delete(); ()
-  }
-
-  /** Reap warehouse directories left behind by DEAD processes'
-    * [[processTable]] names. The pid suffix fixes the cross-JVM
-    * drop-and-recreate race but moves the cleanup burden here: the
-    * in-memory catalog dies with its process while the parquet data
-    * stays, so without a sweep every run permanently leaks a bucketed
-    * corpus copy — and a taken-down document's derived rows would
-    * outlive the takedown inside dead-pid tables that no process-local
-    * registry hook can reach. Called from every bucketed-pair
-    * materialization (one listdir — cheap), so any new writer reaps its
-    * predecessors; crash-killed processes are covered because liveness
-    * is probed via ProcessHandle, not lockfiles.
-    *
-    * Scope: ONLY names this framework creates — the `graft_` prefix plus
-    * the [[processTable]] `_p<pid>` suffix. The r10 sweep matched ANY
-    * `_p<digits>$` directory, which would silently destroy a foreign
-    * managed table that merely ends in a pid-shaped number (e.g.
-    * `metrics_p2024`) on every bucketed-pair materialization. */
-  def sweepDeadProcessTables(spark: SparkSession): Seq[String] = {
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    val re = "^graft_.*_p(\\d+)$".r
-    val self = ProcessHandle.current().pid()
-    val victims = Option(wh.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap(d => re.findFirstMatchIn(d.getName).map(m => d -> m.group(1).toLong))
-      .filter { case (_, pid) =>
-        pid != self && {
-          val h = ProcessHandle.of(pid)
-          !(h.isPresent && h.get.isAlive)
-        }
-      }
-    victims.foreach { case (d, _) => deleteDir(d) }
-    victims.map(_._1.getName).sorted
-  }
-
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
                     nBuckets: Int): Unit = {
     val spark = df.sparkSession
@@ -443,7 +393,7 @@ object Store {
     * Returns the number of rows deleted. Idempotent: re-running the
     * same key list deletes 0 and rewrites nothing. */
   def deleteKeys(spark: SparkSession, path: String, keyCol: String,
-                 keys: Seq[Any], partitionCols: Seq[String]): Long = try {
+                 keys: Seq[Any], partitionCols: Seq[String]): Long = {
     val base = spark.read.parquet(path)
     val keyLits = keys.map(lit)
     val touched = base.filter(col(keyCol).isin(keyLits: _*))
@@ -479,21 +429,6 @@ object Store {
     // the next serve rebuilds from the post-delete base
     invalidateDerived(path)
     nDeleted
-  } finally {
-    // reap DEAD owners' pid-suffixed leftovers here too (r14 ADVICE): the
-    // serve-path sweep is gated to once per process per minute, which
-    // could extend on-disk retention of a dead process's derived copies
-    // past the takedown — and takedown is exactly the moment
-    // bytes-on-disk must go. Live processes are reached via their own
-    // registered hooks; this listdir-cheap sweep covers owners that died
-    // without running theirs. In a `finally` (r15 ADVICE) so it runs on
-    // EVERY takedown call — including the idempotent 0-row re-run after a
-    // crash between the rewrite and the sweep, which the early return
-    // used to skip. Hygiene backstop: never fails the takedown.
-    try { sweepDeadProcessTables(spark); () }
-    catch { case e: Throwable =>
-      System.err.println(s"[store] takedown dead-process sweep failed (non-fatal): ${e.getMessage}")
-    }
   }
 
   /** Small-file compaction: rewrite a parquet directory into

@@ -36,41 +36,22 @@ class AnnIndexSpec extends SparkTestBase {
     val lookalike = new java.io.File(parent, "ngram-corpus-p2024-v1-aaaaaa")
     lookalike.mkdirs()
     new java.io.File(lookalike, "_built").createNewFile()
+    // the old scratch NAME shape with a dead pid but no `_scratch` and no
+    // completion marker: nothing marks it as scratch, so it is not ours
+    val oldShape = new java.io.File(parent, "ngram-inc-p999999999-x")
+    oldShape.mkdirs()
     try {
       Ann.scratchDir(sfDir, "reap-probe2") // any scratchDir call reaps
       assert(!dead.exists(), "marker-owned dead-pid scratch must be reaped")
       assert(lookalike.isDirectory,
         "an unmarked entry with a pid-shaped NAME fragment must survive")
+      assert(oldShape.isDirectory,
+        "an unmarked entry in the old scratch name shape must survive")
     } finally {
-      Option(lookalike.listFiles()).foreach(_.foreach(_.delete()))
-      lookalike.delete()
-      ()
-    }
-  }
-
-  test("legacy (pre-marker) dead-pid scratch names are reapable") {
-    // the pre-marker upgrade path matches the OLD scratch name shape
-    // `<kind>-p<pid>-…` — and real kinds contain hyphens (ngram-inc,
-    // selfdedup-store), which the r12 regex `^[A-Za-z0-9]+-p(\d+)-`
-    // could never cross, leaving legacy orphans immortal (r13 ADVICE)
-    val parent = new java.io.File(Ann.scratchDir(sfDir, "legacy-probe"))
-      .getParentFile
-    parent.mkdirs()
-    val legacy = new java.io.File(parent, "ngram-inc-p999999999-x")
-    legacy.mkdirs() // NO _scratch marker and no completion marker: legacy
-    val aliveLegacy = new java.io.File(parent,
-      s"ngram-inc-p${ProcessHandle.current().pid()}-y")
-    aliveLegacy.mkdirs() // legacy shape but LIVE pid: must survive
-    try {
-      Ann.scratchDir(sfDir, "legacy-probe2")
-      assert(!legacy.exists(),
-        "hyphenated-kind legacy scratch with a dead pid must be reaped")
-      assert(aliveLegacy.isDirectory,
-        "legacy scratch owned by a live process must survive")
-    } finally {
-      Option(aliveLegacy.listFiles()).foreach(_.foreach(_.delete()))
-      aliveLegacy.delete()
-      ()
+      Seq(lookalike, oldShape).foreach { d =>
+        Option(d.listFiles()).foreach(_.foreach(_.delete()))
+        d.delete()
+      }
     }
   }
 

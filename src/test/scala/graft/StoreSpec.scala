@@ -295,26 +295,6 @@ class StoreSpec extends SparkTestBase {
     assert(spark.read.parquet(out).count() == 100 - doomed.length)
   }
 
-  test("a 0-row takedown re-run still reaps dead owners' leftovers") {
-    import spark.implicits._
-    val out = tmp()
-    val base = (1 to 10).map(k => (k.toLong, k % 2)).toDF("key", "part")
-    Store.writePartitioned(base, out, Seq("part"))
-    // plant a dead owner's pid-suffixed leftover, modeling a crash
-    // between a prior takedown's rewrite and its sweep
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    wh.mkdirs()
-    val dead = new java.io.File(wh, "graft_test_sets_zerorow_p999999998")
-    dead.mkdirs()
-    new java.io.File(dead, "part-0.parquet").createNewFile()
-    // the idempotent re-run touches no rows — the takedown-time backstop
-    // must run anyway (r15 ADVICE: the early return used to skip it)
-    assert(Store.deleteKeys(spark, out, "key", Seq(999L), Seq("part")) == 0L)
-    assert(!dead.exists(), "0-row takedown must still sweep dead owners")
-    assert(spark.read.parquet(out).count() == 10)
-  }
-
   test("targeted delete handles nested partition directories") {
     import spark.implicits._
     val out = tmp()
@@ -523,35 +503,6 @@ class StoreSpec extends SparkTestBase {
     // a further serve is a clean reuse hit
     graft.dedup.Dedup.lshJaccard(spark, docDir).collect()
     assert(graft.dedup.Dedup.bucketedBuildsFor(docDir, "d3") == 2L)
-  }
-
-  test("dead-process pid-suffixed tables are swept; live ones survive") {
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    wh.mkdirs()
-    // a dead process's leftover (pid 999999999 cannot be alive) and this
-    // process's own live table directory
-    val dead = new java.io.File(wh, "graft_test_sets_abc123_p999999999")
-    dead.mkdirs()
-    new java.io.File(dead, "part-0.parquet").createNewFile()
-    val live = new java.io.File(wh,
-      Store.processTable("graft_test_sets_def456"))
-    live.mkdirs()
-    // a FOREIGN managed table whose name merely ends in a pid-shaped
-    // number (and one without the graft_ prefix at all): the r10 sweep
-    // matched any `_p<digits>$` and would have destroyed both
-    val foreign = new java.io.File(wh, "metrics_p2024")
-    foreign.mkdirs()
-    new java.io.File(foreign, "part-0.parquet").createNewFile()
-    val swept = Store.sweepDeadProcessTables(spark)
-    assert(swept.contains(dead.getName), s"dead-pid table must be reaped: $swept")
-    assert(!dead.exists(), "dead-pid table directory must be deleted")
-    assert(live.isDirectory, "the current process's table must survive")
-    assert(foreign.isDirectory,
-      "a foreign table with a pid-shaped suffix must NEVER be swept")
-    assert(!swept.contains(foreign.getName), swept.toString)
-    foreign.listFiles().foreach(_.delete()); foreign.delete()
-    live.delete()
   }
 
   test("same-bucketed join plans with zero exchanges") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftPlanExec}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ class TopKRewriteSpec extends SparkTestBase {
 
   private def viaRule(df: DataFrame): (DataFrame, String) = {
     val rewritten = RewriteWindowTopK(df.queryExecution.analyzed)
-    (GraftPlanExec.ofRows(spark, rewritten), rewritten.toString)
+    (GraftSqlBridge.ofRows(spark, rewritten), rewritten.toString)
   }
 
   test("domain cap rewrites to the heap aggregate and matches the window rows") {
@@ -28,7 +28,7 @@ class TopKRewriteSpec extends SparkTestBase {
     val plan = rewritten.toString
     assert(plan.contains("collect_top_k"), s"rule did not fire:\n$plan")
     assert(!plan.contains("Window"), s"window survived:\n$plan")
-    val got = GraftPlanExec.ofRows(spark, rewritten).collect().map(_.toSeq).toSet
+    val got = GraftSqlBridge.ofRows(spark, rewritten).collect().map(_.toSeq).toSet
     assert(got == df.collect().map(_.toSeq).toSet)
     // cap census: no source exceeds K, ranks dense from 1
     val bySrc = df.collect().groupBy(_.getString(1))
