@@ -1,25 +1,69 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** The driver bench, plus the helpers every bench main publishes
+  * through (ScaleBench, SeasonScaleBench and Verify share them). */
 object Bench {
+
+  /** Free any cached/persisted intermediates a query left behind (the
+    * dedup family persists its shingle table) so a repeat measures the
+    * same work as the first run and many executions don't accumulate
+    * storage memory. Then quiesce: with 100+ queries in one JVM, GC debt
+    * from query N lands in query N+1's wall time and reads as a phantom
+    * regression (r5 adjudicated 8 such). An explicit GC + short settle
+    * makes each measurement start from the same heap. */
+  private[graft] def clearPersisted(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    System.gc()
+    Thread.sleep(50)
+  }
+
+  /** The fixed SCAN probe: scan + hash-agg + sort over lineitem, the
+    * suite's dominant cost shape. Its wall is a machine-state
+    * diagnostic (`calib_sec`). */
+  private[graft] def scanProbe(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(org.apache.spark.sql.functions.sum("l_quantity"),
+           org.apache.spark.sql.functions.avg("l_extendedprice"),
+           org.apache.spark.sql.functions.count("*"))
+      .orderBy("l_returnflag", "l_linestatus")
+      .queryExecution.toRdd.count()
+    ()
+  }
+
+  /** NaN-safe median that averages the middle pair on even counts (an
+    * upper-middle pick biases 2-sample medians high — r14 ADVICE). NaN
+    * and infinite entries (failed runs) are dropped, not sorted to an
+    * end; NaN when nothing remains. */
+  private[graft] def med(ws: Seq[Double]): Double = {
+    val ok = ws.filterNot(d => d.isNaN || d.isInfinite).sorted
+    if (ok.isEmpty) Double.NaN
+    else if (ok.length % 2 == 1) ok(ok.length / 2)
+    else (ok(ok.length / 2 - 1) + ok(ok.length / 2)) / 2.0
+  }
+
+  /** A JSON number rounded half-up to `digits` places; `null` for NaN or
+    * an infinity. */
+  private[graft] def jnum(v: Double, digits: Int = 3): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else BigDecimal(v).setScale(digits, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** A JSON string literal, escaping quote, backslash and ALL control
+    * chars (r15 ADVICE: Spark exception messages often carry newlines,
+    * so quote-and-backslash-only escaping emitted invalid artifacts on
+    * exactly the fail-loudly path that exists to be machine-readable). */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus.toInt, appName = "graft-bench")
-
-    // Free any cached/persisted intermediates a query left behind (the
-    // dedup family persists its shingle table) so run 2 measures the same
-    // work as run 1 and 82 executions don't accumulate storage memory.
-    def clearPersisted(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // Quiesce between queries: with 100+ queries in one JVM, GC debt
-      // from query N lands in query N+1's wall time and reads as a
-      // phantom regression (r5 adjudicated 8 such). An explicit GC +
-      // short settle makes each measurement start from the same heap.
-      System.gc()
-      Thread.sleep(50)
-    }
 
     // A FAILED run's wall is NaN, never its elapsed-to-failure time: a
     // query that starts throwing must not make the total faster. Failed
@@ -40,7 +84,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           Double.NaN
         }
-      clearPersisted()
+      clearPersisted(spark)
       (dt, graft.ops.Legs.drain())
     }
 
@@ -81,8 +125,7 @@ object Bench {
     // held across sessions (CALIB_r16: ±20%). Two fixed probes run at the
     // start and end of every pass, so a reader can see the machine state
     // a total was measured in:
-    //  - SCAN probe: scan + hash-agg + sort over lineitem (the suite's
-    //    dominant cost shape) → `calib_sec`;
+    //  - SCAN probe ([[scanProbe]]) → `calib_sec`;
     //  - SHUFFLE probe: a two-sided repartition sort-merge self-join of
     //    lineitem on l_orderkey + aggregation → `calib_shuffle_sec`.
     // A FAILED probe publishes `calib_error` and a null wall instead of
@@ -99,19 +142,10 @@ object Bench {
           System.err.println(s"[bench] CALIBRATION PROBE FAILED ($label): $e")
           Double.NaN
         }
-      clearPersisted()
+      clearPersisted(spark)
       dt
     }
-    def calibScanOnce(): Double = timedProbe("scan") {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(org.apache.spark.sql.functions.sum("l_quantity"),
-             org.apache.spark.sql.functions.avg("l_extendedprice"),
-             org.apache.spark.sql.functions.count("*"))
-        .orderBy("l_returnflag", "l_linestatus")
-        .queryExecution.toRdd.count()
-      ()
-    }
+    def calibScanOnce(): Double = timedProbe("scan")(scanProbe(spark, sfDir))
     def calibShuffleOnce(): Double = timedProbe("shuffle") {
       import org.apache.spark.sql.functions._
       val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -128,14 +162,6 @@ object Bench {
         .orderBy(col("g"))
         .queryExecution.toRdd.count()
       ()
-    }
-    // NaN-safe median that averages the middle pair on even counts (an
-    // upper-middle pick biases 2-sample medians high — r14 ADVICE)
-    def med(ws: Seq[Double]): Double = {
-      val ok = ws.filterNot(d => d.isNaN || d.isInfinite).sorted
-      if (ok.isEmpty) Double.NaN
-      else if (ok.length % 2 == 1) ok(ok.length / 2)
-      else (ok(ok.length / 2 - 1) + ok(ok.length / 2)) / 2.0
     }
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
     // TWO probe walls per pass (start + end, 6 walls each probe): 3-wall
@@ -183,34 +209,20 @@ object Bench {
     // + query count + a pointer to the committed file, with the file's md5
     // tying the two together — and the full-precision per-query map lives
     // only in BENCH.json.
-    def fmt(v: Double, digits: Int) =
-      if (v.isNaN || v.isInfinite) "null"
-      else BigDecimal(v)
-        .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toString
     val total = runs.map(_._2).filterNot(_.isNaN).sum
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    // JSON string escaping incl. control chars (r15 ADVICE: Spark
-    // exception messages often carry newlines inside the first 160 chars,
-    // so quote-and-backslash-only escaping emitted invalid BENCH.json on
-    // exactly the fail-loudly path that exists to be machine-readable)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val calibErrJson = calibError.fold("")(e => s""""calib_error":${jstr(e)},""")
-    val calibJson = s""""calib_sec":${fmt(calib, 3)},"calib_walls":[${
-      calibWalls.map(fmt(_, 3)).mkString(",")
-    }],"calib_shuffle_sec":${fmt(calibShuf, 3)},"calib_shuffle_walls":[${
-      calibShufWalls.map(fmt(_, 3)).mkString(",")
+    val calibJson = s""""calib_sec":${jnum(calib)},"calib_walls":[${
+      calibWalls.map(jnum(_)).mkString(",")
+    }],"calib_shuffle_sec":${jnum(calibShuf)},"calib_shuffle_walls":[${
+      calibShufWalls.map(jnum(_)).mkString(",")
     }],$calibErrJson"""
     val full = s"""{"metric":"total","value":$total,"unit":"sec",$calibJson"queries":${
       runs.map { case (k, v, _, _) =>
         jstr(k) + ":" + (if (v.isNaN) "null" else v.toString)
       }.mkString("{", ",", "}")
     },"failed":${failed.map(jstr).mkString("[", ",", "]")},"legs":${
-      legs.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fmt(v, 3) }
+      legs.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + jnum(v) }
         .mkString("{", ",", "}")
     },"sf":"$sfDir"}"""
     val bytes = (full + "\n").getBytes("UTF-8")
@@ -221,8 +233,8 @@ object Bench {
     // well inside the driver's stdout capture, and the round ledger
     // then carries them without dereferencing the committed file
     val legsShort = legs.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v, 2) }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
+      .map { case (k, v) => s"\"" + k + "\":" + jnum(v, 2) }.mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
       s""""n_queries":${runs.size},"n_failed":${failed.size},""" +
       s"""$calibJson"file":"$outFile","md5":"$md5",""" +
       s""""legs":$legsShort,"sf":"$sfDir"}"""

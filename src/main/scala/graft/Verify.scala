@@ -30,6 +30,7 @@ object Verify {
     // driver-side stages (graft_* functions are injected once at session
     // build by GraftExtensions, so there is no registration race).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
@@ -39,6 +40,7 @@ object Verify {
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed.add(name)
           }
       })
     }
@@ -49,22 +51,20 @@ object Verify {
     // can't unpersist them itself without defeating the share).
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // every control char is escaped: a tab or CR in the SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a failed query fails the process, after oracle_sql.json is written
+    if (!failed.isEmpty) {
+      val names = failed.toArray(Array.empty[String]).sorted
+      System.err.println(
+        s"[verify] ${names.length} queries failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }
 

@@ -56,7 +56,7 @@ object Dedup {
     * path, so on the common case this costs one byte scan riding the
     * scan projection. Oracle lockstep: every twin SQL applies DuckDB's
     * `nfc_normalize` at the same spot ([[canonTextSql]]). */
-  private[dedup] def canonText(docs: DataFrame): Column = {
+  private[graft] def canonText(docs: DataFrame): Column = {
     graft.functions.NormalizeExpressions.register(docs.sparkSession)
     lower(graft.functions.NormalizeExpressions.nfc(col("text")))
   }
@@ -536,14 +536,6 @@ object Dedup {
     bucketsForBytes(bytes)
   }
 
-  /** Build counter for the bucketed-pair layouts (spec observability:
-    * the fingerprint freshness rule must REBUILD on corpus change and
-    * SKIP on a clean reuse hit). Global counter kept for telemetry;
-    * specs assert on [[bucketedBuildsFor]] — the per-entry counts —
-    * because suites share one JVM and run in parallel, so a concurrent
-    * build from ANOTHER suite landing between two global-counter reads
-    * made the r11 assertions flaky. */
-  private[graft] val bucketedBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
   /** How many layout builds were seeded from the sibling layout's
     * materialized sets ([[siblingSetsSource]]) — spec observability,
     * per entry (suites share one JVM; a global counter is flaky under
@@ -552,6 +544,12 @@ object Dedup {
     scala.collection.concurrent.TrieMap.empty[String, Long]
   private[graft] def siblingSeededFor(dir: String, kind: String): Long =
     siblingSeededByEntry.getOrElse(layoutEntry(dir, kind).getName, 0L)
+  /** Build counter for the bucketed-pair layouts (spec observability:
+    * the fingerprint freshness rule must REBUILD on corpus change and
+    * SKIP on a clean reuse hit). Specs assert on [[bucketedBuildsFor]] —
+    * the per-entry counts — because suites share one JVM and run in
+    * parallel, so a concurrent build from ANOTHER suite landing between
+    * two global-counter reads made the r11 assertions flaky. */
   private val bucketedBuildsByEntry =
     scala.collection.concurrent.TrieMap.empty[String, Long]
   private[graft] def bucketedBuildsFor(dir: String, kind: String): Long =
@@ -780,7 +778,6 @@ object Dedup {
         // layout must not outlive it)
         java.nio.file.Files.write(new java.io.File(tmp, "_src").toPath,
           base.getBytes("UTF-8"))
-        bucketedBuilds.incrementAndGet()
         bucketedBuildsByEntry.updateWith(entry.getName)(c => Some(c.getOrElse(0L) + 1L))
         ()
        }
@@ -938,27 +935,6 @@ object Dedup {
       .withColumn("toks", split(trim(canonText(docs)), "\\s+"))
       .select(col("doc_id"), graft.functions.ShingleExpressions
         .gramSet(col("toks"), NgramN, 15, algo).as("gs"))
-  }
-
-  /** The pre-r18 interpreted-HOF gram pass — kept ONLY as the
-    * equivalence/measurement control for [[gramSetsWith]]
-    * (GramSetKernelSpec; the A/B probe). Not referenced by any query. */
-  private[graft] def gramSetsHof(docs: DataFrame, algo: String): DataFrame = {
-    graft.functions.ShingleExpressions.register(docs.sparkSession)
-    graft.functions.HashExpressions.register(docs.sparkSession)
-    val hashExpr =
-      if (algo == "md5")
-        s"graft_md5_prefix64(concat_ws(' ', slice(toks, i, $NgramN)), 15)"
-      else s"xxhash64(concat_ws(' ', slice(toks, i, $NgramN)))"
-    docs
-      .withColumn("toks", split(trim(canonText(docs)), "\\s+"))
-      .withColumn("gs", expr(
-        s"""CASE WHEN size(toks) >= $NgramN THEN
-           |  array_sort(array_distinct(transform(
-           |    sequence(1, size(toks) - ${NgramN - 1}),
-           |    i -> $hashExpr)))
-           |ELSE CAST(array() AS ARRAY<BIGINT>) END""".stripMargin))
-      .select(col("doc_id"), col("gs"))
   }
 
   /** The containment corpus: documents plus the deterministically planted

@@ -264,16 +264,6 @@ object Bpe {
       .orderBy("doc_id")
   }
 
-  /** The pre-r18 replace-chain encode expression over a `ts` column —
-    * kept ONLY as the kernel's equivalence control (BpeSpec). */
-  private[graft] def encodeRepChainSql(merges: Seq[Merge]): String = {
-    val rep0Sql =
-      """concat_ws('\n', transform(ts, t -> regexp_replace(t, '(.)', '|$1 ')))"""
-    merges.foldLeft(rep0Sql) { (s, m) =>
-      s"replace($s, '|${m.a} |${m.b} ', '|${m.a}${m.b} ')"
-    }
-  }
-
   /** DuckDB twin: replays the 16 training rounds (pair-count aggregate →
     * total-order top pair → replace over the dictionary reps) and the
     * encode chain, generated round-by-round like the PQ oracle. */

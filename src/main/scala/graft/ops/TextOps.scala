@@ -356,35 +356,6 @@ object TextOps {
       .orderBy($"doc_id")
   }
 
-  /** The pre-r18 interpreted-HOF form of [[repetitionStats]]'s per-row
-    * statistics — kept ONLY as the equivalence/measurement control
-    * (RepetitionKernelSpec). Not referenced by any query. */
-  private[graft] def repetitionStatsHof(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs
-      .select($"doc_id", split(trim(lower($"text")), "\\s+").as("t"))
-      .filter(size($"t") >= 2)
-      .withColumn("bgs", expr(
-        "array_sort(transform(sequence(0, size(t) - 2), " +
-          "i -> concat(t[i], ' ', t[i + 1])))"))
-      .select($"doc_id",
-        size($"t").cast("long").as("n_tokens"),
-        size(array_distinct($"t")).cast("long").as("n_distinct"),
-        expr(
-          """aggregate(bgs,
-            |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'best', 0L),
-            |  (a, x) -> named_struct('prev', x,
-            |    'run', IF(a.prev <=> x, a.run + 1L, 1L),
-            |    'best', greatest(a.best, IF(a.prev <=> x, a.run + 1L, 1L))),
-            |  a -> a.best)""".stripMargin).as("top_bigram_n"),
-        (size($"t") - 1).cast("long").as("n_bigrams"))
-      .select($"doc_id", $"n_tokens",
-        floor($"n_distinct" * 10000 / $"n_tokens").cast("long").as("distinct_bp"),
-        floor($"top_bigram_n" * 10000 / $"n_bigrams").cast("long").as("top_bigram_bp"))
-      .orderBy($"doc_id")
-  }
-
   val repetitionStatsSql: String =
     """WITH toks AS (
       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t

@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.Bench.{clearPersisted, jnum, jstr, med, scanProbe}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
@@ -79,8 +80,8 @@ object MetricsListener {
     * of the query that just ran. `listenerBus` is `private[spark]` at the
     * source level but public in bytecode — reflection reaches it; if the
     * internals ever move, a half-second settle keeps the numbers sane.
-    * Shared by every main that snapshots task metrics (ScaleBench,
-    * SeasonScaleBench and SeasonBench). */
+    * Shared by every main that snapshots task metrics (ScaleBench and
+    * SeasonScaleBench). */
   def drainBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext
@@ -117,20 +118,6 @@ object MetricsListener {
   */
 object ScaleBench {
 
-  private def jnum(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
-
-  /** JSON string escaping incl. control chars (r15 ADVICE: Spark
-    * exception messages carry newlines, which the quote/backslash-only
-    * escaping let straight into the calib_error field — corrupting the
-    * artifact exactly when the fail-loudly path fires). */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Diagnostic CONTROL cells: alternate shapes measured for comparison
     * against a standard cell (the `_slim` pair experiment moves gs_b
     * instead of gs_a; `d_dup_clusters_dist` forces the distributed
@@ -144,20 +131,6 @@ object ScaleBench {
   val ControlCells: Set[String] = Set(
     "d_ngram_bucketed_slim", "d_containment_bucketed_slim",
     "d_dup_clusters_dist")
-
-  /** NaN-safe median that AVERAGES the middle pair on even counts: the
-    * upper-middle pick biased 2-sample "medians" high whenever one pass
-    * of a 3-pass family failed (r14 ADVICE). NaN entries (failed probe
-    * walls) are excluded rather than sorted to an end. */
-  private def med(ws: Seq[Double]): Double = {
-    val ok = ws.filterNot(d => d.isNaN || d.isInfinite).sorted
-    if (ok.isEmpty) Double.NaN
-    else if (ok.length % 2 == 1) ok(ok.length / 2)
-    else (ok(ok.length / 2 - 1) + ok(ok.length / 2)) / 2.0
-  }
-
-  private def drainListenerBus(spark: SparkSession): Unit =
-    MetricsListener.drainBus(spark)
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -383,45 +356,28 @@ object ScaleBench {
       "t_curriculum_order" -> (graft.ops.DataSelection.curriculumOrder _),
       "t_curriculum_scaled" -> (graft.ops.DataSelection.curriculumOrderScaled _))
 
-    def clearPersisted(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // same quiesce as Bench: ~90 measured queries share this JVM and the
-      // x50 cells run LAST — without it they inherit the whole run's GC
-      // debt and the growth ratios read systematically worse than reality
-      System.gc()
-      Thread.sleep(50)
-    }
-
     // warm-up (codegen/classloading, as Bench does)
     try {
       spark.read.parquet(s"$baseDir/lineitem.parquet")
         .groupBy("l_returnflag").count().queryExecution.toRdd.count()
     } catch { case _: Throwable => () }
 
-    // machine-state calibration (r14 — Bench's calib_sec device): the
-    // fixed scan+hash-agg+sort probe over the BASE lineitem, three walls
-    // up front and one at the end, published in meta. Scale artifacts
-    // from different sessions compare via cell/calib ratios, never raw
-    // seconds: SCALE_PROBE_INREGIME_r14 measured 1.5-2x wall drift at
-    // IDENTICAL shuffle bytes between two same-tree runs an hour apart
-    // (off-CPU stall — GC pressure + evicted page cache). The trailing
-    // wall also exposes within-run state decay. A FAILED probe records a
-    // null wall + calib_error instead of its elapsed-to-failure time
-    // (r14 ADVICE: a near-zero denominator silently corrupts every
-    // normalized ratio downstream).
+    // machine-state probe, a SESSION DIAGNOSTIC as in Bench: the fixed
+    // scan probe over the BASE lineitem, three labeled walls up front and
+    // one at the end, published in meta. Raw cell walls compare only
+    // within one session: SCALE_PROBE_INREGIME_r14 measured 1.5-2x wall
+    // drift at IDENTICAL shuffle bytes between two same-tree runs an hour
+    // apart, and no probe-normalized column held across sessions either
+    // (the r16 rehearsal pair's x50 normalized medians sat 1.21x apart at
+    // raw 0.985x). The trailing wall exposes within-run state decay. A
+    // FAILED probe records a null wall + calib_error instead of its
+    // elapsed-to-failure time.
     var calibError: Option[String] = None
     def calibOnce(): Double = {
       val t0 = System.nanoTime()
       val dt =
         try {
-          spark.read.parquet(s"$baseDir/lineitem.parquet")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(org.apache.spark.sql.functions.sum("l_quantity"),
-                 org.apache.spark.sql.functions.avg("l_extendedprice"),
-                 org.apache.spark.sql.functions.count("*"))
-            .orderBy("l_returnflag", "l_linestatus")
-            .queryExecution.toRdd.count()
+          scanProbe(spark, baseDir)
           (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           calibError = calibError.orElse(Some(
@@ -430,15 +386,9 @@ object ScaleBench {
           System.err.println(s"[scale] CALIBRATION PROBE FAILED: $e")
           Double.NaN
         }
-      clearPersisted()
+      clearPersisted(spark)
       dt
     }
-    // labeled walls: SCALE_r14b showed the up-front median misreading
-    // the state the CELLS later ran under (start walls 1.41/0.62/0.61 s
-    // vs a trailing 0.32 s — the box recovered mid-run while the cells
-    // median-matched the earlier rehearsal within 8%), so walls are
-    // taken before EACH scale's cell block too and published labeled;
-    // normalize a scale's cells by its own adjacent wall.
     val calibWalls =
       scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     (1 to 3).foreach(i => calibWalls += (s"start$i" -> calibOnce()))
@@ -514,11 +464,11 @@ object ScaleBench {
         // BUILDWARM probe they are calibrated against: the lsh build
         // persists band rows that would otherwise stay cached across
         // passes (r13 ADVICE)
-        clearPersisted()
+        clearPersisted(spark)
         val passes = (1 to warmBuildPasses).map { _ =>
           buildLayouts(n)
           val legs = buildLegs()
-          clearPersisted()
+          clearPersisted(spark)
           legs
         }
         passes.flatMap(_.keys).distinct.foreach { k =>
@@ -545,7 +495,10 @@ object ScaleBench {
     // in-regime probe showed a ×30 wall ABOVE the ×50 wall for the same
     // query — single-shot cells inherit cross-cell JVM state, and the
     // headline linearity claims can't rest on them). Each repeat gets a
-    // full clearPersisted + GC quiesce; the reported cell is the repeat
+    // full clearPersisted + GC quiesce (~90 measured queries share this
+    // JVM and the x50 cells run LAST — without it they inherit the whole
+    // run's GC debt and the growth ratios read worse than reality); the
+    // reported cell is the repeat
     // with the MEDIAN wall (its metrics, not a mix), and every wall is
     // kept in the artifact so run-to-run spread is visible. The full
     // (~60-cell) rehearsal stays single-shot — it is an hour already —
@@ -553,21 +506,7 @@ object ScaleBench {
     val repeats = sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt)
       .getOrElse(if (only.isDefined) 3 else 1)
 
-    var calibbedScale = -1
     for (n <- scales; (name, fn) <- measured) {
-      if (n != calibbedScale) {
-        // the per-scale wall is itself a MEDIAN-of-3 (r15 finding: the
-        // SCALE_r15/SCALE_r15b pair measured a single adjacent wall as
-        // the dominant noise source — 1.58 vs 0.47 s at x1 while the
-        // cells themselves agreed to ~6% — so one short probe wall must
-        // not be the denominator of a whole scale's sec_per_calib
-        // column); the individual walls stay published as x<N>-p1..p3
-        val ws = Seq.fill(3)(calibOnce())
-        ws.zipWithIndex.foreach { case (w, i) =>
-          calibWalls += (s"x$n-p${i + 1}" -> w) }
-        // qualified: the cell loop below binds a local `med` (median run)
-        calibWalls += (s"x$n" -> ScaleBench.med(ws)); calibbedScale = n
-      }
       val dir = dirs(n)
       // the bucketed SERVE cells get median-of-3 even in the full
       // rehearsal (r13): they are the cells capacity plans read, their
@@ -583,7 +522,7 @@ object ScaleBench {
       val cellRepeats =
         if (repeats > 1 || !name.contains("_bucketed")) repeats else 3
       val runs = (1 to cellRepeats).map { _ =>
-        clearPersisted()
+        clearPersisted(spark)
         listener.reset()
         graft.ops.Legs.drain() // leftover legs must not blame this cell
         val t0 = System.nanoTime()
@@ -593,7 +532,7 @@ object ScaleBench {
             System.err.println(s"[scale] $name x$n FAILED: ${e.getMessage}"); -1L
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark)
+        MetricsListener.drainBus(spark)
         // any leg recorded inside THIS wall (a layout/lifecycle build the
         // reuse contract was supposed to keep out of the timed cell, or a
         // lifecycle query's declared phases) is published with the cell —
@@ -601,8 +540,8 @@ object ScaleBench {
         (sec, rows, listener.snapshot, graft.ops.Legs.drain())
       }
       val sorted = runs.sortBy(_._1)
-      val med = sorted(sorted.length / 2)
-      val cell = Cell(med._1, med._2, med._3, runs.map(_._1), med._4)
+      val mid = sorted(sorted.length / 2)
+      val cell = Cell(mid._1, mid._2, mid._3, runs.map(_._1), mid._4)
       results.getOrElseUpdate(name,
         scala.collection.mutable.LinkedHashMap.empty) += n -> cell
       System.err.println(f"[scale] $name%-22s x$n%-3d ${cell.sec}%7.2f s " +
@@ -613,7 +552,7 @@ object ScaleBench {
     // candidate-pair counts for the band-join claim (not a timed query:
     // counts the band-join candidates BEFORE the Jaccard verify)
     val candCounts = if (only.isDefined) Map.empty[Int, Long] else scales.map { n =>
-      clearPersisted()
+      clearPersisted(spark)
       val docs = graft.Tables.documents(spark, dirs(n))
       val sets = graft.dedup.Dedup.shingleSets(docs, algo = "xxh64")
       val cands = graft.dedup.Dedup
@@ -632,7 +571,7 @@ object ScaleBench {
     val crossCopy = if (only.isDefined)
       Map.empty[Int, Map[String, (Long, Long)]]
     else scales.filter(_ > 1).map { n =>
-      clearPersisted()
+      clearPersisted(spark)
       import org.apache.spark.sql.functions.col
       def crossFrac(df: DataFrame, a: String, b: String, stride: Long) = {
         val total = df.count()
@@ -669,7 +608,7 @@ object ScaleBench {
     val cappedRecall = if (only.isDefined)
       Map.empty[Int, (Long, Long)]
     else scales.map { n =>
-      clearPersisted()
+      clearPersisted(spark)
       import org.apache.spark.sql.functions.col
       val full = graft.dedup.Dedup.lshJaccardFast(spark, dirs(n))
         .filter(col("is_dup") === 1).select("doc_a", "doc_b")
@@ -687,7 +626,7 @@ object ScaleBench {
     // corpora are shallow by construction, which is exactly why the
     // adversarial chain has to be planted).
     val chainProp = if (only.isDefined) Map.empty[String, Double] else {
-      clearPersisted()
+      clearPersisted(spark)
       import spark.implicits._
       val diam = 400
       val edges = (0 until diam).map(i => (i.toLong, i.toLong + 1))
@@ -712,20 +651,7 @@ object ScaleBench {
 
     // ---- JSON out ---------------------------------------------------
     calibWalls += ("end" -> calibOnce()) // trailing wall: state decay
-    // the x<N>-p* raw walls are excluded: their median is already in the
-    // x<N> entry, and counting both would double-weight the per-scale walls
-    val calibSec = med(
-      calibWalls.filterNot(_._1.contains("-p")).map(_._2).toSeq)
-    // each scale's cells normalize by the wall taken ADJACENT to them
-    // (the labeled x<N> wall) — SCALE_r14b showed the box recovering
-    // MID-RUN, so the up-front median can misread the state a later
-    // scale's cells actually ran under; fall back to the run median only
-    // if that scale's own probe failed
-    val scaleWall: Map[String, Double] = calibWalls.toMap
-    def wallFor(n: Int): Double = {
-      val w = scaleWall.getOrElse(s"x$n", Double.NaN)
-      if (w.isNaN) calibSec else w
-    }
+    val calibSec = med(calibWalls.map(_._2).toSeq)
     val sb = new StringBuilder
     sb.append("{\n  \"meta\": {\"base\": \"").append(baseDir)
       .append("\", \"cpus\": ").append(cpus)
@@ -745,14 +671,7 @@ object ScaleBench {
       .append("control=true are diagnostic comparisons (_slim pair ")
       .append("experiment, forced distributed clustering) excluded from ")
       .append("the every-growth-ratio-below-ideal claim: their x1 walls ")
-      .append("are sub-second, so the ratio divides by noise. ")
-      // r16 VERDICT finding 5: the r16/r16b pair's x50 normalized medians
-      // sat 1.21x apart while raw agreed at 0.985x — probe walls are the
-      // noise source at every scale, not just x1
-      .append("Per-scale sec_per_calib columns are DIAGNOSTIC at every ")
-      .append("scale; RAW medians-of-pairs are the cross-run comparator ")
-      .append("(the r16 rehearsal pair measured x50 normalized medians ")
-      .append("1.21x apart at raw 0.985x)\"},\n")
+      .append("are sub-second, so the ratio divides by noise.\"},\n")
     if (only.isDefined)
       sb.append("  \"probe_only\": [")
         .append(measured.map(q => s""""${q._1}"""").mkString(", "))
@@ -781,7 +700,7 @@ object ScaleBench {
       sb.append((layoutBuildWalls.map { case (k, v) =>
         s""""$k": ${jnum(v)}""" } ++
         layoutBuildWallArrays.map { case (k, ws) =>
-          s""""$k": [${ws.map(jnum).mkString(", ")}]""" }).mkString(", "))
+          s""""$k": [${ws.map(jnum(_)).mkString(", ")}]""" }).mkString(", "))
       sb.append("},\n")
     }
     sb.append("  \"queries\": {\n")
@@ -790,17 +709,12 @@ object ScaleBench {
       val perScale = cells.map { case (n, c) =>
         val m = c.metrics.map { case (k, v) => s""""$k": $v""" }.mkString(", ")
         val walls = if (c.walls.length > 1)
-          s""", "walls": [${c.walls.map(jnum).mkString(", ")}]""" else ""
+          s""", "walls": [${c.walls.map(jnum(_)).mkString(", ")}]""" else ""
         val includesBuild = c.legs.keys.exists(_.endsWith(".build"))
         val legsJson = if (c.legs.isEmpty) "" else
           s""", "legs": {${c.legs.toSeq.sortBy(_._1)
             .map { case (k, v) => s""""$k": ${jnum(v)}""" }.mkString(", ")}}"""
-        // sec_per_calib (r14 VERDICT finding 3): the cell pre-divided by
-        // its scale-adjacent calibration wall — cross-session rehearsal
-        // comparison is a column read, not a manual division against the
-        // labeled wall map
-        s""""x$n": {"sec": ${jnum(c.sec)}, "sec_per_calib": ${
-          jnum(c.sec / wallFor(n))}, "rows": ${c.rows}, "includes_build": $includesBuild, $m$walls$legsJson}"""
+        s""""x$n": {"sec": ${jnum(c.sec)}, "rows": ${c.rows}, "includes_build": $includesBuild, $m$walls$legsJson}"""
       }.mkString(", ")
       val growth = cells.map { case (n, c) =>
         val ideal = n.toDouble / scales.head

@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.Bench.{jnum, jstr}
 import graft.nfl.{Normalize, SeasonBench, SeasonJob}
 
 /** Season-kernel scale rehearsal (round-7 verdict item 7): SCALE_r7
@@ -17,21 +18,17 @@ import graft.nfl.{Normalize, SeasonBench, SeasonJob}
   *    but the surrounding sort/agg stages carry more rows per partition
   *    as the input grows (fixed 32 partitions locally; AQE-coalesced
   *    under the production posture), so their peak grows with copies.
-  *    Two instruments pin that attribution (r14 VERDICT item 5):
-  *    per-stage peak memory (`stage_peaks` — the growth must live in
-  *    named sort/agg/exchange stages, never the kernel's own stage) and
-  *    an optional ×N CONTROL CELL with AQE partition coalescing pinned
-  *    OFF (`SPARK_GRAFT_SEASON_CONTROL=<copies>`): if the growth is the
-  *    coalescer packing more rows per partition, the control's peak
-  *    falls back toward the ×1 level at the cost of more, smaller
-  *    tasks — same answers either way.
+  *    Per-stage peak memory (`stage_peaks`, r14 VERDICT item 5) names
+  *    where: the growth must live in named sort/agg/exchange stages,
+  *    never the kernel's own stage.
   *
   * One timed run per cell (the season job is minutes-long; the ±20%
   * box variance noted in SEASON_r7 applies — the claims checked here are
   * order-of-magnitude shape claims, flat-vs-linear, not ±5% timings).
   * `SPARK_GRAFT_SEASON_SCALES` sets the copy counts (default 18,182:
   * plays ×1 → ×10 over the base; append 546 for a ×30 point when the
-  * wall budget allows).
+  * wall budget allows). A single count is a one-cell season run: 182
+  * copies is the ~1M-raw-row, 17-week season (`SEASON_r*.json`).
   */
 object SeasonScaleBench {
 
@@ -46,11 +43,6 @@ object SeasonScaleBench {
     // r8 ATTRIBUTED the ×30 cell's spill to the fixed partitioning, this
     // knob exists to MEASURE that claim (r9 verdict item 4)
     val posture = sys.env.getOrElse("SPARK_GRAFT_SEASON_POSTURE", "local")
-    // optional pinned-coalesce control cell: copies count to re-run with
-    // spark.sql.adaptive.coalescePartitions.enabled=false (runtime conf,
-    // same session — only meaningful under the production posture)
-    val controlCopies = sys.env.get("SPARK_GRAFT_SEASON_CONTROL")
-      .map(_.trim.toInt)
     val spark =
       if (posture == "production") {
         val s = graft.GraftSession.production(
@@ -68,11 +60,12 @@ object SeasonScaleBench {
     val (t1, g1, p1, s1) = SeasonBench.replicate(spark, 1)
     val warmDir = java.nio.file.Files.createTempDirectory("graft-sscale-warm").toString
     SeasonJob.run(Normalize(t1, g1, p1), s1, warmDir)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warmDir))
 
-    case class Cell(label: String, copies: Int, plays: Long, rawRows: Long,
+    case class Cell(copies: Int, plays: Long, rawRows: Long,
                     frames: Long, sec: Double, metrics: Map[String, Long],
                     stages: Seq[(String, Long)])
-    def runCell(copies: Int, label: String): Cell = {
+    def runCell(copies: Int): Cell = {
       val (tracking, games, plays, preState) = SeasonBench.replicate(spark, copies)
       val rawRows = tracking.count()
       val nPlays = plays.select("gameId", "playId").distinct().count()
@@ -85,10 +78,10 @@ object SeasonScaleBench {
       val frames = SeasonJob.run(Normalize(tracking, games, plays), preState, outDir)
       val sec = (System.nanoTime() - t0) / 1e9
       MetricsListener.drainBus(spark)
-      val cell = Cell(label, copies, nPlays, rawRows, frames, sec,
+      val cell = Cell(copies, nPlays, rawRows, frames, sec,
         listener.snapshot, listener.topStages(6))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outDir))
-      System.err.println(f"[season-scale] $label copies=$copies%-4d plays=$nPlays%-6d " +
+      System.err.println(f"[season-scale] copies=$copies%-4d plays=$nPlays%-6d " +
         f"${sec}%8.1f s  ${frames / sec}%6.2f frames/s  " +
         f"peakMem=${cell.metrics("peak_task_memory")}%12d  " +
         f"spill=${cell.metrics("disk_spill_bytes")}%d")
@@ -97,29 +90,8 @@ object SeasonScaleBench {
       cell
     }
 
-    val cells = copiesList.map(c => runCell(c, "std"))
-    // pinned-coalesce control (r14 VERDICT item 5): same cell, AQE
-    // partition coalescing off — a RUNTIME conf, flipped and restored
-    // around the one control run
-    val control = controlCopies.map { c =>
-      val key = "spark.sql.adaptive.coalescePartitions.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try runCell(c, "coalesce_off")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-
+    val cells = copiesList.map(runCell)
     val base = cells.head
-    def jnum(d: Double) = if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def cellJson(c: Cell): String = {
       val m = c.metrics.map { case (k, v) => s""""$k": $v""" }.mkString(", ")
       val stages = c.stages.map { case (n, p) =>
@@ -128,11 +100,9 @@ object SeasonScaleBench {
     }
     val body = cells.map(c => s""""x${c.plays / base.plays}": ${cellJson(c)}""")
       .mkString(",\n  ")
-    val controlBody = control.fold("")(c =>
-      s""",\n  "x${c.plays / base.plays}_coalesce_off": ${cellJson(c)}""")
     val json = s"""{
-  "meta": {"cpus": $cpus, "heap_gb": ${Runtime.getRuntime.maxMemory / (1024L * 1024 * 1024)}, "posture": "$posture", "note": "disjoint game copies: plays are the exact scale knob, per-play group size constant; claims = linear wall, SUB-LINEAR peak task memory, zero spill. Attribution (r15 coalesce-off control, reconfirmed by r16 stage_peaks): the peak-memory growth lives in the BENCH HARNESS's replicated-input exchange (Exchange+map+parallelize stages), which does not exist in production; the kernel MapGroups stage and the job's sort/agg stages stay flat at every scale. stage_peaks names the top stages by per-stage peak task memory so the attribution is read off the stage names; the optional *_coalesce_off control re-runs one cell with AQE partition coalescing pinned off"},
-  $body$controlBody
+  "meta": {"cpus": $cpus, "heap_gb": ${Runtime.getRuntime.maxMemory / (1024L * 1024 * 1024)}, "posture": "$posture", "note": "disjoint game copies: plays are the exact scale knob, per-play group size constant; claims = linear wall, SUB-LINEAR peak task memory, zero spill. Attribution (r15 coalesce-off control, reconfirmed by r16 stage_peaks): the peak-memory growth lives in the BENCH HARNESS's replicated-input exchange (Exchange+map+parallelize stages), which does not exist in production; the kernel MapGroups stage and the job's sort/agg stages stay flat at every scale. stage_peaks names the top stages by per-stage peak task memory so the attribution is read off the stage names"},
+  $body
 }
 """
     // explicit UTF-8 (r15 ADVICE): the default-charset PrintWriter mangled

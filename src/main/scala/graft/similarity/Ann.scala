@@ -42,11 +42,6 @@ object Ann {
   def intDot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot(a, b)
 
-  /** The composed-builtins equivalent, kept for benchmarking the native
-    * expression against (interpreted lambda + boxing per element). */
-  def intDotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
   /** Brute-force top-k neighbors for query vectors (vec_id < AnnQueryIds) by
     * quantized dot product; deterministic tie-break on neighbor id. */
   def bruteForceTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {

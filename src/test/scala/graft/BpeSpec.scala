@@ -4,6 +4,16 @@ import graft.ops.Bpe
 
 class BpeSpec extends SparkTestBase {
 
+  /** The pre-r18 replace-chain encode expression over a `ts` column, the
+    * equivalence control for the `graft_bpe_rep` kernel. */
+  private def encodeRepChainSql(merges: Seq[Bpe.Merge]): String = {
+    val rep0Sql =
+      """concat_ws('\n', transform(ts, t -> regexp_replace(t, '(.)', '|$1 ')))"""
+    merges.foldLeft(rep0Sql) { (s, m) =>
+      s"replace($s, '|${m.a} |${m.b} ', '|${m.a}${m.b} ')"
+    }
+  }
+
   /** Driver-side reference BPE trainer over a word-frequency map, with
     * the same count DESC / pair ASC total order. */
   private def referenceTrain(freqs: Map[String, Long], nMerges: Int): Seq[(String, String)] = {
@@ -120,7 +130,7 @@ class BpeSpec extends SparkTestBase {
     val both = toks
       .withColumn("rep_k", graft.functions.BpeExpressions.bpeRep(
         col("ts"), merges.map(m => (m.a, m.b))))
-      .withColumn("rep_h", expr(Bpe.encodeRepChainSql(merges)))
+      .withColumn("rep_h", expr(encodeRepChainSql(merges)))
     val bad = both.filter(col("rep_k") =!= col("rep_h"))
       .select("doc_id").collect()
     assert(bad.isEmpty, s"kernel/replace-chain divergence on ${bad.mkString(",")}")
@@ -133,7 +143,7 @@ class BpeSpec extends SparkTestBase {
     val em = Seq(("a", "a"), ("aa", "a"), ("a", "b"))
     val eBoth = edge
       .withColumn("rep_k", graft.functions.BpeExpressions.bpeRep(col("ts"), em))
-      .withColumn("rep_h", expr(Bpe.encodeRepChainSql(
+      .withColumn("rep_h", expr(encodeRepChainSql(
         em.map { case (a, b) => Bpe.Merge(a, b) })))
       .collect()
     eBoth.foreach(r => assert(r.getAs[String]("rep_k") == r.getAs[String]("rep_h"),
