@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.Tables
+import graft.sources.DerivedStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -303,9 +304,10 @@ object Dedup {
       lshJaccardInline(spark, dir))
 
   /** Routing for the three DEFAULT near-dup entries (r11 ADVICE): the
-    * bucketed serve needs a writable layout root (`Ann.cacheRoot`, i.e.
-    * `GRAFT_ANN_CACHE_DIR`/tmpdir — NOT the warehouse, which r12's
-    * external layout removed from the picture). On a read-only host the
+    * bucketed serve needs a writable layout root
+    * (`DerivedStore.cacheRoot`, i.e. `GRAFT_ANN_CACHE_DIR`/tmpdir — NOT
+    * the warehouse, which r12's external layout removed from the
+    * picture). On a read-only host the
     * default entry must still answer, so an unusable root routes to the
     * bit-identical inline twin with a loud log line instead of failing
     * on the layout write. `usable` is injectable so the routing is
@@ -317,7 +319,7 @@ object Dedup {
                                           (inline: => DataFrame): DataFrame =
     if (usable) bucketed
     else {
-      val root = scala.util.Try(graft.similarity.Ann.cacheRoot)
+      val root = scala.util.Try(DerivedStore.cacheRoot)
         .fold(_.getMessage, identity)
       System.err.println(s"[graft] $what: layout root not writable " +
         s"($root) — serving the inline plan " +
@@ -327,11 +329,10 @@ object Dedup {
 
   /** Can the shared layout root be created and written? One mkdirs +
     * one probe-file per call — cheap against a corpus-scale query.
-    * `root` is by-name so a cache root that `Ann.cacheRoot` refuses (a
-    * default owned by another user) counts as unusable too. */
+    * `root` is by-name so a cache root that `DerivedStore.cacheRoot`
+    * refuses (a default owned by another user) counts as unusable too. */
   private[graft] def layoutRootUsable(
-      root: => java.io.File = new java.io.File(
-        graft.similarity.Ann.cacheRoot, "graft-ann-index")): Boolean =
+      root: => java.io.File = new java.io.File(DerivedStore.entriesRoot)): Boolean =
     try {
       val dir = root
       dir.mkdirs()
@@ -435,16 +436,16 @@ object Dedup {
   /** The bucketed-attach twins' shared table device — r12: the layout is
     * CROSS-PROCESS PERSISTENT. The (sets, cands) pair lives as external
     * bucketed parquet under the hardened ANN cache root
-    * (`Ann.cachedIndexDir(dir, "bkt-<kind>")`), built through the same
-    * machinery the persisted ANN indexes use — cross-process build
-    * locks, a `_built` marker carrying every parameter the layout
-    * depends on (INCLUDING the resolved bucket count) plus the corpus
-    * data fingerprint, temp-dir build with marker-last, atomic-rename
-    * install. One process pays the corpus-sized bucketed write; every
-    * other process (and every later driver) re-registers a catalog
-    * entry over the same files — a pure-DDL step, no data movement —
-    * which at 100 TB removes what r11 left as the dominant first-query
-    * cost of every new driver.
+    * (`DerivedStore.cachedIndexDir(dir, "bkt-<kind>")`), installed by
+    * `DerivedStore.ensureFresh` like the persisted ANN indexes —
+    * cross-process build locks, a freshness marker carrying every
+    * parameter the layout depends on (INCLUDING the resolved bucket
+    * count) plus the corpus data fingerprint, temp-dir build with
+    * marker-last, atomic-rename install. One process pays the
+    * corpus-sized bucketed write; every other process (and every later
+    * driver) re-registers a catalog entry over the same files — a
+    * pure-DDL step, no data movement — which at 100 TB removes what r11
+    * left as the dominant first-query cost of every new driver.
     *
     * Catalog state stays PER-JVM (Spark's default in-memory catalog):
     * each session registers `CREATE TABLE … CLUSTERED BY … LOCATION`
@@ -465,14 +466,14 @@ object Dedup {
     * build, so correctness runs still exercise the build path.
     *
     * The tables are DERIVED copies of the documents corpus and retain
-    * any later-taken-down doc's rows; bucketedPair registers BOTH a
-    * file-deletion hook and a catalog-drop hook for the base table, so
-    * a `Store.deleteKeys` takedown reaches the shared files and this
-    * JVM's serve entries. An UNREGISTERED process (one that never
-    * called bucketedPair this lifetime) rebuilds rather than serves
-    * post-takedown — the corpus fingerprint in the marker changed — the
-    * same guarantee (and the same mid-query caveat) the ANN index cache
-    * documents. */
+    * any later-taken-down doc's rows; every call registers BOTH a
+    * file-deletion hook (ensureFresh's) and a catalog-drop hook for the
+    * base table, so a `Store.deleteKeys` takedown reaches the shared
+    * files and this JVM's serve entries. An UNREGISTERED process (one
+    * that never called bucketedPair this lifetime) rebuilds rather than
+    * serves post-takedown — the corpus fingerprint in the marker changed
+    * — the same guarantee (and the same mid-query caveat) the ANN index
+    * cache documents. */
   /** The (sets, cands) serve-table names [[bucketedPair]] registers for
     * a given corpus dir — package-visible so specs assert on the REAL
     * names instead of duplicating the construction. Stable across
@@ -523,8 +524,8 @@ object Dedup {
   }
 
   /** [[bucketsForBytes]] over the documents table's actual file listing
-    * (a pure LISTING pass — the Ann.dataFingerprint device, no data
-    * read). This is the DEFAULT for every bucketed-attach entry point:
+    * (a pure LISTING pass — the DerivedStore.dataFingerprint device, no
+    * data read). This is the DEFAULT for every bucketed-attach entry point:
     * the API previously shipped a fixed `nBuckets = 8`, which SURVEY
     * D4d-b itself calls "the D7e fixed-bucket mistake in layout form" —
     * production callers got the toy default unless they remembered to
@@ -584,7 +585,7 @@ object Dedup {
       // carries correctness, so a failure must not fail the serve call it
       // happened to ride on
       try {
-        graft.similarity.Ann.sweepOrphanedEntries()
+        DerivedStore.sweepOrphanedEntries()
         ()
       } catch { case e: Throwable =>
         System.err.println(s"[dedup] orphaned-entry sweep failed (non-fatal): ${e.getMessage}")
@@ -594,7 +595,7 @@ object Dedup {
 
   /** The cross-process cache entry holding a (kind, corpus) layout. */
   private[graft] def layoutEntry(dir: String, kind: String): java.io.File =
-    new java.io.File(graft.similarity.Ann.cachedIndexDir(dir, s"bkt-$kind"))
+    new java.io.File(DerivedStore.cachedIndexDir(dir, s"bkt-$kind"))
 
   /** Everything the layout CONTENT depends on, folded into the `_built`
     * marker: a format generation (bump on any persisted-shape change),
@@ -606,7 +607,7 @@ object Dedup {
   private def layoutWant(spark: SparkSession, dir: String, nb: Int): String =
     s"bkt-v1-nb$nb-k$K-h$NumHashes-b$Bands-r$RowsPerBand-p$P" +
       s"-n$NgramN-df$NgramMaxDf-ct$ContainTokens-canonv3\n" +
-      graft.similarity.Ann.dataFingerprint(spark, dir, "documents.parquet")
+      DerivedStore.dataFingerprint(spark, dir, "documents.parquet")
 
   /** Per-JVM serve-registration state: serve table name → the installed
     * generation id its catalog entry points at. A mismatch (another
@@ -618,9 +619,13 @@ object Dedup {
 
   /** Spec hook: wipe the per-JVM registration memory so a test can model
     * a FRESH PROCESS (no catalog entries, no registration state, shared
-    * cache files intact). Safe under parallel suites — a wiped entry is
-    * simply re-registered (idempotent DDL) on its owner's next serve. */
-  private[graft] def forgetServeRegistrations(): Unit = serveRegistrations.clear()
+    * cache files intact, and no entry counted as installed by this JVM).
+    * Safe under parallel suites — a wiped entry is simply re-registered
+    * (idempotent DDL) on its owner's next serve. */
+  private[graft] def forgetServeRegistrations(): Unit = {
+    serveRegistrations.clear()
+    DerivedStore.forgetInstalls()
+  }
 
   /** Spec seam for the serve-path race (r13 VERDICT item 5): invoked in
     * [[bucketedPair]]'s retry loop exactly in the window the retry
@@ -645,7 +650,9 @@ object Dedup {
     * dominant CPU of the two largest bench legs (layout_d4d/d4b build).
     * Freshness = the sibling's `_built` marker equals OUR want string
     * (layoutWant is kind-independent: same family constants, same
-    * resolved bucket count, same corpus fingerprint). The read is
+    * resolved bucket count, same corpus fingerprint), and THIS JVM
+    * installed it: a sibling another process left in the shared cache
+    * root does not seed a build here (run-scoped reuse). The read is
     * deliberately LOCKLESS: taking the sibling's build lock inside our
     * own build would order the two entries' locks both ways across kinds
     * — a cross-process deadlock — so a concurrent takedown/rebuild of
@@ -655,13 +662,10 @@ object Dedup {
                                 sibling: String, want: String)
       : Option[() => DataFrame] = {
     val entry = layoutEntry(dir, sibling)
-    val ok =
-      try new java.io.File(entry, "_built").exists() &&
-        readEntryFile(entry, "_built") == want
-      catch { case _: Exception => false }
-    if (!ok) None
-    else Some(() => spark.read.parquet(s"${entry.getPath}/sets")
-      .select(col("doc_id"), col("gs")))
+    if (DerivedStore.isFresh(entry, want) && DerivedStore.installedHere(entry, want))
+      Some(() => spark.read.parquet(s"${entry.getPath}/sets")
+        .select(col("doc_id"), col("gs")))
+    else None
   }
 
   /** The planted excerpt twins of [[containCorpus]] on their own — the
@@ -715,13 +719,10 @@ object Dedup {
     val entry = layoutEntry(dir, kind)
     val (setsName, candsName) = bucketedTableNames(dir, kind)
     val base = s"$dir/documents.parquet"
-    // takedown hooks, registered on EVERY call (not just builds): a
-    // deleteKeys on the corpus must reach the shared files AND this
-    // JVM's catalog entries, even in a process that only ever served
-    graft.sources.Store.registerDerived(base, entry.getPath) { () =>
-      graft.similarity.Ann.withBuildLock(entry)(
-        graft.similarity.Ann.deleteLocal(entry))
-    }
+    // catalog takedown hook, registered on EVERY call (not just builds):
+    // a deleteKeys on the corpus must reach this JVM's catalog entries,
+    // even in a process that only ever served (ensureFresh registers the
+    // shared files' hook the same way)
     graft.sources.Store.registerDerived(base, s"cat-$setsName") { () =>
       spark.sql(s"DROP TABLE IF EXISTS $setsName")
       spark.sql(s"DROP TABLE IF EXISTS $candsName")
@@ -741,8 +742,8 @@ object Dedup {
     var out: (DataFrame, DataFrame) = null
     while (out == null) {
       attempt += 1
-      graft.similarity.Ann.ensureFresh(entry, layoutWant(spark, dir, nb),
-        registerBase = None, force = forceOnce) { tmp =>
+      DerivedStore.ensureFresh(entry, layoutWant(spark, dir, nb),
+        registerBase = Some(base), force = forceOnce) { tmp =>
        val buildT0 = System.nanoTime()
        graft.ops.Legs.time(s"layout_$kind", "build") {
         // preferred source first (a fresh sibling layout's materialized
@@ -759,7 +760,7 @@ object Dedup {
             } catch { case e: Exception =>
               System.err.println(s"[dedup] layout_$kind: sibling-seeded " +
                 s"sets build failed (${e.getMessage}); recomputing from corpus")
-              graft.similarity.Ann.deleteLocal(new java.io.File(s"$tmp/sets"))
+              DerivedStore.deleteLocal(new java.io.File(s"$tmp/sets"))
               graft.sources.Store.writeBucketedExternal(
                 sets, "doc_id", nb, s"$tmp/sets")
             }
@@ -774,10 +775,6 @@ object Dedup {
           s"$nb\n$setsDdl\n$candsDdl".getBytes("UTF-8"))
         java.nio.file.Files.write(new java.io.File(tmp, "_gen").toPath,
           java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-        // source record for the orphaned-entry sweep (corpus deleted →
-        // layout must not outlive it)
-        java.nio.file.Files.write(new java.io.File(tmp, "_src").toPath,
-          base.getBytes("UTF-8"))
         bucketedBuildsByEntry.updateWith(entry.getName)(c => Some(c.getOrElse(0L) + 1L))
         ()
        }
@@ -786,7 +783,7 @@ object Dedup {
       forceOnce = false // a retry must not force-rebuild again
       serveRaceHook()
       try {
-        out = graft.similarity.Ann.withBuildLock(entry) {
+        out = DerivedStore.withBuildLock(entry) {
           val gen = readEntryFile(entry, "_gen")
           val fresh = serveRegistrations.get(setsName).contains(gen) &&
             spark.catalog.tableExists(setsName) && spark.catalog.tableExists(candsName)

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.sources.DerivedStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -53,13 +54,7 @@ object IncrementalDedup {
       StructField("owner", LongType) :+ StructField("bp", IntegerType))
 
   private def storeAt(spark: SparkSession, dir: String): DataFrame = {
-    val f = new java.io.File(dir)
-    val hasData = f.exists && {
-      val kids = f.listFiles
-      kids != null && kids.exists(k => !k.getName.startsWith("_") &&
-        !k.getName.startsWith("."))
-    }
-    if (hasData)
+    if (graft.sources.Store.hasLocalData(dir))
       spark.read.parquet(dir).select(
         col("band").cast("int") +:
           (0 until Dedup.RowsPerBand).map(r => col(s"k$r")) :+
@@ -181,14 +176,16 @@ object IncrementalDedup {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val width = maxId / 3 + 1
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("inc_dedup_store").toString
-    val parts = (0L until 3L).map { i =>
-      graft.ops.Legs.time(s"d_incremental_admit${if (algo == "md5") "" else "_fast"}",
-        s"batch$i")(
-        admitBatch(
-          docs.filter(col("doc_id") >= i * width &&
-            col("doc_id") < (i + 1) * width), storeDir, algo))
+    // one wiped-per-call scratch store per (corpus, algo, process): md5
+    // and xxh64 hashes never share a store
+    val parts = DerivedStore.withScratch(dir, s"inc-dedup-$algo") { storeDir =>
+      (0L until 3L).map { i =>
+        graft.ops.Legs.time(s"d_incremental_admit${if (algo == "md5") "" else "_fast"}",
+          s"batch$i")(
+          admitBatch(
+            docs.filter(col("doc_id") >= i * width &&
+              col("doc_id") < (i + 1) * width), storeDir, algo))
+      }
     }
     parts.reduce(_ unionAll _).orderBy("doc_id")
   }

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.Tables
+import graft.sources.DerivedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,23 +150,17 @@ object NgramIndex {
     * semantics one — any split hashes identically.) */
   def incrementalServe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    // one FIXED scratch dir per (source corpus, process) under the managed
-    // ANN cache root, cleared and rebuilt per call: the lifecycle is the
-    // thing being timed, but a fresh createTempDirectory per call leaked a
-    // full index copy into /tmp on every bench/spec invocation (3× per
-    // bench run) — now the footprint is bounded at one copy per process
-    // (NgramIndexSpec asserts it). Cross-JVM the pid suffix isolates
-    // rebuilds outright; within this JVM the build lock serializes the
-    // wipe+rebuild so two threads can't interleave a half-wiped index —
-    // a caller must still drain its returned (lazy) frame before the next
-    // same-process call wipes (bench/verify do).
-    val idx = graft.similarity.Ann.scratchDir(dir, "ngram-inc")
-    graft.similarity.Ann.withBuildLock(new java.io.File(idx)) {
-      graft.similarity.Ann.resetScratch(idx)
+    // one wiped-per-call scratch entry per (source corpus, process): the
+    // lifecycle is the thing being timed, and the footprint stays at one
+    // copy per process (NgramIndexSpec asserts it). A caller drains the
+    // returned (lazy) frame before the next same-process call wipes it
+    // (bench/verify do).
+    val idx = DerivedStore.withScratch(dir, "ngram-inc") { idx =>
       graft.ops.Legs.time("d_ngram_incremental", "build")(
         buildFrom(docs.filter(col("doc_id") % 10 =!= 0), idx))
       graft.ops.Legs.time("d_ngram_incremental", "upsert")(
         upsert(docs.filter(col("doc_id") % 10 === 0), idx))
+      idx
     }
     ngramJaccardIndexed(spark, idx)
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.sources.DerivedStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -916,13 +917,7 @@ object TextOps {
 
   private def selfStoreAt(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val f = new java.io.File(dir)
-    val hasData = f.exists && {
-      val kids = f.listFiles
-      kids != null && kids.exists(k => !k.getName.startsWith("_") &&
-        !k.getName.startsWith("."))
-    }
-    if (hasData)
+    if (graft.sources.Store.hasLocalData(dir))
       spark.read.parquet(dir)
         .select(col("g"), col("own"), col("own_doc"), col("gp").cast("int"))
     else
@@ -1040,19 +1035,16 @@ object TextOps {
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
     val maxId = docs.agg(max($"doc_id")).head().getLong(0)
     val width = maxId / 3 + 1
-    // the managed wiped-per-call scratch dir, NOT a fresh temp dir per
+    // the managed wiped-per-call scratch entry, NOT a fresh temp dir per
     // invocation: the store is corpus-sized ((g, own, own_doc) per
-    // distinct window) and this query runs in bench/verify/scale loops —
-    // the exact leak class the gram index's incrementalServe fixed
-    val storeDir = graft.similarity.Ann.scratchDir(dir, "selfdedup-store")
-    graft.similarity.Ann.withBuildLock(new java.io.File(storeDir)) {
-      graft.similarity.Ann.resetScratch(storeDir)
-    }
-    val parts = (0L until 3L).map { i =>
-      graft.ops.Legs.time("t_selfdedup_incremental", s"batch$i")(
-        selfDedupAdmitBatch(
-          docs.filter($"doc_id" >= i * width && $"doc_id" < (i + 1) * width),
-          storeDir))
+    // distinct window) and this query runs in bench/verify/scale loops
+    val parts = DerivedStore.withScratch(dir, "selfdedup-store") { storeDir =>
+      (0L until 3L).map { i =>
+        graft.ops.Legs.time("t_selfdedup_incremental", s"batch$i")(
+          selfDedupAdmitBatch(
+            docs.filter($"doc_id" >= i * width && $"doc_id" < (i + 1) * width),
+            storeDir))
+      }
     }
     parts.reduce(_ unionAll _).orderBy($"doc_id")
   }

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.Tables
+import graft.sources.DerivedStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -435,11 +436,12 @@ object Ann {
     * proves incremental maintenance ≡ full rebuild. */
   def ivfUpsertServe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val idx = java.nio.file.Files
-      .createTempDirectory("ivf_upsert_index").toString
     graft.functions.VectorExpressions.register(spark)
-    ivfIndexBuildFrom(quantizedRows(emb.filter(col("vec_id") % 3 =!= 0)), idx)
-    ivfIndexUpsert(emb.filter(col("vec_id") % 3 === 0), idx)
+    val idx = DerivedStore.withScratch(dir, "ivf-upsert") { idx =>
+      ivfIndexBuildFrom(quantizedRows(emb.filter(col("vec_id") % 3 =!= 0)), idx)
+      ivfIndexUpsert(emb.filter(col("vec_id") % 3 === 0), idx)
+      idx
+    }
     ivfTopKIndexed(spark, dir, idx)
   }
 
@@ -1179,20 +1181,6 @@ object Ann {
     pqScore(emb, collectCodebook(cents1), codes)
   }
 
-  /** Build-once/query-many entry points for the bench and verify
-    * harnesses: the index is built on first use into a session-external
-    * cache directory and every later call pays ONLY the query — which is
-    * the latency a production ANN service actually serves (`s_pq_topk` /
-    * `s_ivf_topk` bench entries, by contrast, book per-run training).
-    *
-    * The cache key is the source dir path, and freshness is BOTH a
-    * fingerprint of every parameter the trained artifact depends on AND
-    * a [[dataFingerprint]] of the corpus files themselves — a parameter
-    * change or any rewrite of the embeddings table (upsert, regeneration,
-    * `Store.deleteKeys` takedown) rebuilds instead of silently serving a
-    * stale index (AnnIndexSpec pins the takedown case). Results are
-    * pinned identical to the inline paths (AnnSpec), so the same oracle
-    * SQL gates both. */
   /** The leading generation tag must change whenever the FORMAT of any
     * persisted index artifact changes, not just its parameters — v2 was
     * the r10 gram-hash widening (gramSets keeps the full 60-bit md5
@@ -1205,220 +1193,27 @@ object Ann {
   private def trainingFingerprint: String =
     s"v3-d$Dim-q$QuantScale-m$PqM-k$PqK-p$IvfProbes-r$PqRerankN-t$PqTopN-a$AnnQueryIds"
 
-  /** Fingerprint of the corpus DATA the index serves: every visible file
-    * under the embeddings table folded as (relative path, length, mtime)
-    * into one digest — a pure LISTING pass, no data read, so it stays
-    * O(file count) at any corpus size. Any rewrite of the table — an
-    * upsert, a regeneration, and specifically a [[graft.sources.Store
-    * .deleteKeys]] takedown — replaces parquet files and changes this
-    * digest, so [[ensureIndex]] rebuilds instead of serving stale (or
-    * right-to-be-forgotten-deleted) vectors. Files inside `_`/`.`-prefixed
-    * trees (commit debris, manifests) are excluded, matching Spark's own
-    * visibility rules, so a vacuum or manifest refresh does not force a
-    * rebuild. */
-  private[graft] def dataFingerprint(spark: SparkSession, dir: String,
-                                     table: String = "embeddings.parquet"): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val base = fs.getFileStatus(root)
-    if (base.isFile) entries += s".:${base.getLen}:${base.getModificationTime}"
-    else {
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath.stripPrefix(root.toUri.getPath)
-        if (!rel.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
-          entries += s"$rel:${st.getLen}:${st.getModificationTime}"
-      }
-    }
-    entries.sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Root of the persisted-index cache: `GRAFT_ANN_CACHE_DIR` env, else
-    * the `graft.ann.cache.dir` system property, else a per-user
-    * `graft-<user>` directory under the JVM temp dir, owned by this user
-    * and mode 0700 — the temp dir itself is world-writable, and another
-    * local user must not be able to pre-plant index files. The default
-    * is re-checked on every call: a temp cleaner may delete it, and
-    * another user may then recreate it. */
-  private[graft] def cacheRoot: String =
-    sys.env.get("GRAFT_ANN_CACHE_DIR")
-      .orElse(sys.props.get("graft.ann.cache.dir"))
-      .getOrElse(defaultCacheRoot)
-
-  private[graft] def defaultCacheRoot: String = privateDir(java.nio.file.Paths.get(
-    System.getProperty("java.io.tmpdir"), s"graft-${System.getProperty("user.name")}"))
-
-  /** `dir`, created if missing, as a real directory (not a symlink) owned
-    * by the JVM's uid with mode 0700. A directory another uid owns is
-    * refused loudly: its contents could be planted. If `dir` cannot be
-    * created at all (read-only temp dir), the path is returned as is: its
-    * writes fail, and layout serves fall back to their inline plans. */
-  private[graft] def privateDir(dir: java.nio.file.Path): String = {
-    import java.nio.file.{FileAlreadyExistsException, Files, LinkOption}
-    import java.nio.file.attribute.PosixFilePermissions
-    val mode = PosixFilePermissions.fromString("rwx------")
-    try Files.createDirectory(dir, PosixFilePermissions.asFileAttribute(mode))
-    catch {
-      case _: FileAlreadyExistsException =>
-      case _: java.io.IOException if !Files.exists(dir, LinkOption.NOFOLLOW_LINKS) =>
-        return dir.toString
-    }
-    val uid = new com.sun.security.auth.module.UnixSystem().getUid
-    val owner = Files.getAttribute(dir, "unix:uid", LinkOption.NOFOLLOW_LINKS)
-      .asInstanceOf[Int].toLong
-    if (!Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS) || owner != uid)
-      throw new IllegalStateException(s"cache root $dir is not a directory " +
-        s"owned by uid $uid (owner: uid $owner); set GRAFT_ANN_CACHE_DIR " +
-        "to a private directory")
-    Files.setPosixFilePermissions(dir, mode)
-    dir.toString
-  }
-
-  private[graft] def cachedIndexDir(dir: String, kind: String): String = {
-    // full path (sanitized) PLUS a digest of the raw path: readable, and
-    // two source dirs can never alias one cache entry (hashCode or
-    // sanitization alone could collide)
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    s"$cacheRoot/graft-ann-index/$kind-$safe-$h"
-  }
-
-  private[graft] def deleteLocal(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteLocal))
-    f.delete()
-  }
-
-  /** A managed SCRATCH directory under the cache root for per-call
-    * rebuild-from-scratch lifecycles (`d_ngram_incremental`): one FIXED
-    * path per (source dir, kind, PROCESS), wiped on each call — so
-    * repeated bench / spec invocations reuse one footprint instead of
-    * leaking a fresh temp-dir index copy per run. The pid suffix (r10,
-    * the ADVICE race) keeps two JVMs rebuilding the same source corpus
-    * from clobbering each other's index mid-build — each process owns
-    * its copy outright; same-process callers must additionally
-    * serialize through [[withBuildLock]] (the wipe invalidates any
-    * in-flight lazy serve over the old content). Unlike [[ensureIndex]]
-    * entries there is no freshness marker: the caller rebuilds
-    * unconditionally (rebuilding IS what it measures).
+  /** Build-once/query-many entry points for the bench and verify
+    * harnesses: the index is built on first use into a
+    * [[graft.sources.DerivedStore]] entry and every later call pays ONLY
+    * the query — the latency a production ANN service actually serves
+    * (`s_pq_topk` / `s_ivf_topk` bench entries, by contrast, book per-run
+    * training).
     *
-    * Returns the PATH only — the caller wipes it inside its own
-    * [[withBuildLock]] (the lock is not reentrant, so the wipe cannot
-    * live here and be covered by the caller's critical section too). */
-  private[graft] def scratchDir(dir: String, kind: String): String = {
-    val pid = ProcessHandle.current().pid()
-    // reap DEAD processes' scratch copies on the way in: the pid suffix
-    // fixed the cross-JVM clobber race, but each JVM would otherwise
-    // leave one full index copy in the cache root forever — the
-    // unbounded-growth failure the fixed path originally eliminated,
-    // just relocated. Ownership is probed via the `_scratch` MARKER file
-    // [[resetScratch]] drops (holding the owning pid), never by parsing
-    // `-p<digits>-` out of the entry NAME: non-scratch cache entries
-    // embed the sanitized source path, which can itself contain a
-    // `-p<digits>-` fragment (a corpus dir like `/data/set-p2-v1`), and
-    // the r10 name-regex reaper would have deleted such a legitimate
-    // cached index on every scratch call.
-    Option(new java.io.File(s"$cacheRoot/graft-ann-index").listFiles())
-      .getOrElse(Array.empty).toSeq.filter(_.isDirectory)
-      .flatMap { d =>
-        val m = new java.io.File(d, "_scratch")
-        if (!m.exists()) None
-        else new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")
-          .trim.toLongOption.map(d -> _)
-      }
-      .filter { case (_, p) =>
-        p != pid && { val h = ProcessHandle.of(p); !(h.isPresent && h.get.isAlive) }
-      }
-      .foreach { case (d, _) => withBuildLock(d)(deleteLocal(d)) }
-    new java.io.File(cachedIndexDir(dir, s"$kind-p$pid")).getPath
-  }
-
-  /** Reap cache entries whose SOURCE CORPUS no longer exists (r12).
-    *
-    * Takedown hooks and data fingerprints govern entries whose corpus
-    * MUTATES, but an entry whose corpus is DELETED outright — a retired
-    * dataset, a spec's temp directory after OS cleanup — was immortal:
-    * nothing ever probes it again, so no freshness check ever runs, and
-    * the cache root accretes one full index/layout copy per dead corpus
-    * forever. Builds since r12 record their source path in a `_src`
-    * file (`_built`-gated, installed atomically with the entry); this
-    * sweep deletes, under the entry's build lock, every completed entry
-    * whose recorded source is a LOCAL path that no longer exists.
-    * Conservative by construction: entries without `_src` (pre-r12, or
-    * version-pinned roots governed by VersionedStore vacuum) and
-    * non-local sources (a scheme'd URI this process cannot cheaply
-    * probe) are never touched; an entry mid-build has no `_built` and
-    * is skipped. Corpus deletion IS the takedown signal here — the data
-    * of record is gone, so derived copies must not outlive it. Returns
-    * the reaped entry names. Called from the bucketed-pair device (one
-    * listdir per build/serve check — cheap) and available for ops. */
-  private[graft] def sweepOrphanedEntries(): Seq[String] = {
-    val root = new java.io.File(s"$cacheRoot/graft-ann-index")
-    // the lock-free pass only NOMINATES; the verdict is re-taken under
-    // the entry's build lock (below) — between scan and delete another
-    // process may recreate the corpus and rebuild the entry, and reaping
-    // that now-valid entry would force a spurious corpus-sized rebuild
-    val candidates = Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory).filter(isOrphanedEntry)
-    candidates.flatMap { d =>
-      withBuildLock(d) {
-        if (isOrphanedEntry(d)) { deleteLocal(d); Some(d.getName) } else None
-      }
-    }.sorted
-  }
-
-  /** True iff `d` is a COMPLETED cache entry whose recorded local source
-    * corpus no longer exists — evaluated twice by the sweep: once
-    * lock-free to nominate, once under the build lock to commit. */
-  private def isOrphanedEntry(d: java.io.File): Boolean = {
-    val src = new java.io.File(d, "_src")
-    new java.io.File(d, "_built").exists() && src.exists() && {
-      val path = new String(
-        java.nio.file.Files.readAllBytes(src.toPath), "UTF-8").trim
-      // ABSOLUTE local paths only: a relative source (some callers
-      // pass work-tree-relative corpus dirs) is CWD-dependent and a
-      // sweep from another directory would misjudge it; a scheme'd
-      // URI is a store this process cannot cheaply probe
-      val local = path.startsWith("/") ||
-        (path.startsWith("file:") && !path.contains("://"))
-      local && !new java.io.File(path.stripPrefix("file:")).exists()
-    }
-  }
-
-  /** Wipe-and-recreate a [[scratchDir]] path — called by the owner
-    * inside its build lock. Drops the `_scratch` ownership marker
-    * (owning pid) immediately after the mkdir, so the dead-pid reaper
-    * above can identify scratch entries without name parsing; the
-    * mkdir→marker window is a few microseconds inside the owner's build
-    * lock, and an unmarked orphan from a crash inside it is re-wiped by
-    * the next same-path resetScratch. */
-  private[graft] def resetScratch(path: String): Unit = {
-    val f = new java.io.File(path)
-    deleteLocal(f)
-    f.mkdirs()
-    java.nio.file.Files.write(new java.io.File(f, "_scratch").toPath,
-      ProcessHandle.current().pid().toString.getBytes("UTF-8"))
-    ()
-  }
-
-  /** Build-if-stale for the persisted index cache. Freshness = the
-    * `_built` marker carries BOTH the parameter fingerprint and the
-    * corpus [[dataFingerprint]]; either changing forces a rebuild.
-    * Builds are crash- and concurrency-safe: the index is written into a
-    * unique temp dir with the marker added LAST, then installed with a
-    * rename, all under an exclusive file lock — a reader either sees the
-    * complete old index, the complete new one, or no marker (and then
-    * queues on the lock to build), never a torn mix. */
+    * The cache key is the source dir path, and freshness is BOTH a
+    * fingerprint of every parameter the trained artifact depends on AND
+    * a `DerivedStore.dataFingerprint` of the corpus files themselves — a
+    * parameter change or any rewrite of the table (upsert, regeneration,
+    * `Store.deleteKeys` takedown) rebuilds instead of silently serving a
+    * stale index (AnnIndexSpec pins the takedown case). Results are
+    * pinned identical to the inline paths (AnnSpec), so the same oracle
+    * SQL gates both. */
   private[graft] def ensureIndex(spark: SparkSession, dir: String, kind: String,
                                  table: String = "embeddings.parquet")
                          (build: String => Unit): String =
-    ensureFresh(
-      new java.io.File(cachedIndexDir(dir, kind)),
-      trainingFingerprint + "\n" + dataFingerprint(spark, dir, table),
+    DerivedStore.ensureFresh(
+      new java.io.File(DerivedStore.cachedIndexDir(dir, kind)),
+      trainingFingerprint + "\n" + DerivedStore.dataFingerprint(spark, dir, table),
       registerBase = Some(s"$dir/$table"))(build)
 
   /** Version-PINNED index cache over a [[graft.sources.VersionedStore]]
@@ -1448,8 +1243,8 @@ object Ann {
     graft.sources.Store.registerVacuumHook(vroot, s"ann-index-cache")(
       _ => vacuumIndexCacheRetain(vroot,
         graft.sources.VersionedStore.versions(spark, vroot).toSet))
-    val entry = new java.io.File(cachedIndexDir(s"$vroot@v$version", kind))
-    val path = ensureFresh(
+    val entry = new java.io.File(DerivedStore.cachedIndexDir(s"$vroot@v$version", kind))
+    val path = DerivedStore.ensureFresh(
       entry,
       trainingFingerprint + s"\nvstore:v$version:" +
         graft.sources.VersionedStore.manifestFingerprint(spark, vroot, version),
@@ -1495,18 +1290,7 @@ object Ann {
   def vacuumIndexCache(vroot: String, keepLast: Int,
                        minIdleMillis: Long = 0L): Seq[String] = {
     require(keepLast >= 1, "must retain at least the newest pinned version")
-    val root = new java.io.File(s"$cacheRoot/graft-ann-index")
-    val entries = Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap { d =>
-        val vpin = new java.io.File(d, "_vpin")
-        if (!vpin.exists()) None
-        else new String(java.nio.file.Files.readAllBytes(vpin.toPath),
-          "UTF-8").split("\n", 2) match {
-          case Array(r, v) if r == vroot => v.trim.toLongOption.map(d -> _)
-          case _ => None
-        }
-      }
+    val entries = pinnedEntries(vroot)
     val keepVers = entries.map(_._2).distinct.sorted.takeRight(keepLast).toSet
     reapEntries(entries, keepVers, minIdleMillis)
   }
@@ -1519,21 +1303,17 @@ object Ann {
     * versions would survive every vacuum while `readAt` of their
     * versions can never succeed again. */
   def vacuumIndexCacheRetain(vroot: String, retained: Set[Long],
-                             minIdleMillis: Long = 0L): Seq[String] = {
-    val root = new java.io.File(s"$cacheRoot/graft-ann-index")
-    val entries = Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap { d =>
-        val vpin = new java.io.File(d, "_vpin")
-        if (!vpin.exists()) None
-        else new String(java.nio.file.Files.readAllBytes(vpin.toPath),
-          "UTF-8").split("\n", 2) match {
-          case Array(r, v) if r == vroot => v.trim.toLongOption.map(d -> _)
-          case _ => None
-        }
-      }
-    reapEntries(entries, retained, minIdleMillis)
-  }
+                             minIdleMillis: Long = 0L): Seq[String] =
+    reapEntries(pinnedEntries(vroot), retained, minIdleMillis)
+
+  /** Every cache entry pinned to `vroot`, with its pinned version. */
+  private def pinnedEntries(vroot: String): Seq[(java.io.File, Long)] =
+    DerivedStore.entries.flatMap { d =>
+      DerivedStore.readMarker(d, "_vpin").flatMap(_.split("\n", 2) match {
+        case Array(r, v) if r == vroot => v.trim.toLongOption.map(d -> _)
+        case _ => None
+      })
+    }
 
   private def reapEntries(entries: Seq[(java.io.File, Long)],
                           keepVers: Set[Long],
@@ -1542,73 +1322,10 @@ object Ann {
     val victims = entries.filterNot { case (d, v) =>
       keepVers(v) ||
         new java.io.File(d, "_vpin").lastModified() > idleFloor }
-    victims.foreach { case (d, _) => withBuildLock(d)(deleteLocal(d)) }
+    victims.foreach { case (d, _) =>
+      DerivedStore.withBuildLock(d)(DerivedStore.deleteLocal(d)) }
     victims.map(_._1.getName).sorted
   }
-
-  /** Shared build-if-stale core: marker check, JVM + cross-process build
-    * locks, temp-dir build with marker-last, atomic-rename install.
-    * `force = true` rebuilds even when the marker is fresh — the
-    * layout-fresh contract the bucketed-pair `reuse = false` callers keep
-    * (Verify's explicit `*_bucketed` cells measure build + serve); forced
-    * concurrent builders serialize on the lock and each installs a
-    * complete generation. */
-  private[graft] def ensureFresh(idx: java.io.File, want: String,
-                                 registerBase: Option[String],
-                                 force: Boolean = false)
-                                (build: String => Unit): String = {
-    def fresh: Boolean = {
-      val marker = new java.io.File(idx, "_built")
-      marker.exists() &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == want
-    }
-    if (!force && fresh) return idx.getPath
-    withBuildLock(idx) {
-      if (force || !fresh) { // re-check: the lock holder before us may have built it
-        val tmp = new java.io.File(idx.getParentFile,
-          s"${idx.getName}.build-${java.util.UUID.randomUUID().toString.take(8)}")
-        try {
-          build(tmp.getPath)
-          // record the SOURCE path before the marker: the orphan sweeper
-          // ([[sweepOrphanedEntries]]) reaps entries whose corpus is gone
-          registerBase.foreach(base =>
-            java.nio.file.Files.write(new java.io.File(tmp, "_src").toPath,
-              base.getBytes("UTF-8")))
-          java.nio.file.Files.write(new java.io.File(tmp, "_built").toPath,
-            want.getBytes("UTF-8"))
-          deleteLocal(idx)
-          require(tmp.renameTo(idx), s"could not install ANN index at $idx")
-          registerBase.foreach(base => graft.sources.Store.registerDerived(
-            base, idx.getPath)(() => deleteLocal(idx)))
-        } finally deleteLocal(tmp) // no-op after a successful rename
-      }
-    }
-    idx.getPath
-  }
-
-  /** Two locks around a cache-entry mutation: a JVM monitor first
-    * (FileChannel.lock THROWS on overlap from the same JVM instead of
-    * blocking), then the cross-process file lock — together one mutator
-    * at a time, anywhere on the host. Shared by [[ensureFresh]] and the
-    * versioned-corpus bootstrap in [[pqVersionedServe]], which without it
-    * could have two processes deleting the root out from under each
-    * other or observing a committed version before its source marker
-    * landed (torn state cached forever by [[ensureIndexAt]]). */
-  private[graft] def withBuildLock[T](idx: java.io.File)(body: => T): T = {
-    val mon = jvmBuildLocks.computeIfAbsent(idx.getPath, _ => new Object)
-    mon.synchronized {
-      idx.getParentFile.mkdirs()
-      val raf = new java.io.RandomAccessFile(
-        new java.io.File(idx.getParentFile, s".${idx.getName}.lock"), "rw")
-      try {
-        val lock = raf.getChannel.lock()
-        try body finally lock.release()
-      } finally raf.close()
-    }
-  }
-
-  private val jvmBuildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** [[pqTopKIndexed]] over a cached [[pqIndexBuild]]: first call trains,
     * every later call times pure query latency. */
@@ -1642,27 +1359,17 @@ object Ann {
     * index — the oracle is the UNMODIFIED full-corpus PQ SQL, so the
     * hash gate proves snapshot-pinned serving ≡ inline end-to-end (the
     * `s_ivf_upsert` device applied to snapshot consistency). The
-    * versioned root lives in the cache dir keyed by the corpus data
-    * fingerprint, so repeat runs re-serve the same committed version
-    * instead of stacking identical commits and rebuilding. */
+    * versioned root is itself a derived-store entry keyed by the corpus
+    * data fingerprint — committed in the install's temp dir (manifests
+    * hold root-relative names) — so repeat runs re-serve the same
+    * committed version instead of stacking identical commits and
+    * rebuilding. */
   def pqVersionedServe(spark: SparkSession, dir: String): DataFrame = {
-    val root = cachedIndexDir(dir, "vcorpus")
-    val want = dataFingerprint(spark, dir)
-    val marker = new java.io.File(root, "_source")
-    def reuse = marker.exists() &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == want &&
-      graft.sources.VersionedStore.latestVersion(spark, root).nonEmpty
-    // the bootstrap mutates the root (delete + commit + marker), so it
-    // runs under the same JVM + cross-process locks as ensureFresh — a
-    // concurrent process either sees the complete bootstrapped root (the
-    // marker lands LAST, after the commit) or queues here; never a torn
-    // root cached by ensureIndexAt
-    if (!reuse) withBuildLock(new java.io.File(root)) {
-      if (!reuse) { // re-check: the lock holder before us may have bootstrapped
-        deleteLocal(new java.io.File(root))
-        graft.sources.VersionedStore.commitAppend(Tables.embeddings(spark, dir), root)
-        java.nio.file.Files.write(marker.toPath, want.getBytes("UTF-8"))
-      }
+    val root = DerivedStore.ensureFresh(
+      new java.io.File(DerivedStore.cachedIndexDir(dir, "vcorpus")),
+      DerivedStore.dataFingerprint(spark, dir), registerBase = None) { tmp =>
+      graft.sources.VersionedStore.commitAppend(Tables.embeddings(spark, dir), tmp)
+      ()
     }
     val v = graft.sources.VersionedStore.latestVersion(spark, root).get
     pqTopKCachedAt(spark, root, v)

@@ -19,15 +19,16 @@ import org.apache.spark.sql.types.StructType
 object Store {
 
   /** Derived-store lineage registry: serve paths built FROM a base table
-    * (persisted ANN index caches, bucketed candidate tables, any
-    * materialized view) register an invalidation hook keyed by the base
-    * path, and [[deleteKeys]] fires every hook for its path after the
-    * rewrite — so a takedown reaches the derived copies, not just the
-    * table of record. The registry is process-local (a cluster deployment
-    * would persist it next to the derived store); the ANN index cache
-    * additionally carries a cross-process data fingerprint in its
-    * `_built` marker, so even an unregistered JVM rebuilds rather than
-    * serving deleted vectors. Hooks are idempotent deletes by contract. */
+    * ([[DerivedStore]] entries — persisted ANN index caches, bucketed
+    * layouts — and any catalog state over them) register an invalidation
+    * hook keyed by the base path, and [[deleteKeys]] fires every hook for
+    * its path after the rewrite — so a takedown reaches the derived
+    * copies, not just the table of record. The registry is process-local
+    * (a cluster deployment would persist it next to the derived store);
+    * a [[DerivedStore]] entry additionally carries a cross-process data
+    * fingerprint in its freshness marker, so even an unregistered JVM
+    * rebuilds rather than serving deleted rows. Hooks are idempotent
+    * deletes by contract. */
   private val derivedHooks =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, () => Unit]]()
 
@@ -102,9 +103,7 @@ object Store {
           s"writes '$format' — its stored owners would silently stop " +
           "matching new batches; rebuild the store (or run the matching build)")
     } else {
-      val hasData = d.exists && Option(d.listFiles).exists(_.exists(k =>
-        !k.getName.startsWith("_") && !k.getName.startsWith(".")))
-      require(!hasData,
+      require(!hasLocalData(dir),
         s"append store at $dir has content but no _format marker (written " +
           s"by a pre-marker build, possibly pre-NFC hashes) — rebuild it; " +
           s"this build would append '$format' hashes that cannot match")
@@ -113,6 +112,11 @@ object Store {
       ()
     }
   }
+
+  /** Does local store dir `dir` hold anything besides `_`/`.` markers? */
+  private[graft] def hasLocalData(dir: String): Boolean =
+    Option(new java.io.File(dir).listFiles).exists(_.exists(k =>
+      !k.getName.startsWith("_") && !k.getName.startsWith(".")))
 
   /** [[ensureStoreFormat]]'s FULL-REBUILD sibling: a writer that
     * overwrites the store's entire content (NgramIndex.buildFrom) may
@@ -214,13 +218,7 @@ object Store {
     // catalog entry — clear it or CTAS refuses (LOCATION_ALREADY_EXISTS)
     val loc = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
+    DerivedStore.deleteLocal(loc)
     // repartition ON the bucket hash first: without it every write task
     // emits a file per bucket it touches (tasks × nBuckets small files —
     // the incremental-admit lesson); with it exactly one file per bucket,

@@ -66,9 +66,11 @@ object TextFormats {
                         back: (SparkSession, String, StructType) => DataFrame,
                         tag: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory(s"rt_$tag").toString
-    via(docs, tmp)
-    back(spark, tmp, graft.Tables.documentsSchema)
+    // the writers overwrite their target: a child of the scratch entry
+    DerivedStore.withScratch(dir, s"rt-$tag") { tmp =>
+      via(docs, s"$tmp/data")
+      back(spark, s"$tmp/data", graft.Tables.documentsSchema)
+    }
       // CSV has no portable encoding of "" distinct from NULL; the
       // documents corpus carries no null text, so restoring empties is
       // exact (and a no-op on the JSONL/ORC paths, which round-trip "")

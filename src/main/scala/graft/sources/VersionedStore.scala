@@ -570,10 +570,11 @@ object VersionedStore {
   }
 
   /** Digest of the manifest CONTENT at `version` — the freshness key for
-    * version-pinned derived stores (`Ann.ensureIndexAt`): a manifest is
-    * immutable except under [[purgeKeys]], whose in-place remap is exactly
-    * the one event that must invalidate a v-pinned index (erasure reaches
-    * derived serve paths), so digest-changed ⇔ rebuild-required. O(manifest
+    * version-pinned derived stores (`Ann.ensureIndexAt`, installed by
+    * [[DerivedStore.ensureFresh]]): a manifest is immutable except under
+    * [[purgeKeys]], whose in-place remap is exactly the one event that
+    * must invalidate a v-pinned index (erasure reaches derived serve
+    * paths), so digest-changed ⇔ rebuild-required. O(manifest
     * bytes), no data files touched. */
   def manifestFingerprint(spark: SparkSession, root: String, version: Long): String = {
     val fs = fsOf(spark, root)
@@ -690,17 +691,18 @@ object VersionedStore {
     * the orders table, so the hash gate proves the snapshot isolation,
     * not just the arithmetic. */
   def timeTravelDemo(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("vstore_demo").toString
     val orders = graft.Tables.orders(spark, dir)
     val cut = lit(java.sql.Timestamp.valueOf("1995-07-01 00:00:00"))
-    val v1 = commitAppend(orders.filter(col("o_orderdate") < cut), root)
-    val v2 = commitAppend(orders.filter(col("o_orderdate") >= cut), root)
-    def aggOf(v: Long) = readAt(spark, root, v)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(graft.ops.Num.micros(col("o_totalprice"))).as("total_micros"))
-      .withColumn("version", lit(v).cast("int"))
-    aggOf(v1).unionByName(aggOf(v2))
+    DerivedStore.withScratch(dir, "vstore-demo") { root =>
+      val v1 = commitAppend(orders.filter(col("o_orderdate") < cut), root)
+      val v2 = commitAppend(orders.filter(col("o_orderdate") >= cut), root)
+      def aggOf(v: Long) = readAt(spark, root, v)
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(graft.ops.Num.micros(col("o_totalprice"))).as("total_micros"))
+        .withColumn("version", lit(v).cast("int"))
+      aggOf(v1).unionByName(aggOf(v2))
+    }
       .select(col("version"), col("o_orderstatus"),
         col("n_orders"), col("total_micros"))
       .orderBy("version", "o_orderstatus")
@@ -728,12 +730,13 @@ object VersionedStore {
     * that cannot match (the spec separately proves it discards most of
     * them). */
   def zonemapPruneDemo(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("vstore_zm").toString
     val orders = graft.Tables.orders(spark, dir)
-    val v = commitAppend(orders.repartitionByRange(8, col("o_orderkey")),
-      root, statsCol = Some("o_orderkey"))
     val (lo, hi) = (1000L, 3000L)
-    readAtPruned(spark, root, v, lo, hi)
+    DerivedStore.withScratch(dir, "vstore-zm") { root =>
+      readAtPruned(spark, root, commitAppend(
+        orders.repartitionByRange(8, col("o_orderkey")), root,
+        statsCol = Some("o_orderkey")), lo, hi)
+    }
       .filter(col("o_orderkey").between(lo, hi))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -757,8 +760,8 @@ object VersionedStore {
     * landed yet, so the horizon must exceed the longest possible commit
     * (the [[Store.vacuum]] rule). Returns the deleted file names,
     * including any derived-store entries reaped by registered retention
-    * hooks: version-pinned serve caches (`Ann.ensureIndexAt`) register
-    * through [[Store.registerVacuumHook]], and this vacuum fires them
+    * hooks: version-pinned [[DerivedStore]] entries (`Ann.ensureIndexAt`)
+    * register through [[Store.registerVacuumHook]], and this vacuum fires them
     * with the same `keepLast` — one call governs the manifests AND the
     * index copies pinned to the dropped versions (r10; previously a
     * manual two-call protocol). */

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 import org.apache.spark.sql.functions._
 import graft.similarity.Ann
 import graft.sources.Store
@@ -14,7 +16,7 @@ class AnnIndexSpec extends SparkTestBase {
   /** Stage the sf embeddings as a PARTITIONED table in a fresh dir, so
     * deleteKeys can rewrite it partition-wise like a production corpus. */
   private def stageEmbeddings(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("ann_takedown").toString
+    val dir = tempDir("ann_takedown")
     Tables.embeddings(spark, sfDir)
       .withColumn("pt", (col("vec_id") % 4).cast("int"))
       .write.partitionBy("pt").parquet(s"$dir/embeddings.parquet")
@@ -26,7 +28,7 @@ class AnnIndexSpec extends SparkTestBase {
     // entry NAME: a cached index whose sanitized source path happens to
     // contain `-p<digits>-` (corpus dir like /data/set-p2024-v1) must
     // survive every reap — the r10 name-regex reaper deleted it
-    val parent = new java.io.File(Ann.scratchDir(sfDir, "reap-probe"))
+    val parent = new java.io.File(DerivedStore.scratchDir(sfDir, "reap-probe"))
       .getParentFile
     parent.mkdirs()
     val dead = new java.io.File(parent, "fixture-dead-scratch-entry")
@@ -41,7 +43,7 @@ class AnnIndexSpec extends SparkTestBase {
     val oldShape = new java.io.File(parent, "ngram-inc-p999999999-x")
     oldShape.mkdirs()
     try {
-      Ann.scratchDir(sfDir, "reap-probe2") // any scratchDir call reaps
+      DerivedStore.scratchDir(sfDir, "reap-probe2") // any scratchDir call reaps
       assert(!dead.exists(), "marker-owned dead-pid scratch must be reaped")
       assert(lookalike.isDirectory,
         "an unmarked entry with a pid-shaped NAME fragment must survive")
@@ -57,7 +59,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("deleteKeys on the corpus invalidates the cached PQ index") {
     val dir = stageEmbeddings()
-    val marker = new java.io.File(Ann.cachedIndexDir(dir, "pq"), "_built")
+    val marker = new java.io.File(DerivedStore.cachedIndexDir(dir, "pq"), "_built")
 
     val before = Ann.pqTopKCached(spark, dir).collect()
     assert(marker.exists(), "first call must build and mark the index")
@@ -106,42 +108,42 @@ class AnnIndexSpec extends SparkTestBase {
     import java.nio.file.{Files, LinkOption, Paths}
     import java.nio.file.attribute.PosixFilePermissions.{fromString, toString => modeOf}
     val user = System.getProperty("user.name")
-    val root = Paths.get(Ann.defaultCacheRoot)
+    val root = Paths.get(DerivedStore.defaultCacheRoot)
     assert(root == Paths.get(System.getProperty("java.io.tmpdir"), s"graft-$user"))
     assert(Files.isDirectory(root, LinkOption.NOFOLLOW_LINKS))
     assert(Files.getAttribute(root, "unix:uid", LinkOption.NOFOLLOW_LINKS) ==
       new com.sun.security.auth.module.UnixSystem().getUid.toInt)
     assert(modeOf(Files.getPosixFilePermissions(root)) == "rwx------")
 
-    val parent = Files.createTempDirectory("cache_root_mode")
+    val parent = java.nio.file.Paths.get(tempDir("cache_root_mode"))
     // created fresh at 0700; an own directory left wider is tightened
     val fresh = parent.resolve("fresh")
-    Ann.privateDir(fresh)
+    DerivedStore.privateDir(fresh)
     assert(modeOf(Files.getPosixFilePermissions(fresh)) == "rwx------")
     val wide = Files.createDirectory(parent.resolve("wide"))
     Files.setPosixFilePermissions(wide, fromString("rwxrwxrwx"))
-    Ann.privateDir(wide)
+    DerivedStore.privateDir(wide)
     assert(modeOf(Files.getPosixFilePermissions(wide)) == "rwx------")
     // a symlink planted at the path is refused, not followed
     val target = Files.createDirectory(parent.resolve("target"))
     val link = Files.createSymbolicLink(parent.resolve("link"), target)
-    intercept[IllegalStateException](Ann.privateDir(link))
+    intercept[IllegalStateException](DerivedStore.privateDir(link))
   }
 
   test("two source dirs never alias one cache entry") {
     val a = stageEmbeddings(); val b = stageEmbeddings()
-    assert(Ann.cachedIndexDir(a, "pq") != Ann.cachedIndexDir(b, "pq"))
+    assert(DerivedStore.cachedIndexDir(a, "pq") != DerivedStore.cachedIndexDir(b, "pq"))
   }
 
   test("ivf upsert equals a full rebuild, replays clean, spares cold cells") {
     val emb = Tables.embeddings(spark, sfDir)
-    val idx = java.nio.file.Files.createTempDirectory("ivf_up").toString
+    val idx = tempDir("ivf_up")
     Ann.ivfIndexBuild(spark, sfDir, idx) // full build = the expectation
     val full = Ann.ivfTopKIndexed(spark, sfDir, idx).collect().map(_.toSeq)
     // build WITHOUT one whole label cell, then upsert it back in
     val victims = emb.filter(col("label") === 0)
-    val idx2 = java.nio.file.Files.createTempDirectory("ivf_up2").toString
-    val baseDir = java.nio.file.Files.createTempDirectory("ivf_base").toString
+    val idx2 = tempDir("ivf_up2")
+    val baseDir = tempDir("ivf_base")
     emb.filter(col("label") =!= 0).write.parquet(s"$baseDir/embeddings.parquet")
     Ann.ivfIndexBuild(spark, baseDir, idx2)
     val untouched = new java.io.File(s"$idx2/cells/label=3")
@@ -165,17 +167,17 @@ class AnnIndexSpec extends SparkTestBase {
   test("streaming index maintenance serves exactly the full-rebuild index") {
     import graft.streaming.EventStreams
     val emb = Tables.embeddings(spark, sfDir)
-    val idxFull = java.nio.file.Files.createTempDirectory("ivf_sfull").toString
+    val idxFull = tempDir("ivf_sfull")
     Ann.ivfIndexBuild(spark, sfDir, idxFull)
     val full = Ann.ivfTopKIndexed(spark, sfDir, idxFull).collect().map(_.toSeq).toSeq
 
     // index built on two thirds; the last third arrives as a stream
-    val baseDir = java.nio.file.Files.createTempDirectory("ivf_sbase").toString
+    val baseDir = tempDir("ivf_sbase")
     emb.filter(col("vec_id") % 3 =!= 0).write.parquet(s"$baseDir/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("ivf_sidx").toString
+    val idx = tempDir("ivf_sidx")
     Ann.ivfIndexBuild(spark, baseDir, idx)
 
-    val src = java.nio.file.Files.createTempDirectory("ivf_ssrc").toString
+    val src = tempDir("ivf_ssrc")
     val arriving = emb.filter(col("vec_id") % 3 === 0)
     val midId = arriving.agg(max(col("vec_id"))).head().getLong(0) / 2
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtimePlus: Long): Unit = {
@@ -196,7 +198,7 @@ class AnnIndexSpec extends SparkTestBase {
       val q = EventStreams.indexMaintenanceSink(stream, idx, chk)
       q.processAllAvailable(); q.stop()
     }
-    val chk = java.nio.file.Files.createTempDirectory("ivf_schk").toString
+    val chk = tempDir("ivf_schk")
     run(chk)
     def served = Ann.ivfTopKIndexed(spark, sfDir, idx).collect().map(_.toSeq).toSeq
     assert(served == full,
@@ -206,7 +208,7 @@ class AnnIndexSpec extends SparkTestBase {
     assert(served == full)
     // cold restart (checkpoint lost): every microbatch REPLAYS — the
     // key-deduplicated upsert makes the replays no-ops
-    run(java.nio.file.Files.createTempDirectory("ivf_schk2").toString)
+    run(tempDir("ivf_schk2"))
     assert(served == full)
   }
 
@@ -214,18 +216,18 @@ class AnnIndexSpec extends SparkTestBase {
     import graft.streaming.EventStreams
     val emb = Tables.embeddings(spark, sfDir)
     // expectation: batch pqIndexAppend of the last third onto a 2/3 build
-    val baseDir = java.nio.file.Files.createTempDirectory("pq_sbase").toString
+    val baseDir = tempDir("pq_sbase")
     emb.filter(col("vec_id") % 3 =!= 0).write.parquet(s"$baseDir/embeddings.parquet")
-    val idxBatch = java.nio.file.Files.createTempDirectory("pq_sbatch").toString
+    val idxBatch = tempDir("pq_sbatch")
     Ann.pqIndexBuild(spark, baseDir, idxBatch)
     val arriving = emb.filter(col("vec_id") % 3 === 0)
     Ann.pqIndexAppend(arriving.select(col("vec_id"), col("embedding")), idxBatch)
     val expect = Ann.pqTopKIndexed(spark, sfDir, idxBatch).collect().map(_.toSeq).toSeq
 
     // same third arrives as two microbatches through the sink
-    val idx = java.nio.file.Files.createTempDirectory("pq_sidx").toString
+    val idx = tempDir("pq_sidx")
     Ann.pqIndexBuild(spark, baseDir, idx)
-    val src = java.nio.file.Files.createTempDirectory("pq_ssrc").toString
+    val src = tempDir("pq_ssrc")
     val midId = arriving.agg(max(col("vec_id"))).head().getLong(0) / 2
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtimePlus: Long): Unit = {
       df.coalesce(1).write.parquet(s"$src/$name")
@@ -245,27 +247,27 @@ class AnnIndexSpec extends SparkTestBase {
       val q = EventStreams.pqMaintenanceSink(stream, idx, chk)
       q.processAllAvailable(); q.stop()
     }
-    run(java.nio.file.Files.createTempDirectory("pq_schk").toString)
+    run(tempDir("pq_schk"))
     def served = Ann.pqTopKIndexed(spark, sfDir, idx).collect().map(_.toSeq).toSeq
     assert(served == expect,
       "streamed frozen-codebook appends must equal the batch append")
     // cold restart: both microbatches replay; key-deduplicated code
     // upsert + pure frozen-codebook encoding make them no-ops
-    run(java.nio.file.Files.createTempDirectory("pq_schk2").toString)
+    run(tempDir("pq_schk2"))
     assert(served == expect)
   }
 
   test("pq append: frozen-codebook encoding matches the build encoder") {
     val emb = Tables.embeddings(spark, sfDir)
     // subset-built index, rest appended with frozen codebooks
-    val idxA = java.nio.file.Files.createTempDirectory("pq_app_a").toString
-    val baseDir = java.nio.file.Files.createTempDirectory("pq_base").toString
+    val idxA = tempDir("pq_app_a")
+    val baseDir = tempDir("pq_base")
     emb.filter(col("vec_id") % 3 =!= 0)
       .write.parquet(s"$baseDir/embeddings.parquet")
     Ann.pqIndexBuild(spark, baseDir, idxA)
     Ann.pqIndexAppend(emb.filter(col("vec_id") % 3 === 0), idxA)
     // same codebooks, ALL vectors encoded through the append path alone
-    val idxC = java.nio.file.Files.createTempDirectory("pq_app_c").toString
+    val idxC = tempDir("pq_app_c")
     spark.read.parquet(s"$idxA/codebooks")
       .write.parquet(s"$idxC/codebooks")
     Ann.pqIndexAppend(emb, idxC)
@@ -302,5 +304,32 @@ class AnnIndexSpec extends SparkTestBase {
       val inline = Ann.pqTopK(spark, dir).collect().map(_.toSeq).toSet
       assert(results(0) == inline)
     } finally pool.shutdown()
+  }
+
+  test("a takedown hook deletes its entry only under the entry's build lock") {
+    // the hook must not tear an entry another thread holds the lock on
+    // (an install in flight, a locked payload read)
+    val dir = tempDir("ann_hook_lock")
+    Tables.embeddings(spark, sfDir).limit(10).write.parquet(s"$dir/embeddings.parquet")
+    val entry = new java.io.File(Ann.ensureIndex(spark, dir, "hooklock")(
+      tmp => new java.io.File(tmp).mkdirs()))
+    val built = new java.io.File(entry, "_built")
+    assert(built.exists(), "entry installed")
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() =>
+      DerivedStore.withBuildLock(entry) { held.countDown(); release.await() })
+    holder.start()
+    held.await()
+    val takedown = new Thread(() => { Store.invalidateDerived(s"$dir/embeddings.parquet"); () })
+    takedown.start()
+    takedown.join(200)
+    try {
+      assert(takedown.isAlive, "the takedown must wait for the build lock")
+      assert(built.exists(), "nothing is deleted while the lock is held")
+    } finally release.countDown()
+    takedown.join()
+    holder.join()
+    assert(!entry.exists(), "the takedown deletes the entry once the lock is free")
   }
 }

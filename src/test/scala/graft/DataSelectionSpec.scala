@@ -152,7 +152,7 @@ class DataSelectionSpec extends SparkTestBase {
     // a degenerate quality distribution: every doc shares one q value, so
     // ALL P−1 boundaries land inside the same group and each needs its
     // own intra-group cut — the case a q-keyed cut map would collapse
-    val dir = java.nio.file.Files.createTempDirectory("curr_skew").toString
+    val dir = tempDir("curr_skew")
     (1L to 10L).map(i => (i, "same prose for every doc", "en", "web", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -235,7 +235,7 @@ class DataSelectionSpec extends SparkTestBase {
 
   test("temperature mix flattens a 9:1 source skew to sqrt's 3:1") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tmix").toString
+    val dir = tempDir("tmix")
     val docs = (1 to 900).map(i => (i.toLong, s"doc $i", "en", "big", 10L)) ++
                (1 to 100).map(i => (900L + i, s"doc b$i", "en", "small", 10L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -268,7 +268,7 @@ class DataSelectionSpec extends SparkTestBase {
       assert(flag == ref, s"$d: integer flag $flag != float z-test $ref")
     }
     // planted spike: one day with 30x the events of every other day
-    val dir = java.nio.file.Files.createTempDirectory("anomaly").toString
+    val dir = tempDir("anomaly")
     val base = (1 to 28).flatMap { d =>
       (1 to 10).map(i => (d.toLong * 100 + i,
         java.sql.Timestamp.valueOf(f"2024-01-$d%02d 01:00:00"),
@@ -302,7 +302,7 @@ class DataSelectionSpec extends SparkTestBase {
   test("domain cap: a 250k-space document keeps prose_bp in range (no int wrap)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("dcap_big").toString
+    val dir = tempDir("dcap_big")
     // > ~214k spaces wrapped the int ×10000 product negative before the
     // long fix, corrupting prose_bp and the folded rank key
     val big = ("word " * 250000).trim
@@ -322,7 +322,7 @@ class DataSelectionSpec extends SparkTestBase {
   test("leakage split: exact-dup groups never straddle a split boundary") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("lk_split").toString
+    val dir = tempDir("lk_split")
     // 3,000 docs; every third text is a byte-identical copy of the one
     // two ids earlier — planted dup groups of size 2 spanning id ranges
     val docs = (0L until 3000L).map { i =>

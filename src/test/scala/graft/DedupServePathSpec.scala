@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 /** Serve-path hardening specs (r13 VERDICT items 3/5/6): the bucketed
   * layouts' per-call overhead segment — gated sweeps, lock, `_gen`/
   * `_meta` reads, DDL registration, retries — is measured, bounded in
@@ -7,12 +9,6 @@ package graft
   * retry loop exists for. */
 class DedupServePathSpec extends SparkTestBase {
   import graft.dedup.Dedup
-  import graft.similarity.Ann
-
-  private def rmr(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmr))
-    f.delete(); ()
-  }
 
   test("serve retry survives a concurrent force-rebuild deleting the entry mid-serve") {
     // The window: another PROCESS force-rebuilds (delete → rebuild →
@@ -22,7 +18,7 @@ class DedupServePathSpec extends SparkTestBase {
     // API here; the seam injects the foreign delete exactly in the
     // protected window (thread-scoped so parallel suites' serves pass
     // through untouched).
-    val dir = java.nio.file.Files.createTempDirectory("serve_race").toString
+    val dir = tempDir("serve_race")
     Tables.documents(spark, sfDir).limit(40)
       .write.parquet(s"$dir/documents.parquet")
     try {
@@ -35,7 +31,7 @@ class DedupServePathSpec extends SparkTestBase {
       val hits = new java.util.concurrent.atomic.AtomicInteger(0)
       Dedup.serveRaceHook = () =>
         if ((Thread.currentThread() eq me) && hits.incrementAndGet() == 1)
-          Ann.deleteLocal(entry) // unlocked, as the foreign process's install does
+          DerivedStore.deleteLocal(entry) // unlocked, as the foreign process's install does
       val got =
         try Dedup.ngramJaccardBucketedAttach(spark, dir, reuse = true)
           .collect().map(_.toSeq.toString).sorted.toSeq
@@ -45,14 +41,14 @@ class DedupServePathSpec extends SparkTestBase {
       assert(Dedup.bucketedBuildsFor(dir, "d4b") == buildsBefore + 1,
         "the retry rebuilds the deleted layout exactly once")
       assert(got == expect, "the served result is unchanged by the race")
-    } finally rmr(new java.io.File(dir))
+    } finally DerivedStore.deleteLocal(new java.io.File(dir))
   }
 
   test("forced rebuilds interleaved with serves never fail and keep results stable") {
     // the in-JVM flavor of the same churn: generation flips under the
     // serve path's registration cache; every serve must answer and
     // answer identically
-    val dir = java.nio.file.Files.createTempDirectory("serve_churn").toString
+    val dir = tempDir("serve_churn")
     Tables.documents(spark, sfDir).limit(30)
       .write.parquet(s"$dir/documents.parquet")
     try {
@@ -66,7 +62,7 @@ class DedupServePathSpec extends SparkTestBase {
           .collect().map(_.toSeq.toString).sorted.toSeq
         assert(got == expect, "serve across generation flips is stable")
       }
-    } finally rmr(new java.io.File(dir))
+    } finally DerivedStore.deleteLocal(new java.io.File(dir))
   }
 
   test("governance sweeps are gated: back-to-back serves sweep at most once per interval") {
@@ -117,8 +113,7 @@ class DedupServePathSpec extends SparkTestBase {
     // parallel suites' jobs never pollute the count.
     val sizes = Seq(100, 500)
     val results = sizes.map { nDocs =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"serve_zerojob_$nDocs").toString
+      val dir = tempDir(s"serve_zerojob_$nDocs")
       Tables.documents(spark, sfDir).limit(nDocs)
         .write.parquet(s"$dir/documents.parquet")
       try {
@@ -150,7 +145,7 @@ class DedupServePathSpec extends SparkTestBase {
         assert(!legs.contains("layout_d4b.build"),
           "the zero-job call must be a warm serve, not a rebuild")
         (nDocs, jobs.get(), callSec)
-      } finally rmr(new java.io.File(dir))
+      } finally DerivedStore.deleteLocal(new java.io.File(dir))
     }
     results.foreach { case (n, j, _) =>
       assert(j == 0,

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -92,7 +94,7 @@ class DedupSpec extends SparkTestBase {
     // reuse=true freshness (the r10 gap): an IN-PLACE corpus rewrite —
     // append/regeneration, which fires no Store.deleteKeys hook — must
     // rebuild instead of serving the stale bucketed tables
-    val dir = java.nio.file.Files.createTempDirectory("bucket_fresh").toString
+    val dir = tempDir("bucket_fresh")
     // per-ENTRY build counts (r11 ADVICE): suites share one parallel JVM,
     // so asserting exact values of the GLOBAL counter raced any
     // concurrent bucketedPair build from another suite — the private
@@ -126,7 +128,7 @@ class DedupSpec extends SparkTestBase {
     // "fresh process" is a session with NO catalog entries and NO serve
     // registration — exactly the state a new driver starts in (the
     // shared cache entry is the only thing that persists)
-    val dir = java.nio.file.Files.createTempDirectory("bucket_xproc").toString
+    val dir = tempDir("bucket_xproc")
     Tables.documents(spark, sfDir).limit(40)
       .write.parquet(s"$dir/documents.parquet")
     val first = Dedup.ngramJaccardBucketedAttach(spark, dir, reuse = true)
@@ -145,13 +147,8 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("a deleted corpus's cache entry is reaped; living and relative-source entries survive") {
-    import graft.similarity.Ann
-    def rmr(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmr))
-      f.delete(); ()
-    }
     // entry whose corpus will be DELETED outright
-    val dir = java.nio.file.Files.createTempDirectory("sweep_corpus").toString
+    val dir = tempDir("sweep_corpus")
     Tables.documents(spark, sfDir).limit(30)
       .write.parquet(s"$dir/documents.parquet")
     Dedup.ngramJaccardBucketedAttach(spark, dir, reuse = true).collect()
@@ -163,19 +160,19 @@ class DedupSpec extends SparkTestBase {
     assert(living.exists)
     // control 2: a synthetic entry with a RELATIVE source record — the
     // sweep must not judge CWD-dependent paths
-    val rel = new java.io.File(s"${Ann.cacheRoot}/graft-ann-index/bkt-spec-relsrc")
+    val rel = new java.io.File(s"${DerivedStore.cacheRoot}/graft-ann-index/bkt-spec-relsrc")
     rel.mkdirs()
     java.nio.file.Files.write(new java.io.File(rel, "_built").toPath, "x".getBytes)
     java.nio.file.Files.write(new java.io.File(rel, "_src").toPath,
       "target/definitely-not-here".getBytes)
     try {
-      rmr(new java.io.File(dir)) // the corpus of record is gone
-      val reaped = Ann.sweepOrphanedEntries()
+      DerivedStore.deleteLocal(new java.io.File(dir)) // the corpus of record is gone
+      val reaped = DerivedStore.sweepOrphanedEntries()
       assert(!doomed.exists, s"entry must not outlive its corpus ($reaped)")
       assert(living.exists, "living corpus's entry untouched")
       assert(rel.exists, "relative-source entry untouched")
       assert(reaped.contains(doomed.getName))
-    } finally rmr(rel)
+    } finally DerivedStore.deleteLocal(rel)
   }
 
   test("default near-dup entries fall back to the inline plan when the layout root is unusable") {
@@ -183,6 +180,7 @@ class DedupSpec extends SparkTestBase {
     // plain FILE — permission-bit roots don't block the test user, who
     // may be privileged) is not usable
     val notADir = java.io.File.createTempFile("not_a_dir", null)
+    notADir.deleteOnExit()
     assert(!Dedup.layoutRootUsable(new java.io.File(notADir, "sub")),
       "an uncreatable root must be detected as unusable")
     assert(Dedup.layoutRootUsable(), "the real root is usable in this environment")
@@ -203,15 +201,15 @@ class DedupSpec extends SparkTestBase {
   test("a default cache root owned by another user is refused and the entries serve inline") {
     import java.nio.file.Files
     // another local user got to the per-user path first
-    val foreign = Files.createTempDirectory("foreign_root")
+    val foreign = java.nio.file.Paths.get(tempDir("foreign_root"))
     val otherUid = new com.sun.security.auth.module.UnixSystem().getUid.toInt + 4242
     assume(scala.util.Try(Files.setAttribute(foreign, "unix:uid", otherUid)).isSuccess,
       "changing a directory's owner needs a privileged test user")
     try {
-      intercept[IllegalStateException](Ann.privateDir(foreign))
+      intercept[IllegalStateException](DerivedStore.privateDir(foreign))
       // the refusal is read inside the usability check, not thrown past it
       val usable = Dedup.layoutRootUsable(
-        new java.io.File(Ann.privateDir(foreign), "graft-ann-index"))
+        new java.io.File(DerivedStore.privateDir(foreign), "graft-ann-index"))
       assert(!usable, "a refused root must count as unusable")
       val routed = Dedup.serveBucketedOrInline(spark, "spec-foreign", usable)(
         sys.error("bucketed path must not run"))(
@@ -350,7 +348,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("ivf: persisted cell-partitioned index answers identically; probes prune") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val idx = tempDir("ivf_index")
     Ann.ivfIndexBuild(spark, sfDir, idx)
     // the layout IS the index: one directory per cell
     val cellDirs = new java.io.File(s"$idx/cells").listFiles()
@@ -368,7 +366,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("pq: a persisted index answers identically to inline training") {
-    val idx = java.nio.file.Files.createTempDirectory("pq_index").toString
+    val idx = tempDir("pq_index")
     Ann.pqIndexBuild(spark, sfDir, idx)
     assert(new java.io.File(s"$idx/codebooks").exists())
     assert(new java.io.File(s"$idx/codes").exists())
@@ -383,11 +381,8 @@ class DedupSpec extends SparkTestBase {
   test("cached-index wrappers reuse the trained index across calls") {
     val inline = Ann.pqTopK(spark, sfDir).collect().map(_.toSeq).toSet
     // wipe any cache a previous JVM left so this test really trains once
-    val pqDir = new java.io.File(Ann.cachedIndexDir(sfDir, "pq"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-    }
-    if (pqDir.exists()) rm(pqDir)
+    val pqDir = new java.io.File(DerivedStore.cachedIndexDir(sfDir, "pq"))
+    if (pqDir.exists()) DerivedStore.deleteLocal(pqDir)
     assert(Ann.pqTopKCached(spark, sfDir).collect().map(_.toSeq).toSet == inline)
     val marker = new java.io.File(pqDir, "_built")
     assert(marker.exists(), "first call must persist the index + marker")

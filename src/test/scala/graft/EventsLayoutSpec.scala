@@ -14,8 +14,8 @@ class EventsLayoutSpec extends SparkTestBase {
     val base = Seq(
       (1L, 1704067207179575L, 8L, "error", 6.55, """{"k": 69}"""),
       (2L, 1704067432824425L, 46L, "click", 12.31, """{"k": 89}"""))
-    val dirN = java.nio.file.Files.createTempDirectory("ev_nanos").toString
-    val dirT = java.nio.file.Files.createTempDirectory("ev_ts").toString
+    val dirN = tempDir("ev_nanos")
+    val dirT = tempDir("ev_ts")
     base.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", col("ts") * 1000L) // epoch nanos as a plain INT64
       .write.mode("overwrite").parquet(s"$dirN/events.parquet")

@@ -82,7 +82,7 @@ class EventsWindowSpec extends SparkTestBase {
       .withColumn("ts", to_timestamp($"ts_s"))
       .withColumn("props", lit("{}"))
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")
-    val dir = java.nio.file.Files.createTempDirectory("attr_fix").toString
+    val dir = tempDir("attr_fix")
     ev.write.parquet(s"$dir/events.parquet")
     val out = Events.attribution(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),

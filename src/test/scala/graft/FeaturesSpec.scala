@@ -47,7 +47,7 @@ class FeaturesSpec extends SparkTestBase {
 
   test("singleton category degrades to exactly the smoothed prior") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("loo_single").toString
+    val dir = tempDir("loo_single")
     // two segments: BULK with 3 orders, LONE with exactly one
     Seq(
       (1L, 10L, "O", 100.0, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "P"),
@@ -105,7 +105,7 @@ class FeaturesSpec extends SparkTestBase {
 
   test("rolling slope nulls a frame that spans a calendar gap") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("slopegap").toString
+    val dir = tempDir("slopegap")
     // 6 contiguous days, a 5-day hole, then 7 more contiguous days
     val days = (1 to 6) ++ (12 to 18)
     val rows = days.zipWithIndex.flatMap { case (d, di) =>

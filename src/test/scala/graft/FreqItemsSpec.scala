@@ -47,11 +47,10 @@ class FreqItemsSpec extends SparkTestBase {
 
   test("streaming sketch keeps the same guarantees on its final emission") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("stream_docs_mg")
+    val dir = java.nio.file.Paths.get(tempDir("stream_docs_mg"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
       dir.resolve("documents.parquet"))
-    dir.toFile.deleteOnExit()
     val stream = streaming.EventStreams.streamingFreqTokens(spark,
       streaming.EventStreams.readDocuments(spark, dir.toString), K)
     val out = streaming.EventStreams.drainToMemory(stream.toDF(), "trending",

@@ -7,7 +7,7 @@ class IncrementalDedupSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshStore(): String =
-    java.nio.file.Files.createTempDirectory("inc_store").toString
+    tempDir("inc_store")
 
   private def docs = Tables.documents(spark, sfDir).select("doc_id", "text")
 
@@ -76,7 +76,7 @@ class IncrementalDedupSpec extends SparkTestBase {
       IncrementalDedup.admitBatch(docs.limit(20), store))
     assert(e2.getMessage.contains("no _format marker"))
     // self-dedup owner store: same contract
-    val sStore = java.nio.file.Files.createTempDirectory("sd_store").toString
+    val sStore = tempDir("sd_store")
     graft.ops.TextOps.selfDedupAdmitBatch(docs.limit(10), sStore)
     val sMarker = new java.io.File(sStore, "_format")
     assert(sMarker.exists)
@@ -136,10 +136,10 @@ class IncrementalDedupSpec extends SparkTestBase {
 
   test("streaming admission sink equals the one-shot rule; replay is clean") {
     import graft.streaming.EventStreams
-    val src = java.nio.file.Files.createTempDirectory("adm_src").toString
+    val src = tempDir("adm_src")
     val store = freshStore()
-    val flagsDir = java.nio.file.Files.createTempDirectory("adm_flags").toString
-    val chk = java.nio.file.Files.createTempDirectory("adm_chk").toString
+    val flagsDir = tempDir("adm_flags")
+    val chk = tempDir("adm_chk")
     val maxId = docs.agg(max($"doc_id")).head().getLong(0)
     // two id-ordered files; maxFilesPerTrigger=1 forces one microbatch each
     docs.filter($"doc_id" <= maxId / 2).coalesce(1)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class IncrementalRollupSpec extends SparkTestBase {
 
   test("incremental ingest equals the full recompute, days untouched on disk") {
-    val out = java.nio.file.Files.createTempDirectory("rollup").toString
+    val out = tempDir("rollup")
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     val days = ev.select("day").distinct().orderBy("day")
@@ -44,7 +44,7 @@ class IncrementalRollupSpec extends SparkTestBase {
   }
 
   test("day-partitioned bronze: the touched-day join prunes directories in the plan") {
-    val bronze = java.nio.file.Files.createTempDirectory("bronze_part").toString
+    val bronze = tempDir("bronze_part")
     val ev = Tables.events(spark, sfDir)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     ev.write.mode("overwrite").partitionBy("day").parquet(bronze)
@@ -67,7 +67,7 @@ class IncrementalRollupSpec extends SparkTestBase {
       s"bronze scan must be dynamically pruned by the touched days:\n${plan.take(1500)}")
 
     // and end-to-end: ingest over the partitioned log equals full recompute
-    val out = java.nio.file.Files.createTempDirectory("rollup_part").toString
+    val out = tempDir("rollup_part")
     IncrementalRollup.initialize(ev.drop("day"), out)
     IncrementalRollup.ingest(allEvents, batch, out)
     val got = IncrementalRollup.read(spark, out)

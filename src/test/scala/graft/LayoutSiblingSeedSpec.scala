@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 /** r18: a d4b/d4d gram-layout build whose sibling layout is FRESH for the
   * same corpus must seed its sets table from the sibling's materialized
   * files (skipping the corpus tokenize+hash pass) and still serve results
@@ -9,16 +11,11 @@ package graft
 class LayoutSiblingSeedSpec extends SparkTestBase {
   import graft.dedup.Dedup
 
-  private def rmr(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmr))
-    f.delete(); ()
-  }
-
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.toString).sorted.toSeq
 
   test("gram layout builds seed from the fresh sibling and stay bit-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("sibling_seed").toString
+    val dir = tempDir("sibling_seed")
     Tables.documents(spark, sfDir).limit(60)
       .write.parquet(s"$dir/documents.parquet")
     try {
@@ -43,6 +40,22 @@ class LayoutSiblingSeedSpec extends SparkTestBase {
         == expectNgram)
       assert(Dedup.siblingSeededFor(dir, "d4b") == 1,
         "forced d4b rebuild with a fresh d4d must take the seeded path")
-    } finally rmr(new java.io.File(dir))
+    } finally DerivedStore.deleteLocal(new java.io.File(dir))
+  }
+
+  test("a sibling left fresh by another process does not seed a forced rebuild") {
+    val dir = tempDir("sibling_foreign")
+    Tables.documents(spark, sfDir).limit(60)
+      .write.parquet(s"$dir/documents.parquet")
+    val expectNgram = canon(Dedup.ngramJaccardInline(spark, dir))
+    spark.catalog.clearCache()
+    Dedup.containmentBucketedAttach(spark, dir, reuse = true).collect()
+    // a fresh process: the d4d layout is now another process's install
+    Dedup.forgetServeRegistrations()
+    val seeded = Dedup.siblingSeededFor(dir, "d4b")
+    assert(canon(Dedup.ngramJaccardBucketedAttach(spark, dir, reuse = false))
+      == expectNgram)
+    assert(Dedup.siblingSeededFor(dir, "d4b") == seeded,
+      "a sibling this process did not install must not seed the build")
   }
 }

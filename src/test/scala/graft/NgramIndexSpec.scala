@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 import graft.dedup.{Dedup, NgramIndex}
 import org.apache.spark.sql.functions._
 
@@ -8,7 +10,6 @@ import org.apache.spark.sql.functions._
   * victim-free build; indexed serve equals the inline query. */
 class NgramIndexSpec extends SparkTestBase {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 
   private def tableRows(path: String): Seq[Seq[Any]] =
     spark.read.parquet(path).collect()
@@ -28,10 +29,10 @@ class NgramIndexSpec extends SparkTestBase {
   test("full build equals two incremental upserts; replay is a no-op") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val full = tmp("ngram_full")
+    val full = tempDir("ngram_full")
     NgramIndex.build(spark, sfDir, full)
 
-    val inc = tmp("ngram_inc")
+    val inc = tempDir("ngram_inc")
     NgramIndex.upsert(docs.filter($"doc_id" % 3 =!= 0), inc)
     NgramIndex.upsert(docs.filter($"doc_id" % 3 === 0), inc)
     assert(indexRows(inc) == indexRows(full),
@@ -44,7 +45,7 @@ class NgramIndexSpec extends SparkTestBase {
   test("upsert refuses a hash-format mismatch; a full rebuild restamps") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("ngram_fmt")
+    val idx = tempDir("ngram_fmt")
     NgramIndex.upsert(docs.limit(20), idx)
     val marker = new java.io.File(idx, "_format")
     assert(marker.exists, "first write stamps the marker")
@@ -70,7 +71,7 @@ class NgramIndexSpec extends SparkTestBase {
     // its widest window: marker invalidated (buildFrom's first step),
     // content present, crash before the restamp.
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("ngram_torn")
+    val idx = tempDir("ngram_torn")
     NgramIndex.buildFrom(docs.limit(20), idx)
     val marker = new java.io.File(idx, "_format")
     assert(marker.exists, "a completed rebuild stamps the marker LAST")
@@ -84,7 +85,7 @@ class NgramIndexSpec extends SparkTestBase {
   }
 
   test("indexed serve equals the inline query") {
-    val idx = tmp("ngram_serve")
+    val idx = tempDir("ngram_serve")
     NgramIndex.build(spark, sfDir, idx)
     val inline = Dedup.ngramJaccard(spark, sfDir).collect().map(_.toSeq).toSeq
     val indexed = NgramIndex.ngramJaccardIndexed(spark, idx)
@@ -96,7 +97,7 @@ class NgramIndexSpec extends SparkTestBase {
   test("a changed document leaves no stale grams; index equals a fresh build") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("ngram_chg")
+    val idx = tempDir("ngram_chg")
     NgramIndex.build(spark, sfDir, idx)
     val victim = 7L
     val newText = "aa bb cc dd"
@@ -107,11 +108,11 @@ class NgramIndexSpec extends SparkTestBase {
       .filter($"doc_id" === victim).count()
     assert(left == 2L, // "aa bb cc" and "bb cc dd"
       s"victim should hold exactly its 2 new grams, found $left")
-    val changedDir = tmp("ngram_chgsrc")
+    val changedDir = tempDir("ngram_chgsrc")
     docs.filter($"doc_id" =!= victim)
       .unionByName(Seq((victim, newText)).toDF("doc_id", "text"))
       .write.parquet(s"$changedDir/documents.parquet")
-    val cleanIdx = tmp("ngram_chgidx")
+    val cleanIdx = tempDir("ngram_chgidx")
     NgramIndex.build(spark, changedDir, cleanIdx)
     assert(indexRows(idx) == indexRows(cleanIdx),
       "changed-doc upsert must leave exactly the rebuilt-from-scratch content")
@@ -120,7 +121,7 @@ class NgramIndexSpec extends SparkTestBase {
   test("a doc changed to BELOW the gram width drops all its old postings") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("ngram_shrink")
+    val idx = tempDir("ngram_shrink")
     NgramIndex.build(spark, sfDir, idx)
     val victim = 7L
     val newText = "aa bb" // 2 tokens < NgramN=3 → EMPTY gram set, so the
@@ -131,11 +132,11 @@ class NgramIndexSpec extends SparkTestBase {
       .filter($"doc_id" === victim).count()
     assert(left == 0L,
       s"a shrunk-below-n doc must hold zero postings, found $left stale")
-    val changedDir = tmp("ngram_shrinksrc")
+    val changedDir = tempDir("ngram_shrinksrc")
     docs.filter($"doc_id" =!= victim)
       .unionByName(Seq((victim, newText)).toDF("doc_id", "text"))
       .write.parquet(s"$changedDir/documents.parquet")
-    val cleanIdx = tmp("ngram_shrinkidx")
+    val cleanIdx = tempDir("ngram_shrinkidx")
     NgramIndex.build(spark, changedDir, cleanIdx)
     assert(indexRows(idx) == indexRows(cleanIdx),
       "shrunk-doc upsert must leave exactly the rebuilt-from-scratch content")
@@ -152,7 +153,7 @@ class NgramIndexSpec extends SparkTestBase {
     val served = NgramIndex.incrementalServe(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(served == inline)
     val scratch = new java.io.File(
-      graft.similarity.Ann.scratchDir(sfDir, "ngram-inc"))
+      DerivedStore.scratchDir(sfDir, "ngram-inc"))
     NgramIndex.incrementalServe(spark, sfDir).collect() // second call: same dir
     assert(scratch.isDirectory, "scratch dir should live under the managed cache root")
     assert((tmpDebris -- before).isEmpty,
@@ -163,14 +164,14 @@ class NgramIndexSpec extends SparkTestBase {
     import graft.streaming.EventStreams
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val full = tmp("ngram_sfull")
+    val full = tempDir("ngram_sfull")
     NgramIndex.build(spark, sfDir, full)
     val expect = indexRows(full)
 
-    val src = tmp("ngram_ssrc")
+    val src = tempDir("ngram_ssrc")
     docs.filter($"doc_id" < 25).write.parquet(s"$src/b0")
     docs.filter($"doc_id" >= 25).write.parquet(s"$src/b1")
-    val idx = tmp("ngram_sidx")
+    val idx = tempDir("ngram_sidx")
     def run(chk: String): Unit = {
       val stream = spark.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -182,11 +183,11 @@ class NgramIndexSpec extends SparkTestBase {
       val q = EventStreams.ngramMaintenanceSink(stream, idx, chk)
       q.processAllAvailable(); q.stop()
     }
-    val chk = tmp("ngram_schk")
+    val chk = tempDir("ngram_schk")
     run(chk)
     assert(indexRows(idx) == expect,
       "streamed upserts must equal the one-shot build")
-    run(tmp("ngram_schk2")) // cold restart: replays land as no-ops
+    run(tempDir("ngram_schk2")) // cold restart: replays land as no-ops
     assert(indexRows(idx) == expect)
   }
 
@@ -201,15 +202,15 @@ class NgramIndexSpec extends SparkTestBase {
   test("takedown: the index equals a victim-free build and serves without victims") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("ngram_del")
+    val idx = tempDir("ngram_del")
     NgramIndex.build(spark, sfDir, idx)
     val victims = Seq(3L, 11L)
     val n = NgramIndex.deleteDocs(spark, idx, victims)
     assert(n > 0, "victims had gram sets")
-    val cleanDir = tmp("ngram_delsrc")
+    val cleanDir = tempDir("ngram_delsrc")
     docs.filter(!$"doc_id".isin(victims: _*))
       .write.parquet(s"$cleanDir/documents.parquet")
-    val cleanIdx = tmp("ngram_delidx")
+    val cleanIdx = tempDir("ngram_delidx")
     NgramIndex.build(spark, cleanDir, cleanIdx)
     assert(indexRows(idx) == indexRows(cleanIdx),
       "deleteDocs must leave exactly the victim-free index content")

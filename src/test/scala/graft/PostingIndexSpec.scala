@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * bytes; the indexed BM25 serve path equals the inline query. */
 class PostingIndexSpec extends SparkTestBase {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 
   private def tableRows(path: String): Seq[Seq[Any]] =
     spark.read.parquet(path).collect()
@@ -21,10 +20,10 @@ class PostingIndexSpec extends SparkTestBase {
   test("full build equals two incremental upserts; replay is a no-op") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val full = tmp("posting_full")
+    val full = tempDir("posting_full")
     Retrieval.postingIndexBuild(spark, sfDir, full)
 
-    val inc = tmp("posting_inc")
+    val inc = tempDir("posting_inc")
     val mid = 25L
     Retrieval.postingIndexUpsert(docs.filter($"doc_id" < mid), inc)
     Retrieval.postingIndexUpsert(docs.filter($"doc_id" >= mid), inc)
@@ -38,7 +37,7 @@ class PostingIndexSpec extends SparkTestBase {
 
   test("an upsert touches only its own term buckets") {
     import spark.implicits._
-    val idx = tmp("posting_touch")
+    val idx = tempDir("posting_touch")
     Retrieval.postingIndexBuild(spark, sfDir, idx)
     def bucketFiles(): Map[String, (Long, Long)] = {
       val root = java.nio.file.Paths.get(s"$idx/postings")
@@ -71,7 +70,7 @@ class PostingIndexSpec extends SparkTestBase {
   test("a changed document that LOST a term leaves no stale posting") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("posting_chg")
+    val idx = tempDir("posting_chg")
     Retrieval.postingIndexBuild(spark, sfDir, idx)
     // rewrite one non-query doc to a single novel term: every one of its
     // old terms is LOST, and those postings live in tp buckets the new
@@ -86,11 +85,11 @@ class PostingIndexSpec extends SparkTestBase {
       s"stale postings survived the changed-doc upsert: $rows")
     // and the whole index equals a fresh build over the changed corpus —
     // tf, df, dl all self-correct, so inline ≡ indexed still holds
-    val changedDir = tmp("posting_chgsrc")
+    val changedDir = tempDir("posting_chgsrc")
     docs.filter($"doc_id" =!= victim)
       .unionByName(Seq((victim, "qqreplacementterm")).toDF("doc_id", "text"))
       .write.parquet(s"$changedDir/documents.parquet")
-    val cleanIdx = tmp("posting_chgidx")
+    val cleanIdx = tempDir("posting_chgidx")
     Retrieval.postingIndexBuild(spark, changedDir, cleanIdx)
     assert(indexRows(idx) == indexRows(cleanIdx),
       "changed-doc upsert must leave exactly the rebuilt-from-scratch content")
@@ -101,7 +100,7 @@ class PostingIndexSpec extends SparkTestBase {
   }
 
   test("indexed bm25 serve equals the inline query") {
-    val idx = tmp("posting_serve")
+    val idx = tempDir("posting_serve")
     Retrieval.postingIndexBuild(spark, sfDir, idx)
     val inline = Retrieval.bm25TopK(spark, sfDir).collect().map(_.toSeq).toSeq
     val indexed = Retrieval.bm25TopKIndexed(spark, sfDir, idx)
@@ -113,7 +112,7 @@ class PostingIndexSpec extends SparkTestBase {
   test("takedown: deleted docs vanish and the index equals a victim-free build") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val idx = tmp("posting_del")
+    val idx = tempDir("posting_del")
     Retrieval.postingIndexBuild(spark, sfDir, idx)
     // victims outside the query-id range so both sides ask the same queries
     val victims = Seq(30L, 31L)
@@ -125,10 +124,10 @@ class PostingIndexSpec extends SparkTestBase {
       "a taken-down doc must be unreachable through the serve path")
     // the post-delete index must be indistinguishable from one built on
     // the victim-free corpus: df, N, avgdl all self-correct
-    val cleanDir = tmp("posting_delclean")
+    val cleanDir = tempDir("posting_delclean")
     Tables.documents(spark, sfDir).filter(!$"doc_id".isin(victims: _*))
       .write.parquet(s"$cleanDir/documents.parquet")
-    val cleanIdx = tmp("posting_delidx")
+    val cleanIdx = tempDir("posting_delidx")
     Retrieval.postingIndexBuild(spark, cleanDir, cleanIdx)
     assert(indexRows(idx) == indexRows(cleanIdx),
       "deleteDocs must leave exactly the victim-free index content")
@@ -143,14 +142,14 @@ class PostingIndexSpec extends SparkTestBase {
     import graft.streaming.EventStreams
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val full = tmp("posting_sfull")
+    val full = tempDir("posting_sfull")
     Retrieval.postingIndexBuild(spark, sfDir, full)
     val expect = indexRows(full)
 
-    val src = tmp("posting_ssrc")
+    val src = tempDir("posting_ssrc")
     docs.filter($"doc_id" < 25).write.parquet(s"$src/b0")
     docs.filter($"doc_id" >= 25).write.parquet(s"$src/b1")
-    val idx = tmp("posting_sidx")
+    val idx = tempDir("posting_sidx")
     def run(chk: String): Unit = {
       val stream = spark.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -162,14 +161,14 @@ class PostingIndexSpec extends SparkTestBase {
       val q = EventStreams.postingMaintenanceSink(stream, idx, chk)
       q.processAllAvailable(); q.stop()
     }
-    val chk = tmp("posting_schk")
+    val chk = tempDir("posting_schk")
     run(chk)
     assert(indexRows(idx) == expect,
       "streamed upserts must equal the one-shot build")
     // warm restart reprocesses nothing; cold restart replays as no-ops
     run(chk)
     assert(indexRows(idx) == expect)
-    run(tmp("posting_schk2"))
+    run(tempDir("posting_schk2"))
     assert(indexRows(idx) == expect)
   }
 }

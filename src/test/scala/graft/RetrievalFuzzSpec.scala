@@ -36,7 +36,7 @@ class RetrievalFuzzSpec extends SparkTestBase {
 
   private def writeCorpus(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fuzzcorpus").toString
+    val dir = tempDir("fuzzcorpus")
     edgeDocs.toDF("doc_id", "lang", "text")
       .withColumn("source", concat(lit("src"), ($"doc_id" % 3).cast("string")))
       .withColumn("n_chars", length($"text").cast("long"))

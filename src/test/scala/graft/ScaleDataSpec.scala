@@ -65,7 +65,7 @@ class ScaleDataSpec extends SparkTestBase {
   test("within-copy exact Jaccard structure is preserved; copies are disjoint") {
     assume(haveData)
     val spark = this.spark
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scale-spec").toString
+    val tmp = tempDir("graft-scale-spec")
     ScaleData.write(spark, base, tmp, 3)
     val baseTrue = truePairs(base)
     val scaledTrue = truePairs(tmp)
@@ -85,7 +85,7 @@ class ScaleDataSpec extends SparkTestBase {
     assume(haveData)
     val spark = this.spark
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scale-emb").toString
+    val tmp = tempDir("graft-scale-emb")
     ScaleData.write(spark, base, tmp, 3)
     def vecs(dir: String) = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>"))

@@ -24,9 +24,20 @@ trait SparkTestBase extends AnyFunSuite {
         case (k, None) => spark.conf.unset(k)
       }
     }
+
+  /** A fresh temp directory named `prefix…`, deleted with its content
+    * when the test JVM exits (tests fork, so that is the end of the run). */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    SparkTestBase.tempDirs.add(d)
+    d.getPath
+  }
 }
 
 object SparkTestBase {
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(graft.sources.DerivedStore.deleteLocal(_)))
+
   /** See [[SparkTestBase.withSessionConf]]. */
   val confLock = new Object
   lazy val session: SparkSession = {

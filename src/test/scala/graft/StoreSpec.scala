@@ -6,7 +6,7 @@ import graft.sources.Store
 class StoreSpec extends SparkTestBase {
 
   def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_store").toString
+    tempDir("graft_store")
 
   test("partitioned write + dynamic overwrite is idempotent per partition") {
     val out = tmp()
@@ -437,7 +437,7 @@ class StoreSpec extends SparkTestBase {
 
   test("takedown propagates to registered derived stores") {
     // 1. the registry mechanics: deleteKeys fires every hook for its path
-    val dir = java.nio.file.Files.createTempDirectory("derived").toString
+    val dir = tempDir("derived")
     val path = s"$dir/t.parquet"
     spark.range(10).selectExpr("id AS k", "(id % 2) AS pt")
       .write.partitionBy("pt").parquet(path)
@@ -450,7 +450,7 @@ class StoreSpec extends SparkTestBase {
     // 2. end-to-end: the bucketed dedup candidate tables are derived from
     // the documents corpus; a takedown there must drop them so no serve
     // path can read a deleted doc's shingles from the warehouse copy
-    val docDir = java.nio.file.Files.createTempDirectory("dedup_takedown").toString
+    val docDir = tempDir("dedup_takedown")
     Tables.documents(spark, sfDir)
       .write.partitionBy("lang").parquet(s"$docDir/documents.parquet")
     graft.dedup.Dedup.lshJaccardBucketedAttach(spark, docDir).collect()
@@ -477,7 +477,7 @@ class StoreSpec extends SparkTestBase {
     // entries — not the explicit twins — must serve no taken-down doc
     // after Store.deleteKeys, and must pay exactly ONE rebuild each on
     // the post-delete corpus (the fingerprint change, not every call)
-    val docDir = java.nio.file.Files.createTempDirectory("default_takedown").toString
+    val docDir = tempDir("default_takedown")
     Tables.documents(spark, sfDir).limit(60)
       .write.partitionBy("lang").parquet(s"$docDir/documents.parquet")
     graft.dedup.Dedup.lshJaccard(spark, docDir).collect()

@@ -8,7 +8,7 @@ class StreamingMultimodalSpec extends SparkTestBase {
 
   // FileStreamSource requires a directory: stage the single parquet file
   lazy val eventsPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_events")
+    val dir = java.nio.file.Paths.get(tempDir("graft_stream_events"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
@@ -40,8 +40,8 @@ class StreamingMultimodalSpec extends SparkTestBase {
     import graft.streaming.EventStreams
     import org.apache.spark.sql.functions._
     val src = stageDir("events")
-    val outDir = java.nio.file.Files.createTempDirectory("stream_out").toString
-    val chk = java.nio.file.Files.createTempDirectory("stream_chk").toString
+    val outDir = tempDir("stream_out")
+    val chk = tempDir("stream_chk")
     def drainOnce(): Unit = {
       val q = EventStreams.readEvents(spark, src).select(col("event_id"))
         .writeStream.format("parquet")
@@ -125,11 +125,10 @@ class StreamingMultimodalSpec extends SparkTestBase {
   /** File-stream sources need a DIRECTORY; the testdata tables are single
     * parquet files, so stage one into a temp dir. */
   private def stageDir(table: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"stream_$table")
+    val dir = java.nio.file.Paths.get(tempDir(s"stream_$table"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/$table.parquet"),
       dir.resolve(s"$table.parquet"))
-    dir.toFile.deleteOnExit()
     dir.toString
   }
 
@@ -197,9 +196,9 @@ class StreamingMultimodalSpec extends SparkTestBase {
   test("foreachBatch rollup sink maintains the table; batch replay is harmless") {
     import graft.streaming.EventStreams
     import graft.pipelines.IncrementalRollup
-    val bronze = java.nio.file.Files.createTempDirectory("bronze").toString
-    val rollup = java.nio.file.Files.createTempDirectory("rollup_s").toString
-    val chk = java.nio.file.Files.createTempDirectory("rollup_chk").toString
+    val bronze = tempDir("bronze")
+    val rollup = tempDir("rollup_s")
+    val chk = tempDir("rollup_chk")
     val q = EventStreams.rollupSink(
       EventStreams.readEvents(spark, stageDir("events")), bronze, rollup, chk)
     q.processAllAvailable(); q.stop()
@@ -229,10 +228,10 @@ class StreamingMultimodalSpec extends SparkTestBase {
   test("rollup sink recovers from a crash between bronze append and swap") {
     import graft.streaming.EventStreams
     import graft.pipelines.IncrementalRollup
-    val bronze = java.nio.file.Files.createTempDirectory("bronze_c").toString
-    val rollup = java.nio.file.Files.createTempDirectory("rollup_c").toString
-    val chk = java.nio.file.Files.createTempDirectory("rollup_c_chk").toString
-    val src = java.nio.file.Files.createTempDirectory("rollup_c_src").toString
+    val bronze = tempDir("bronze_c")
+    val rollup = tempDir("rollup_c")
+    val chk = tempDir("rollup_c_chk")
+    val src = tempDir("rollup_c_src")
     val half = Tables.events(spark, sfDir)
       .filter(col("event_id") % 2 === 0).count()
     // append part-files at the TOP level of src: the file stream source
@@ -378,10 +377,10 @@ class StreamingMultimodalSpec extends SparkTestBase {
       .select($"doc_id", $"weight", $"n_grams")
       .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
 
-    val src = java.nio.file.Files.createTempDirectory("dsir_src").toString
+    val src = tempDir("dsir_src")
     docs.filter($"doc_id" % 2 === 0).write.parquet(s"$src/b0")
     docs.filter($"doc_id" % 2 =!= 0).write.parquet(s"$src/b1")
-    val out = java.nio.file.Files.createTempDirectory("dsir_out").toString + "/scores"
+    val out = tempDir("dsir_out") + "/scores"
     def run(chk: String): Unit = {
       val stream = spark.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
@@ -393,7 +392,7 @@ class StreamingMultimodalSpec extends SparkTestBase {
             org.apache.spark.sql.types.StringType))))
         .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
       val q = EventStreams.dsirScoringSink(stream, model, out,
-        java.nio.file.Files.createTempDirectory("dsir_chk").toString + "/c")
+        tempDir("dsir_chk") + "/c")
       q.processAllAvailable(); q.stop()
     }
     run("unused")

@@ -25,7 +25,7 @@ class TextFormatsSpec extends SparkTestBase {
 
   test("jsonl round-trips adversarial strings byte-for-byte") {
     val df = nasty.toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_nasty").toString
+    val dir = tempDir("jsonl_nasty")
     TextFormats.writeJsonl(df, dir)
     val back = TextFormats.readJsonl(spark, dir, schema)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -36,7 +36,7 @@ class TextFormatsSpec extends SparkTestBase {
 
   test("csv round-trips adversarial strings byte-for-byte") {
     val df = nasty.toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("csv_nasty").toString
+    val dir = tempDir("csv_nasty")
     TextFormats.writeCsv(df, dir)
     val back = TextFormats.readCsv(spark, dir, schema)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap

@@ -61,7 +61,7 @@ class TextOpsSpec extends SparkTestBase {
     * schema) for scrub-family tests that need controlled duplication. */
   private def stageDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("scrub_docs").toString
+    val dir = tempDir("scrub_docs")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("synthetic"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -170,7 +170,7 @@ class TextOpsSpec extends SparkTestBase {
     val dir = stageDocs(docs)
     val oneShot = TextOps.selfDedupScrub(spark, dir).collect().map(_.toSeq).toSeq
 
-    val store = java.nio.file.Files.createTempDirectory("sd_store").toString
+    val store = tempDir("sd_store")
     val table = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val b1 = TextOps.selfDedupAdmitBatch(table.filter(col("doc_id") <= 2), store)
       .collect().map(_.toSeq)
@@ -235,7 +235,7 @@ class TextOpsSpec extends SparkTestBase {
       5L -> s"bga5 $span bgz5", 8L -> "no duplication in this one at all"))
     val table = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     def runWith(maxBroadcast: Long): Seq[Seq[Any]] = {
-      val store = java.nio.file.Files.createTempDirectory("sd_guard").toString
+      val store = tempDir("sd_guard")
       Seq(table.filter(col("doc_id") <= 2), table.filter(col("doc_id") > 2))
         .flatMap(b => TextOps.selfDedupAdmitBatch(b, store, maxBroadcast)
           .collect().map(_.toSeq))
@@ -255,7 +255,7 @@ class TextOpsSpec extends SparkTestBase {
     val bad = Seq((TextOps.SelfDedupMaxDocId + 7L,
       (1 to TextOps.ScrubGram + 2).map(i => s"w$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("sd_badid").toString
+    val store = tempDir("sd_badid")
     val e = intercept[Exception] {
       TextOps.selfDedupAdmitBatch(bad, store).collect()
     }
@@ -276,10 +276,10 @@ class TextOpsSpec extends SparkTestBase {
     val docs = Tables.documents(spark, corpusDir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
-    val src = java.nio.file.Files.createTempDirectory("sd_src").toString
-    val store = java.nio.file.Files.createTempDirectory("sd_sink_store").toString
-    val outDir = java.nio.file.Files.createTempDirectory("sd_out").toString
-    val chk = java.nio.file.Files.createTempDirectory("sd_chk").toString
+    val src = tempDir("sd_src")
+    val store = tempDir("sd_sink_store")
+    val outDir = tempDir("sd_out")
+    val chk = tempDir("sd_chk")
     // two id-ordered single-file microbatches with unambiguous mtimes
     def stage(df: org.apache.spark.sql.DataFrame, name: String, dt: Long): Unit = {
       val d = s"$src/$name"

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.DerivedStore
+
 import graft.similarity.{Ann, Retrieval}
 import graft.sources.VersionedStore
 import org.apache.spark.sql.functions._
@@ -12,15 +14,14 @@ import org.apache.spark.sql.functions._
   * demands. */
 class VersionedIndexSpec extends SparkTestBase {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 
   private def builtMarkerMtime(vroot: String, version: Long, kind: String): Long =
     new java.io.File(
-      Ann.cachedIndexDir(s"$vroot@v$version", kind), "_built").lastModified()
+      DerivedStore.cachedIndexDir(s"$vroot@v$version", kind), "_built").lastModified()
 
   test("pq: v1-pinned serve survives a v2 commit, equals inline over readAt(v1)") {
     val emb = Tables.embeddings(spark, sfDir)
-    val vroot = tmp("vidx_pq")
+    val vroot = tempDir("vidx_pq")
     val v1 = VersionedStore.commitAppend(emb.filter(col("vec_id") % 3 =!= 0), vroot)
 
     val r1 = Ann.pqTopKCachedAt(spark, vroot, v1).collect().map(_.toSeq).toSeq
@@ -46,7 +47,7 @@ class VersionedIndexSpec extends SparkTestBase {
 
   test("pq: a purge invalidates the pinned cache and the rebuilt serve drops the victim") {
     val emb = Tables.embeddings(spark, sfDir)
-    val vroot = tmp("vidx_purge")
+    val vroot = tempDir("vidx_purge")
     val v1 = VersionedStore.commitAppend(emb, vroot)
     val before = Ann.pqTopKCachedAt(spark, vroot, v1).collect().map(_.toSeq).toSeq
     // victim: a non-query vector that actually appears in some top list
@@ -66,13 +67,13 @@ class VersionedIndexSpec extends SparkTestBase {
 
   test("vacuumIndexCache keeps the newest k pinned versions; purge still invalidates") {
     val emb = Tables.embeddings(spark, sfDir)
-    val vroot = tmp("vidx_vac")
+    val vroot = tempDir("vidx_vac")
     // three committed versions, each serving once → three pinned entries
     val v1 = VersionedStore.commitAppend(emb.filter(col("vec_id") % 3 === 0), vroot)
     val v2 = VersionedStore.commitAppend(emb.filter(col("vec_id") % 3 === 1), vroot)
     val v3 = VersionedStore.commitAppend(emb.filter(col("vec_id") % 3 === 2), vroot)
     Seq(v1, v2, v3).foreach(v => Ann.pqTopKCachedAt(spark, vroot, v).collect())
-    def entry(v: Long) = new java.io.File(Ann.cachedIndexDir(s"$vroot@v$v", "pq"))
+    def entry(v: Long) = new java.io.File(DerivedStore.cachedIndexDir(s"$vroot@v$v", "pq"))
     assert(Seq(v1, v2, v3).forall(entry(_).isDirectory), "three pinned entries exist")
     // horizon rule: keep the newest 2 versions' entries, drop v1's
     val deleted = Ann.vacuumIndexCache(vroot, keepLast = 2)
@@ -95,11 +96,11 @@ class VersionedIndexSpec extends SparkTestBase {
   test("store vacuum reaps pinned index entries through the retention " +
       "hook: keepLast=k leaves exactly the k newest") {
     val emb = Tables.embeddings(spark, sfDir)
-    val vroot = tmp("vidx_wire")
+    val vroot = tempDir("vidx_wire")
     val vs = (0 to 2).map(i =>
       VersionedStore.commitAppend(emb.filter(col("vec_id") % 3 === i), vroot))
     vs.foreach(v => Ann.pqTopKCachedAt(spark, vroot, v).collect())
-    def entry(v: Long) = new java.io.File(Ann.cachedIndexDir(s"$vroot@v$v", "pq"))
+    def entry(v: Long) = new java.io.File(DerivedStore.cachedIndexDir(s"$vroot@v$v", "pq"))
     assert(vs.forall(entry(_).isDirectory))
     // ONE call: the store's own vacuum governs manifests AND the cache —
     // no manual vacuumIndexCache companion call
@@ -128,11 +129,11 @@ class VersionedIndexSpec extends SparkTestBase {
     // versions can never succeed again, so the hook must reap them (the
     // keepLast-of-cached rule kept them forever)
     val emb = Tables.embeddings(spark, sfDir)
-    val vroot = tmp("vidx_stale")
+    val vroot = tempDir("vidx_stale")
     val vs = (0 to 3).map(i =>
       VersionedStore.commitAppend(emb.filter(col("vec_id") % 4 === i), vroot))
     Seq(vs(0), vs(1)).foreach(v => Ann.pqTopKCachedAt(spark, vroot, v).collect())
-    def entry(v: Long) = new java.io.File(Ann.cachedIndexDir(s"$vroot@v$v", "pq"))
+    def entry(v: Long) = new java.io.File(DerivedStore.cachedIndexDir(s"$vroot@v$v", "pq"))
     assert(entry(vs(0)).isDirectory && entry(vs(1)).isDirectory)
     VersionedStore.vacuum(spark, vroot, keepLast = 2) // retains vs(2), vs(3)
     assert(VersionedStore.versions(spark, vroot) == vs.takeRight(2))
@@ -142,7 +143,7 @@ class VersionedIndexSpec extends SparkTestBase {
 
   test("bm25: v1-pinned serve survives a v2 commit, equals inline over readAt(v1)") {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val vroot = tmp("vidx_bm25")
+    val vroot = tempDir("vidx_bm25")
     val v1 = VersionedStore.commitAppend(docs.filter(col("doc_id") % 2 === 0), vroot)
     val r1 = Retrieval.bm25TopKCachedAt(spark, vroot, v1).collect().map(_.toSeq).toSeq
     val inline1 = Retrieval.bm25TopKFrom(spark,

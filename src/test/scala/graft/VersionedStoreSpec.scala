@@ -10,7 +10,7 @@ class VersionedStoreSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("vstore").toString
+    tempDir("vstore")
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet

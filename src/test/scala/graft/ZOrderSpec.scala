@@ -31,7 +31,7 @@ class ZOrderSpec extends SparkTestBase {
 
   test("empty input writes an empty but valid z-ordered table") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("zempty").toString + "/t"
+    val out = tempDir("zempty") + "/t"
     val empty = Seq.empty[(Int, Int)].toDF("x", "y")
     ZOrder.writeZOrdered(empty, out, Seq("x", "y"), numFiles = 2)
     assert(spark.read.parquet(out).count() == 0)
@@ -43,7 +43,7 @@ class ZOrderSpec extends SparkTestBase {
     val rng = new scala.util.Random(42)
     val data = (1 to n).map(_ => (rng.nextInt(1000), rng.nextInt(1000), rng.nextLong()))
       .toDF("x", "y", "payload")
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder")
     val linPath = s"$base/linear"
     val zPath = s"$base/zordered"
 

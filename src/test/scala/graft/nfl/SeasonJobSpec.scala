@@ -34,7 +34,7 @@ class SeasonJobSpec extends SparkTestBase {
   }
 
   test("run writes 4 partitioned tables; resume skips completed plays") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_season").toString
+    val dir = tempDir("graft_season")
     val n1 = SeasonJob.run(norm, preState, dir,
       xyacModel = None, resume = true)
     assert(n1 > 0, "first run must compute frames")
@@ -58,7 +58,7 @@ class SeasonJobSpec extends SparkTestBase {
   }
 
   test("partial resume: only missing plays are recomputed and merged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_season2").toString
+    val dir = tempDir("graft_season2")
     // first pass: only game 1
     val n1 = SeasonJob.run(norm.filter(col("gameId") === 1L), preState, dir,
       xyacModel = None, resume = true)

@@ -21,6 +21,11 @@ ROUND="${1:-13}"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 CPUS="${SPARK_GRAFT_CPUS:-8}"
 WORK="$(mktemp -d /tmp/graft-xproc.XXXXXX)"
+# the work dir (corpus, two caches, per-cell logs) is removed once the
+# report is written with every check passing; otherwise it is kept and
+# named, so the cell logs stay available for diagnosis
+PASSED=0
+trap 'if [ "$PASSED" = 1 ]; then rm -rf "$WORK"; else echo "[xproc] run did not pass; work dir kept: $WORK" >&2; fi' EXIT
 CORPUS="$WORK/corpus"
 OUT="XPROC_r${ROUND}.json"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
@@ -97,3 +102,4 @@ print(f"[xproc] wrote {out}; all_pass={doc['all_pass']}")
 for k, v in checks.items():
     print(f"  {'OK ' if v else 'FAIL'} {k}")
 EOF
+if grep -q '"all_pass": true' "$OUT"; then PASSED=1; fi
