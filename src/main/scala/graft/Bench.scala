@@ -1,8 +1,74 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The driver bench, plus the helpers every bench main publishes
   * through (ScaleBench, SeasonScaleBench and Verify share them). */
 object Bench {
+
+  /** One timed execution: its wall (NaN when it threw), its output rows
+    * (None when it threw) and the lifecycle legs it recorded. */
+  private[graft] final case class Run(wall: Double, rows: Option[Long],
+                                      legs: Map[String, Double])
+
+  /** Time one execution of `fn(spark, dir)`, the one timing rule Bench
+    * and ScaleBench share. A FAILED run's wall is NaN, never its
+    * elapsed-to-failure time: a query that starts throwing must not make
+    * a total faster or a growth ratio smaller. Legs left by an earlier
+    * run are drained first so they cannot blame this one; persisted
+    * state is cleared after the run, failed or not. */
+  private[graft] def timedRun(spark: SparkSession, dir: String, name: String,
+                              fn: (SparkSession, String) => DataFrame): Run = {
+    graft.ops.Legs.drain()
+    val t0 = System.nanoTime()
+    // toRdd.count() executes the FULL physical plan (a plain .count()
+    // lets the optimizer drop final sorts and projections)
+    val (wall, rows) =
+      try {
+        val n = fn(spark, dir).queryExecution.toRdd.count()
+        ((System.nanoTime() - t0) / 1e9, Some(n))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        (Double.NaN, None)
+      }
+    clearPersisted(spark)
+    Run(wall, rows, graft.ops.Legs.drain())
+  }
+
+  /** The middle successful run by wall (the lower middle on an even
+    * count), if any run succeeded. */
+  private[graft] def middle[A](runs: Seq[A])(wall: A => Double): Option[A] = {
+    val ok = runs.filterNot(r => wall(r).isNaN).sortBy(wall)
+    ok.lift((ok.length - 1) / 2)
+  }
+
+  /** JVM/codegen warm-up: one untimed scan+agg so the first timed query
+    * doesn't book classloading + codegen compiler start-up (~6 s in r01). */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count().queryExecution.toRdd.count()
+      ()
+    } catch { case _: Throwable => () }
+
+  /** Machine-state probe walls, published as session diagnostics. A
+    * FAILED probe gives a NaN wall instead of its elapsed-to-failure
+    * time, and the first failure is kept for `calib_error`. */
+  private[graft] final class Probes(spark: SparkSession) {
+    var error: Option[String] = None
+    def time(label: String)(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      val dt =
+        try { body; (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          error = error.orElse(Some(
+            s"$label: ${e.getClass.getSimpleName}: " +
+              String.valueOf(e.getMessage).take(160)))
+          System.err.println(s"[bench] CALIBRATION PROBE FAILED ($label): $e")
+          Double.NaN
+        }
+      clearPersisted(spark)
+      dt
+    }
+  }
 
   /** Free any cached/persisted intermediates a query left behind (the
     * dedup family persists its shingle table) so a repeat measures the
@@ -65,35 +131,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus.toInt, appName = "graft-bench")
 
-    // A FAILED run's wall is NaN, never its elapsed-to-failure time: a
-    // query that starts throwing must not make the total faster. Failed
-    // runs drop out of the per-query median and name the query in the
-    // published `failed` list.
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Map[String, Double]) = {
-      graft.ops.Legs.drain() // clear any leftover from a failed prior run
-      val t0 = System.nanoTime()
-      // toRdd.count() executes the FULL physical plan (a plain .count()
-      // lets the optimizer drop final sorts and projections)
-      val dt =
-        try {
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Double.NaN
-        }
-      clearPersisted(spark)
-      (dt, graft.ops.Legs.drain())
-    }
-
-    // JVM/codegen warm-up: one untimed scan+agg so the first timed query
-    // doesn't book classloading + codegen compiler start-up (~6 s in r01).
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().queryExecution.toRdd.count()
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // MEDIAN-of-3 per query (r13 — the r12 verdict's headline item):
     // best-of-3 tracked the machine's fast tail, so two runs of ONE tree
@@ -130,23 +168,9 @@ object Bench {
     //    lineitem on l_orderkey + aggregation → `calib_shuffle_sec`.
     // A FAILED probe publishes `calib_error` and a null wall instead of
     // its elapsed-to-failure time.
-    var calibError: Option[String] = None
-    def timedProbe(label: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      val dt =
-        try { body; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          calibError = calibError.orElse(Some(
-            s"$label: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(160)))
-          System.err.println(s"[bench] CALIBRATION PROBE FAILED ($label): $e")
-          Double.NaN
-        }
-      clearPersisted(spark)
-      dt
-    }
-    def calibScanOnce(): Double = timedProbe("scan")(scanProbe(spark, sfDir))
-    def calibShuffleOnce(): Double = timedProbe("shuffle") {
+    val probes = new Probes(spark)
+    def calibScanOnce(): Double = probes.time("scan")(scanProbe(spark, sfDir))
+    def calibShuffleOnce(): Double = probes.time("shuffle") {
       import org.apache.spark.sql.functions._
       val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
@@ -173,7 +197,7 @@ object Bench {
     val passes = Vector.fill(3) {
       calibWalls += calibScanOnce()
       calibShufWalls += calibShuffleOnce()
-      val pass = qs.map { case (name, fn) => runOnce(name, fn) }
+      val pass = qs.map { case (name, fn) => timedRun(spark, sfDir, name, fn) }
       calibWalls += calibScanOnce()
       calibShufWalls += calibShuffleOnce()
       pass
@@ -184,10 +208,9 @@ object Bench {
     // succeeded, published as null) and the legs of the middle
     // successful run
     val runs = qs.zipWithIndex.map { case ((name, _), i) =>
-      val ok = passes.map(_(i)).filterNot(_._1.isNaN).sortBy(_._1)
-      val legs = if (ok.isEmpty) Map.empty[String, Double]
-                 else ok((ok.length - 1) / 2)._2
-      (name, med(ok.map(_._1)), legs, ok.length < passes.length)
+      val all = passes.map(_(i))
+      val legs = middle(all)(_.wall).fold(Map.empty[String, Double])(_.legs)
+      (name, med(all.map(_.wall)), legs, all.exists(_.wall.isNaN))
     }
     val failed = runs.collect { case (n, _, _, true) => n }
     // serve_overhead legs (the per-call lock/DDL/sweep segment of the
@@ -211,7 +234,7 @@ object Bench {
     // only in BENCH.json.
     val total = runs.map(_._2).filterNot(_.isNaN).sum
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    val calibErrJson = calibError.fold("")(e => s""""calib_error":${jstr(e)},""")
+    val calibErrJson = probes.error.fold("")(e => s""""calib_error":${jstr(e)},""")
     val calibJson = s""""calib_sec":${jnum(calib)},"calib_walls":[${
       calibWalls.map(jnum(_)).mkString(",")
     }],"calib_shuffle_sec":${jnum(calibShuf)},"calib_shuffle_walls":[${

@@ -48,13 +48,23 @@ object GraftSession {
 
   /** Local shape: parallelism = cores, no UI, shuffle partitions = cores
     * (the 200 default is pure overhead in one JVM). */
-  def local(cpus: Int, appName: String = "graft"): SparkSession = {
-    val s = common(SparkSession.builder()
+  def local(cpus: Int, appName: String = "graft"): SparkSession =
+    started(common(localBuilder(cpus, appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)))
+
+  /** The [[production]] posture on a local master with no UI: the
+    * session VerifyProduction and production-posture season cells run. */
+  def localProduction(cpus: Int, appName: String): SparkSession =
+    started(production(localBuilder(cpus, appName)))
+
+  private def localBuilder(cpus: Int, appName: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")
+
+  private def started(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

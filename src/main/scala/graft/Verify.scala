@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,14 +13,8 @@ object Verify {
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark =
-      if (production) {
-        val s = GraftSession.production(SparkSession.builder()
-          .master(s"local[$cpus]")
-          .appName("graft-verify-production")
-          .config("spark.ui.enabled", "false")).getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        s
-      } else GraftSession.local(cpus.toInt, appName = "graft-verify")
+      if (production) GraftSession.localProduction(cpus.toInt, "graft-verify-production")
+      else GraftSession.local(cpus.toInt, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Queries are independent (plan building + a write to a per-query
     // directory) and Spark job submission is thread-safe, so run them on

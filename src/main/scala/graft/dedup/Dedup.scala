@@ -417,7 +417,7 @@ object Dedup {
     * that is the point of bucketing at 100 TB: the set TABLE never
     * re-exchanges — though the attached arrays still ride the pair
     * intermediate through that one doc_b exchange, the irreducible
-    * array pass (see [[ngramJaccardBucketedSlim]]). Results are
+    * array pass. Results are
     * bit-identical to [[lshJaccard]] — same oracle SQL gates both.
     * PlanSpec pins the exchange counts. */
   def lshJaccardBucketedAttach(spark: SparkSession, dir: String,
@@ -1234,8 +1234,8 @@ object Dedup {
     * only the pair intermediate redistributes (ONE exchange) onto the
     * set table's layout for the doc_b attach. Honestly stated: the gs_a
     * arrays RIDE that one exchange on every pair row — the single
-    * irreducible array pass ([[ngramJaccardBucketedSlim]] measures that
-    * it can only be traded for the other side's arrays, never avoided) —
+    * irreducible array pass (SCALE_r11 measured that it can only be
+    * traded for the other side's arrays, never avoided) —
     * while the gram TABLE itself never re-exchanges after the one-time
     * bucketed write, which at 100 TB is amortized across every
     * dedup/containment/decontamination pass that shares it. Results are
@@ -1253,52 +1253,6 @@ object Dedup {
     scoreGramAttachedPairs(candsT
       .join(setsT.select(col("doc_id").as("doc_a"), col("gs").as("gs_a")), "doc_a")
       .join(setsT.select(col("doc_id").as("doc_b"), col("gs").as("gs_b")), "doc_b"))
-  }
-
-  /** SLIM-pair attach experiment (measured in ScaleBench, not a serve
-    * entry): exchange the BARE (doc_a, doc_b) pairs (16 B/row) onto the
-    * doc_b bucket layout first, SMJ gs_b there, then ONE array-bearing
-    * exchange back onto the doc_a layout for the gs_a attach. The
-    * question it answers: the standard bucketed attach's single exchange
-    * carries gs_a on every pair row — can the array bytes be avoided?
-    * Answer (measured ×30→×50, SCALE_r11): no — the arrays still move
-    * exactly once (gs_b instead of gs_a; on a copy-duplicated corpus the
-    * sides are the same size), plus an extra bare-pair exchange, so slim
-    * is strictly ≥ the standard shape in shuffle volume. One array pass
-    * through the pair intermediate is IRREDUCIBLE for exact
-    * sorted-set intersection: n_inter needs both arrays co-located per
-    * pair, the hashes are uniform (sorted deltas don't compress), and
-    * computing n_inter from postings re-explodes the non-rare grams.
-    * Kept as the measured control behind SURVEY D4d-b's corrected
-    * claim. */
-  private[graft] def ngramJaccardBucketedSlim(spark: SparkSession, dir: String,
-                                              nBuckets: Int = -1,
-                                              reuse: Boolean = false): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
-    graft.functions.HashExpressions.register(spark)
-    val (setsT, candsT) = bucketedPair(spark, dir, "d4b", nBuckets, reuse,
-      gramSets(Tables.documents(spark, dir)),
-      s => ngramPairsOver(s.select(col("doc_id"), explode(col("gs")).as("h"))),
-      gramAltSets(spark, dir, "d4b"))
-    scoreGramAttachedPairs(candsT
-      .join(setsT.select(col("doc_id").as("doc_b"), col("gs").as("gs_b")), "doc_b")
-      .join(setsT.select(col("doc_id").as("doc_a"), col("gs").as("gs_a")), "doc_a"))
-  }
-
-  /** Slim-pair twin for the containment scorer — see
-    * [[ngramJaccardBucketedSlim]]. */
-  private[graft] def containmentBucketedSlim(spark: SparkSession, dir: String,
-                                             nBuckets: Int = -1,
-                                             reuse: Boolean = false): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
-    graft.functions.HashExpressions.register(spark)
-    val (setsT, candsT) = bucketedPair(spark, dir, "d4d", nBuckets, reuse,
-      gramSets(containCorpus(spark, dir)),
-      s => ngramPairsOver(s.select(col("doc_id"), explode(col("gs")).as("h"))),
-      gramAltSets(spark, dir, "d4d"))
-    scoreContainAttachedPairs(candsT
-      .join(setsT.select(col("doc_id").as("doc_b"), col("gs").as("gs_b")), "doc_b")
-      .join(setsT.select(col("doc_id").as("doc_a"), col("gs").as("gs_a")), "doc_a"))
   }
 
   val ngramJaccardSql: String =

@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.Bench.{clearPersisted, jnum, jstr, med, scanProbe}
+import graft.Bench.{clearPersisted, jnum, jstr, med, middle, scanProbe, timedRun}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
@@ -119,18 +119,14 @@ object MetricsListener {
 object ScaleBench {
 
   /** Diagnostic CONTROL cells: alternate shapes measured for comparison
-    * against a standard cell (the `_slim` pair experiment moves gs_b
-    * instead of gs_a; `d_dup_clusters_dist` forces the distributed
-    * min-label path the driver fast path would never take at this size).
-    * They are excluded from the "every growth ratio below ideal" claim —
-    * their ×1 walls are sub-second, so the ratio divides by noise
-    * (SCALE_r15's only over-ideal cell was a slim control at 52.3 vs
-    * ideal 50 with a 0.29 s base wall) — and flagged in the artifact so
-    * the exclusion is readable, not tribal knowledge (r15 VERDICT
-    * finding / next-round item 5). */
-  val ControlCells: Set[String] = Set(
-    "d_ngram_bucketed_slim", "d_containment_bucketed_slim",
-    "d_dup_clusters_dist")
+    * against a standard cell (`d_dup_clusters_dist` forces the
+    * distributed min-label path the driver fast path would never take at
+    * this size). They are excluded from the "every growth ratio below
+    * ideal" claim — their ×1 walls are sub-second, so the ratio divides
+    * by noise — and flagged in the artifact so the exclusion is
+    * readable, not tribal knowledge (r15 VERDICT finding / next-round
+    * item 5). */
+  val ControlCells: Set[String] = Set("d_dup_clusters_dist")
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -318,17 +314,6 @@ object ScaleBench {
       "d_containment_bucketed" -> ((s: SparkSession, d: String) =>
         graft.dedup.Dedup.containmentBucketedAttach(
           s, d, nBuckets = bucketsFor(d), reuse = true)),
-      // the slim-pair experiment (VERDICT r10 item 2): bare pairs to the
-      // doc_b layout first, arrays ride the exchange BACK — measures
-      // whether the one array pass can be avoided (it moves gs_b instead
-      // of gs_a, so on the copy corpus the volume answer is "no"; the
-      // cell makes that measured, not argued)
-      "d_ngram_bucketed_slim" -> ((s: SparkSession, d: String) =>
-        graft.dedup.Dedup.ngramJaccardBucketedSlim(
-          s, d, nBuckets = bucketsFor(d), reuse = true)),
-      "d_containment_bucketed_slim" -> ((s: SparkSession, d: String) =>
-        graft.dedup.Dedup.containmentBucketedSlim(
-          s, d, nBuckets = bucketsFor(d), reuse = true)),
       "d_lsh_bucketed" -> ((s: SparkSession, d: String) =>
         graft.dedup.Dedup.lshJaccardBucketedAttach(
           s, d, nBuckets = bucketsFor(d), reuse = true)),
@@ -356,11 +341,7 @@ object ScaleBench {
       "t_curriculum_order" -> (graft.ops.DataSelection.curriculumOrder _),
       "t_curriculum_scaled" -> (graft.ops.DataSelection.curriculumOrderScaled _))
 
-    // warm-up (codegen/classloading, as Bench does)
-    try {
-      spark.read.parquet(s"$baseDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().queryExecution.toRdd.count()
-    } catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, baseDir)
 
     // machine-state probe, a SESSION DIAGNOSTIC as in Bench: the fixed
     // scan probe over the BASE lineitem, three labeled walls up front and
@@ -369,33 +350,16 @@ object ScaleBench {
     // drift at IDENTICAL shuffle bytes between two same-tree runs an hour
     // apart, and no probe-normalized column held across sessions either
     // (the r16 rehearsal pair's x50 normalized medians sat 1.21x apart at
-    // raw 0.985x). The trailing wall exposes within-run state decay. A
-    // FAILED probe records a null wall + calib_error instead of its
-    // elapsed-to-failure time.
-    var calibError: Option[String] = None
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      val dt =
-        try {
-          scanProbe(spark, baseDir)
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          calibError = calibError.orElse(Some(
-            s"${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(160)))
-          System.err.println(s"[scale] CALIBRATION PROBE FAILED: $e")
-          Double.NaN
-        }
-      clearPersisted(spark)
-      dt
-    }
+    // raw 0.985x). The trailing wall exposes within-run state decay.
+    val probes = new graft.Bench.Probes(spark)
+    def calibOnce(): Double = probes.time("scan")(scanProbe(spark, baseDir))
     val calibWalls =
       scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     (1 to 3).foreach(i => calibWalls += (s"start$i" -> calibOnce()))
 
     // SPARK_GRAFT_ONLY=a,b,c runs a targeted probe: just the named
     // queries, skipping the censuses (band-join, cross-copy, capped
-    // recall, chain) — the fast loop for verifying one family's growth
+    // recall) — the fast loop for verifying one family's growth
     // curve after a fix without paying the full ~hour rehearsal
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -486,66 +450,52 @@ object ScaleBench {
       ()
     }
 
-    case class Cell(sec: Double, rows: Long, metrics: Map[String, Long],
+    case class Cell(sec: Double, rows: Option[Long], metrics: Map[String, Long],
                     walls: Seq[Double], legs: Map[String, Double])
     val results = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.LinkedHashMap[Int, Cell]]
 
-    // probe runs default to median-of-3 (r11 VERDICT item 3: the r11
-    // in-regime probe showed a ×30 wall ABOVE the ×50 wall for the same
-    // query — single-shot cells inherit cross-cell JVM state, and the
-    // headline linearity claims can't rest on them). Each repeat gets a
-    // full clearPersisted + GC quiesce (~90 measured queries share this
-    // JVM and the x50 cells run LAST — without it they inherit the whole
+    // probe runs are median-of-3 (r11 VERDICT item 3: the r11 in-regime
+    // probe showed a ×30 wall ABOVE the ×50 wall for the same query —
+    // single-shot cells inherit cross-cell JVM state, and the headline
+    // linearity claims can't rest on them). Every run ends with a full
+    // clearPersisted + GC quiesce (~90 measured queries share this JVM
+    // and the x50 cells run LAST — without it they inherit the whole
     // run's GC debt and the growth ratios read worse than reality); the
-    // reported cell is the repeat
-    // with the MEDIAN wall (its metrics, not a mix), and every wall is
-    // kept in the artifact so run-to-run spread is visible. The full
-    // (~60-cell) rehearsal stays single-shot — it is an hour already —
-    // unless SPARK_GRAFT_REPEATS overrides.
-    val repeats = sys.env.get("SPARK_GRAFT_REPEATS").map(_.toInt)
-      .getOrElse(if (only.isDefined) 3 else 1)
-
+    // reported cell is the middle successful run (its metrics, not a
+    // mix), and every wall is kept in the artifact so run-to-run spread
+    // is visible. The full (~60-cell) rehearsal stays single-shot — it
+    // is an hour already — except the bucketed SERVE cells, which get
+    // median-of-3 there too (r13): they are the cells capacity plans
+    // read, their single-shot walls inherited cross-cell JVM state (the
+    // r11 ×30>×50 inversion, and r12's rehearsal walls reading 2.5× the
+    // probe's), and three serve passes cost seconds against the hour.
+    // A cell with ANY failed run publishes null sec/rows and is named in
+    // the top-level `failed` list: its time-to-failure is never a wall.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    clearPersisted(spark) // timedRun quiesces after each run; this one precedes the first
     for (n <- scales; (name, fn) <- measured) {
-      val dir = dirs(n)
-      // the bucketed SERVE cells get median-of-3 even in the full
-      // rehearsal (r13): they are the cells capacity plans read, their
-      // single-shot walls inherited cross-cell JVM state (the r11 ×30>×50
-      // inversion, and r12's rehearsal walls reading 2.5× the probe's),
-      // and three serve passes cost seconds against the hour — while the
-      // corpus-scan-heavy one-shot cells stay single-shot. The `_slim`
-      // experiment CONTROLS ride the same statistic (contains, not
-      // endsWith): their growth ratios are quoted against the standard
-      // cells', and two single-shot runs of one slim cell differed 4×
-      // (20.3 vs 81.8 s at ×50) at identical shuffle bytes — all JVM
-      // state, no signal.
-      val cellRepeats =
-        if (repeats > 1 || !name.contains("_bucketed")) repeats else 3
-      val runs = (1 to cellRepeats).map { _ =>
-        clearPersisted(spark)
+      val repeats = if (only.isDefined || name.contains("_bucketed")) 3 else 1
+      val runs = (1 to repeats).map { _ =>
         listener.reset()
-        graft.ops.Legs.drain() // leftover legs must not blame this cell
-        val t0 = System.nanoTime()
-        val rows =
-          try fn(spark, dir).queryExecution.toRdd.count()
-          catch { case e: Throwable =>
-            System.err.println(s"[scale] $name x$n FAILED: ${e.getMessage}"); -1L
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val run = timedRun(spark, dirs(n), s"$name x$n", fn)
         MetricsListener.drainBus(spark)
         // any leg recorded inside THIS wall (a layout/lifecycle build the
         // reuse contract was supposed to keep out of the timed cell, or a
         // lifecycle query's declared phases) is published with the cell —
         // a rehearsal cell can no longer silently include a build
-        (sec, rows, listener.snapshot, graft.ops.Legs.drain())
+        (run, listener.snapshot)
       }
-      val sorted = runs.sortBy(_._1)
-      val mid = sorted(sorted.length / 2)
-      val cell = Cell(mid._1, mid._2, mid._3, runs.map(_._1), mid._4)
+      val ok = runs.forall(!_._1.wall.isNaN)
+      if (!ok) failed += s"$name.x$n"
+      val (mid, metrics) = middle(runs)(_._1.wall).getOrElse(runs.head)
+      val cell = Cell(if (ok) mid.wall else Double.NaN, mid.rows.filter(_ => ok),
+        metrics, runs.map(_._1.wall), mid.legs)
       results.getOrElseUpdate(name,
         scala.collection.mutable.LinkedHashMap.empty) += n -> cell
       System.err.println(f"[scale] $name%-22s x$n%-3d ${cell.sec}%7.2f s " +
-        f"rows=${cell.rows}%9d shufW=${cell.metrics("shuffle_write_bytes")}%12d" +
+        s"rows=${cell.rows.getOrElse("null")} " +
+        f"shufW=${cell.metrics("shuffle_write_bytes")}%12d" +
         (if (repeats > 1) s" walls=${cell.walls.map(w => f"$w%.1f").mkString("/")}" else ""))
     }
 
@@ -619,36 +569,6 @@ object ScaleBench {
       n -> (nKept, nFull)
     }.toMap
 
-    // k-stride convergence evidence (r8): a planted high-diameter chain
-    // is the propagation worst case — per-round checking pays ~diameter
-    // driver actions, the k-stride loop ~diameter/k; both must reach the
-    // identical fixed point. Measured directly (not via a corpus: near-dup
-    // corpora are shallow by construction, which is exactly why the
-    // adversarial chain has to be planted).
-    val chainProp = if (only.isDefined) Map.empty[String, Double] else {
-      clearPersisted(spark)
-      import spark.implicits._
-      val diam = 400
-      val edges = (0 until diam).map(i => (i.toLong, i.toLong + 1))
-        .toDF("doc_a", "doc_b")
-      def run(k: Int): (Long, Int, Double) = {
-        val t0 = System.nanoTime()
-        val (labels, actions) = graft.dedup.Dedup.propagateLabelsCounted(edges, k)
-        val wrong = labels.filter(org.apache.spark.sql.functions.col("lab") =!= 0L).count()
-        (wrong, actions, (System.nanoTime() - t0) / 1e9)
-      }
-      val strided = run(graft.dedup.Dedup.PropagateStrideCap)
-      val perRound = run(1)
-      Map("diameter" -> diam.toDouble,
-        "stride_cap" -> graft.dedup.Dedup.PropagateStrideCap.toDouble,
-        "strided_actions" -> strided._2.toDouble,
-        "strided_sec" -> strided._3,
-        "strided_wrong_labels" -> strided._1.toDouble,
-        "per_round_actions" -> perRound._2.toDouble,
-        "per_round_sec" -> perRound._3,
-        "per_round_wrong_labels" -> perRound._1.toDouble)
-    }
-
     // ---- JSON out ---------------------------------------------------
     calibWalls += ("end" -> calibOnce()) // trailing wall: state decay
     val calibSec = med(calibWalls.map(_._2).toSeq)
@@ -659,7 +579,7 @@ object ScaleBench {
       .append(", \"calib_walls\": {")
       .append(calibWalls.map { case (l, w) => s""""$l": ${jnum(w)}""" }
         .mkString(", ")).append("}")
-      .append(calibError.fold("")(e => s""", "calib_error": ${jstr(e)}"""))
+      .append(probes.error.fold("")(e => s""", "calib_error": ${jstr(e)}"""))
       // heap decides spill at fixed data: record it so runs are comparable
       .append(", \"heap_gb\": ")
       .append(Runtime.getRuntime.maxMemory / (1024L * 1024 * 1024))
@@ -668,10 +588,10 @@ object ScaleBench {
       .append("disjoint-shard scale model (ScaleData scaladoc): true dup ")
       .append("pairs grow exactly linearly, so super-linear growth in any ")
       .append("measured quantity is an algorithmic artifact. Cells flagged ")
-      .append("control=true are diagnostic comparisons (_slim pair ")
-      .append("experiment, forced distributed clustering) excluded from ")
-      .append("the every-growth-ratio-below-ideal claim: their x1 walls ")
-      .append("are sub-second, so the ratio divides by noise.\"},\n")
+      .append("control=true are diagnostic comparisons (forced ")
+      .append("distributed clustering) excluded from the ")
+      .append("every-growth-ratio-below-ideal claim: their x1 walls are ")
+      .append("sub-second, so the ratio divides by noise.\"},\n")
     if (only.isDefined)
       sb.append("  \"probe_only\": [")
         .append(measured.map(q => s""""${q._1}"""").mkString(", "))
@@ -690,10 +610,6 @@ object ScaleBench {
       }.mkString(", ")
       s""""x$n": {$inner}"""
     }.mkString(", ")).append("},\n")
-    sb.append("  \"label_propagation_chain\": {")
-    sb.append(chainProp.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""$k": ${jnum(v)}""" }.mkString(", "))
-    sb.append("},\n")
     }
     if (layoutBuildWalls.nonEmpty) {
       sb.append("  \"layout_build\": {")
@@ -703,6 +619,8 @@ object ScaleBench {
           s""""$k": [${ws.map(jnum(_)).mkString(", ")}]""" }).mkString(", "))
       sb.append("},\n")
     }
+    sb.append("  \"failed\": [").append(failed.sorted.map(jstr).mkString(", "))
+      .append("],\n")
     sb.append("  \"queries\": {\n")
     sb.append(results.map { case (name, cells) =>
       val base = cells(scales.head)
@@ -714,11 +632,13 @@ object ScaleBench {
         val legsJson = if (c.legs.isEmpty) "" else
           s""", "legs": {${c.legs.toSeq.sortBy(_._1)
             .map { case (k, v) => s""""$k": ${jnum(v)}""" }.mkString(", ")}}"""
-        s""""x$n": {"sec": ${jnum(c.sec)}, "rows": ${c.rows}, "includes_build": $includesBuild, $m$walls$legsJson}"""
+        s""""x$n": {"sec": ${jnum(c.sec)}, "rows": ${c.rows.getOrElse("null")}, "includes_build": $includesBuild, $m$walls$legsJson}"""
       }.mkString(", ")
       val growth = cells.map { case (n, c) =>
         val ideal = n.toDouble / scales.head
-        s""""x$n": {"time_ratio": ${jnum(c.sec / base.sec)}, "ideal": ${jnum(ideal)}, "rows_ratio": ${jnum(c.rows.toDouble / base.rows)}, "shuffle_write_ratio": ${jnum(c.metrics("shuffle_write_bytes").toDouble / math.max(1L, base.metrics("shuffle_write_bytes")))}}"""
+        val rowsRatio = (for (r <- c.rows; b <- base.rows) yield r.toDouble / b)
+          .getOrElse(Double.NaN)
+        s""""x$n": {"time_ratio": ${jnum(c.sec / base.sec)}, "ideal": ${jnum(ideal)}, "rows_ratio": ${jnum(rowsRatio)}, "shuffle_write_ratio": ${jnum(c.metrics("shuffle_write_bytes").toDouble / math.max(1L, base.metrics("shuffle_write_bytes")))}}"""
       }.mkString(", ")
       s"""    "$name": {"control": ${ControlCells(name)}, $perScale, "growth": {$growth}}"""
     }.mkString(",\n"))
@@ -729,5 +649,10 @@ object ScaleBench {
     try w.write(sb.toString) finally w.close()
     System.err.println(s"[scale] wrote $outFile")
     spark.stop()
+    // a failed cell fails the process, after the artifact is written
+    if (failed.nonEmpty) {
+      System.err.println(s"[scale] ${failed.size} cells failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

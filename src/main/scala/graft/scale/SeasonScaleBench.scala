@@ -44,15 +44,9 @@ object SeasonScaleBench {
     // knob exists to MEASURE that claim (r9 verdict item 4)
     val posture = sys.env.getOrElse("SPARK_GRAFT_SEASON_POSTURE", "local")
     val spark =
-      if (posture == "production") {
-        val s = graft.GraftSession.production(
-          org.apache.spark.sql.SparkSession.builder()
-            .master(s"local[$cpus]")
-            .appName("graft-season-scale-prod")
-            .config("spark.ui.enabled", "false")).getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        s
-      } else graft.GraftSession.local(cpus, appName = "graft-season-scale")
+      if (posture == "production")
+        graft.GraftSession.localProduction(cpus, "graft-season-scale-prod")
+      else graft.GraftSession.local(cpus, appName = "graft-season-scale")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 

@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.Bench.jnum
 import org.apache.spark.sql.functions._
 
 /** Cross-process evidence harness for the SHARED bucketed dedup layout
@@ -64,8 +65,7 @@ object XprocBench {
         val builds = graft.dedup.Dedup.bucketedBuildsFor(corpus, "d4b")
         // second pass = the serve statistic: layout present, catalog
         // registered, so this wall is pair-gen + attach + score only
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        graft.Bench.clearPersisted(spark)
         val w1 = System.nanoTime()
         query().queryExecution.toRdd.count()
         val serveSec = (System.nanoTime() - w1) / 1e9
@@ -85,7 +85,7 @@ object XprocBench {
           .map(_.toLong).map(v =>
             query().filter(col("doc_a") === v || col("doc_b") === v).count())
         s"""{"role":"serve","pid":$pid,"builds":$builds,""" +
-          s""""first_sec":${f"$firstSec%.3f"},"serve_sec":${f"$serveSec%.3f"},""" +
+          s""""first_sec":${jnum(firstSec)},"serve_sec":${jnum(serveSec)},""" +
           s""""rows":$rows,"hash":"$hash","gen":"$gen"""" +
           victimPairs.map(v => s""","victim_pairs":$v""").getOrElse("") + "}"
 

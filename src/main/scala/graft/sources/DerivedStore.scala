@@ -12,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *  - a `_built` marker whose content is the entry's freshness key
   *    (parameters + data fingerprint), written last;
   *  - a `_src` record of the base path it derives from (orphan sweep);
-  *  - a `.<entry>.lock` file beside it (cross-process build lock).
+  *  - a `.<entry>.lock` file beside it (cross-process build lock). The
+  *    lock file outlives its entry by design: another process may be
+  *    blocked on the lock's inode, and a recreated file would let two
+  *    builders each hold "the" lock at once.
   * A scratch entry instead holds a `_scratch` marker with the owning
   * pid. Only this object reads or writes those names; entry PAYLOAD
   * (an index's tables, a layout's `_gen`/`_meta`, a pin's `_vpin`)
@@ -59,9 +62,15 @@ object DerivedStore {
     * is re-checked on every call: a temp cleaner may delete it, and
     * another user may then recreate it. */
   private[graft] def cacheRoot: String =
-    sys.env.get("GRAFT_ANN_CACHE_DIR")
-      .orElse(sys.props.get("graft.ann.cache.dir"))
-      .getOrElse(defaultCacheRoot)
+    configuredCacheRoot(sys.env.get("GRAFT_ANN_CACHE_DIR"),
+      sys.props.get("graft.ann.cache.dir")).getOrElse(defaultCacheRoot)
+
+  /** The first non-empty setting of the env value and the property. An
+    * empty value counts as unset: as a root it would put every entry in
+    * `/graft-ann-index` at the filesystem root. */
+  private[graft] def configuredCacheRoot(env: Option[String],
+                                         prop: Option[String]): Option[String] =
+    env.filter(_.nonEmpty).orElse(prop.filter(_.nonEmpty))
 
   private[graft] def defaultCacheRoot: String = privateDir(java.nio.file.Paths.get(
     System.getProperty("java.io.tmpdir"), s"graft-${System.getProperty("user.name")}"))

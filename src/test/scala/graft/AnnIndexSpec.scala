@@ -130,6 +130,16 @@ class AnnIndexSpec extends SparkTestBase {
     intercept[IllegalStateException](DerivedStore.privateDir(link))
   }
 
+  test("an empty cache-root setting counts as unset") {
+    import DerivedStore.configuredCacheRoot
+    assert(configuredCacheRoot(Some("/e"), Some("/p")).contains("/e"))
+    assert(configuredCacheRoot(Some(""), Some("/p")).contains("/p"))
+    assert(configuredCacheRoot(None, Some("/p")).contains("/p"))
+    // nothing usable set: cacheRoot falls to the per-user default
+    assert(configuredCacheRoot(Some(""), Some("")).isEmpty)
+    assert(configuredCacheRoot(None, None).isEmpty)
+  }
+
   test("two source dirs never alias one cache entry") {
     val a = stageEmbeddings(); val b = stageEmbeddings()
     assert(DerivedStore.cachedIndexDir(a, "pq") != DerivedStore.cachedIndexDir(b, "pq"))
