@@ -42,8 +42,7 @@ object Verify {
     // Release point for caches persisted inside query builders (the dedup
     // family persists shared scans it references twice; the lazy result
     // can't unpersist them itself without defeating the share).
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Bench.clearPersisted(spark)
     // every control char is escaped: a tab or CR in the SQL would
     // otherwise make the driver's json.load fail and silently zero the
     // round's correctness

@@ -32,45 +32,41 @@ object EpaModel {
   private def downDummies(down: org.apache.spark.sql.Column): Seq[(String, org.apache.spark.sql.Column)] =
     (1 to 5).map(d => s"down$d" -> when(down === d, 1).otherwise(0))
 
-  /** Catch-branch post-state (play ends at play_endpoint_x). */
+  /** Turnover on downs: possession flips — invert field, fresh set. Reads
+    * `down5` and the `*_post` columns of the step before. */
+  private val turnover: Map[String, org.apache.spark.sql.Column] = Map(
+    "yardline_100_post" -> when(col("down5") === 1,
+      lit(100.0) - col("yardline_100_post")).otherwise(col("yardline_100_post")),
+    "ydstogo_post" -> when(col("down5") === 1, 10.0).otherwise(col("ydstogo_post")),
+    "down1" -> when(col("down5") === 1, 1).otherwise(col("down1")))
+
+  /** Catch-branch post-state (play ends at play_endpoint_x). Each step is
+    * one withColumns over the step before. */
   def catchState(grid: DataFrame): DataFrame = {
     val los = lit(110.0) - col("yardline_100")
     val firstDownLine = los + col("ydstogo")
     val isFirst = when(col("play_endpoint_x") >= firstDownLine, 1).otherwise(0)
-    val nextDown = col("down_x") + 1
-    val base = grid
-      .withColumn("isFirstDown", isFirst)
-      .withColumn("yardline_100_post",
-        greatest(lit(0.0), least(lit(100.0), round(lit(110.0) - col("play_endpoint_x")))))
-      .withColumn("ydstogo_post",
-        when(isFirst === 1, 10.0).otherwise(firstDownLine - col("play_endpoint_x")))
-    val withDowns = downDummies(nextDown).foldLeft(base) { case (df, (n, c)) =>
-      // first down resets to down 1
-      val reset = if (n == "down1") when(col("isFirstDown") === 1, 1).otherwise(c)
-                  else when(col("isFirstDown") === 1, 0).otherwise(c)
-      df.withColumn(n, reset)
-    }
-    // turnover on downs: possession flips — invert field, fresh set
-    withDowns
-      .withColumn("yardline_100_post", when(col("down5") === 1,
-        lit(100.0) - col("yardline_100_post")).otherwise(col("yardline_100_post")))
-      .withColumn("ydstogo_post", when(col("down5") === 1, 10.0).otherwise(col("ydstogo_post")))
-      .withColumn("down1", when(col("down5") === 1, 1).otherwise(col("down1")))
+    val base = grid.withColumns(Map(
+      "isFirstDown" -> isFirst,
+      "yardline_100_post" ->
+        greatest(lit(0.0), least(lit(100.0), round(lit(110.0) - col("play_endpoint_x")))),
+      "ydstogo_post" ->
+        when(isFirst === 1, 10.0).otherwise(firstDownLine - col("play_endpoint_x"))))
+    // first down resets to down 1
+    val withDowns = base.withColumns(downDummies(col("down_x") + 1).map { case (n, c) =>
+      n -> (if (n == "down1") when(col("isFirstDown") === 1, 1).otherwise(c)
+            else when(col("isFirstDown") === 1, 0).otherwise(c))
+    }.toMap)
+    withDowns.withColumns(turnover)
   }
 
   /** Incomplete-branch post-state (ball returns to LOS, next down). */
-  def incompleteState(preState: DataFrame): DataFrame = {
-    val nextDown = col("down_x") + 1
-    val base = preState.withColumn("isFirstDown", lit(0))
-    val withDowns = downDummies(nextDown).foldLeft(base) { case (df, (n, c)) =>
-      df.withColumn(n, c)
-    }
-    withDowns
-      .withColumn("yardline_100_post", when(col("down5") === 1,
-        lit(100.0) - col("yardline_100")).otherwise(col("yardline_100")))
-      .withColumn("ydstogo_post", when(col("down5") === 1, 10.0).otherwise(col("ydstogo")))
-      .withColumn("down1", when(col("down5") === 1, 1).otherwise(col("down1")))
-  }
+  def incompleteState(preState: DataFrame): DataFrame =
+    preState.withColumns((downDummies(col("down_x") + 1) ++ Seq(
+      "isFirstDown" -> lit(0),
+      "yardline_100_post" -> col("yardline_100"),
+      "ydstogo_post" -> col("ydstogo"))).toMap)
+      .withColumns(turnover)
 
   /** Assemble the per-endpoint EPA table. `scoreEp` maps a DataFrame with
     * post-state columns to the same frame + `xep` column (GBDT EP
@@ -78,39 +74,28 @@ object EpaModel {
     * (x ≥ 110 → 7) overrides and the turnover sign inversion
     * (`play_eppa_cpu.py:203-210`). */
   def epaTable(preState: DataFrame, scoreEp: DataFrame => DataFrame): DataFrame = {
-    val beforeEp = scoreEp(
-      downDummies(col("down_x")).foldLeft(preState) { case (df, (n, c)) =>
-        df.withColumn(n, c)
-      }
-        .withColumn("isFirstDown", lit(0))
-        .withColumn("yardline_100_post", col("yardline_100"))
-        .withColumn("ydstogo_post", col("ydstogo")))
+    // the pre-play and incomplete-branch EP are per-play values: score them
+    // on the play rows before the endpoint explode, so no join brings them
+    // back to the endpoints
+    val before = scoreEp(preState.withColumns((downDummies(col("down_x")) ++ Seq(
+        "isFirstDown" -> lit(0),
+        "yardline_100_post" -> col("yardline_100"),
+        "ydstogo_post" -> col("ydstogo"))).toMap))
       .withColumnRenamed("xep", "before_play_ep")
-      .select("gameId", "playId", "before_play_ep")
+    val inc = scoreEp(incompleteState(before))
+      .withColumnsRenamed(Map("xep" -> "xep_inc_raw", "down5" -> "inc_down5"))
+    val comp = scoreEp(catchState(endpointGrid(inc)))
 
-    val inc = scoreEp(incompleteState(preState))
-      .withColumn("xep_inc_raw", col("xep"))
-      .select(col("gameId"), col("playId"), col("xep_inc_raw"),
-        col("down5").as("inc_down5"))
-
-    val comp = scoreEp(catchState(endpointGrid(preState)))
-      // safety / touchdown overrides
-      .withColumn("xep", when(col("play_endpoint_x") <= 10, -2.0)
-        .when(col("play_endpoint_x") >= 110, 7.0)
-        .otherwise(col("xep")))
-
-    comp
-      .join(broadcast(beforeEp), Seq("gameId", "playId"))
-      .join(broadcast(inc), Seq("gameId", "playId"))
-      .withColumn("xep_comp", col("xep"))
-      .withColumn("xepa_comp",
-        when(col("down5") === 1, -col("xep_comp") - col("before_play_ep"))
-          .otherwise(col("xep_comp") - col("before_play_ep")))
-      .withColumn("xep_inc", col("xep_inc_raw"))
-      .withColumn("xepa_inc",
-        when(col("inc_down5") === 1, -col("xep_inc") - col("before_play_ep"))
-          .otherwise(col("xep_inc") - col("before_play_ep")))
-      .select("gameId", "playId", "play_endpoint_x",
-        "xep_comp", "xepa_comp", "xep_inc", "xepa_inc")
+    // safety / touchdown overrides
+    val xepComp = when(col("play_endpoint_x") <= 10, -2.0)
+      .when(col("play_endpoint_x") >= 110, 7.0)
+      .otherwise(col("xep"))
+    comp.select(col("gameId"), col("playId"), col("play_endpoint_x"),
+      xepComp.as("xep_comp"),
+      when(col("down5") === 1, -xepComp - col("before_play_ep"))
+        .otherwise(xepComp - col("before_play_ep")).as("xepa_comp"),
+      col("xep_inc_raw").as("xep_inc"),
+      when(col("inc_down5") === 1, -col("xep_inc_raw") - col("before_play_ep"))
+        .otherwise(col("xep_inc_raw") - col("before_play_ep")).as("xepa_inc"))
   }
 }

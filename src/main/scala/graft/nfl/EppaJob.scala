@@ -1,6 +1,6 @@
 package graft.nfl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,30 +30,28 @@ object EppaJob {
   def frameInputs(norm: DataFrame): Dataset[FrameEppa.FrameInput] = {
     val spark = norm.sparkSession
     import spark.implicits._
+    // the five per-play columns in one select plan as one Window operator
     val wPlay = Window.partitionBy("gameId", "playId")
+    val arrived = col("event") === "pass_arrived"
+    val fss = col("frameId") - col("snap_frame")
     val annotated = norm
-      .withColumn("snap_frame",
-        min(when(col("event") === "ball_snap", col("frameId"))).over(wPlay))
-      // pass_shovel counts as the throw too (play_eppa_cpu.py:101-102)
-      .withColumn("throw_frame",
+      .select(col("*"),
+        min(when(col("event") === "ball_snap", col("frameId"))).over(wPlay).as("snap_frame"),
+        // pass_shovel counts as the throw too (play_eppa_cpu.py:101-102)
         min(when(col("event").isin("pass_forward", "pass_shovel"),
-          col("frameId"))).over(wPlay))
-      .withColumn("arrive_frame",
-        min(when(col("event") === "pass_arrived", col("frameId"))).over(wPlay))
-      // actual landing spot = ball position at pass_arrived → true-pass
-      // backtest indices (play_eppa_cpu.py:105-119)
-      .withColumn("true_bx", max(when(
-        col("nflId") === 0 && col("event") === "pass_arrived", col("x"))).over(wPlay))
-      .withColumn("true_by", max(when(
-        col("nflId") === 0 && col("event") === "pass_arrived", col("y"))).over(wPlay))
-      .withColumn("fss", col("frameId") - col("snap_frame"))
+          col("frameId"))).over(wPlay).as("throw_frame"),
+        min(when(arrived, col("frameId"))).over(wPlay).as("arrive_frame"),
+        // actual landing spot = ball position at pass_arrived → true-pass
+        // backtest indices (play_eppa_cpu.py:105-119)
+        max(when(col("nflId") === 0 && arrived, col("x"))).over(wPlay).as("true_bx"),
+        max(when(col("nflId") === 0 && arrived, col("y"))).over(wPlay).as("true_by"))
       .filter(col("snap_frame").isNotNull && col("throw_frame").isNotNull &&
-        col("fss") >= MinFramesAfterSnap &&
-        col("fss") <= MaxFramesAfterSnap &&
+        fss >= MinFramesAfterSnap && fss <= MaxFramesAfterSnap &&
         col("frameId") <= col("throw_frame"))
-      .select("gameId", "playId", "frameId", "fss", "nflId", "displayName",
-        "team_pos", "position", "x", "y", "v_x", "v_y", "a_x", "a_y",
-        "throw_frame", "arrive_frame", "true_bx", "true_by")
+      .select(col("gameId"), col("playId"), col("frameId"), fss.as("fss"),
+        col("nflId"), col("displayName"), col("team_pos"), col("position"),
+        col("x"), col("y"), col("v_x"), col("v_y"), col("a_x"), col("a_y"),
+        col("throw_frame"), col("arrive_frame"), col("true_bx"), col("true_by"))
 
     annotated
       .groupByKey(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -139,19 +137,29 @@ object EppaJob {
     * `true_pass_player_proj.pkl`, play_eppa_cpu.py:675). DYNAMIC
     * partition overwrite at (gameId, playId) granularity: a resumed run
     * writing only new plays replaces exactly those partitions —
-    * static overwrite would truncate everything already computed. */
-  def writeOutputs(out: Dataset[FrameEppa.FrameOutput], dir: String): Unit = {
-    val spark = out.sparkSession
-    import spark.implicits._
-    def write(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+    * static overwrite would truncate everything already computed.
+    *
+    * Each table is a column projection of `out`, so a write reads only
+    * its own column of a cached `out` and never rebuilds the frame
+    * objects. Persistence stays with the caller: persist `out` first, or
+    * every write reruns the kernel. */
+  def writeOutputs(out: Dataset[FrameEppa.FrameOutput], dir: String): Unit =
+    writeCounted(out, dir)
+
+  /** [[writeOutputs]], returning the number of frames written, counted
+    * while the `passes` table is written; with no frames the other three
+    * tables are not written. */
+  private[nfl] def writeCounted(out: Dataset[FrameEppa.FrameOutput], dir: String): Long = {
+    def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("gameId", "playId").parquet(s"$dir/$name")
-    val cached = out.cache()
-    write(cached.map(_.pass).toDF(), "passes")
-    write(cached.flatMap(_.players).toDF(), "player_stats")
-    write(cached.flatMap(_.field).toDF(), "field_viz")
-    write(cached.flatMap(_.proj).toDF(), "player_proj")
-    cached.unpersist()
+    val frames = Observation("frames")
+    write(out.select("pass.*").observe(frames, count(lit(1)).as("n")), "passes")
+    val n = frames.get("n").asInstanceOf[Long]
+    if (n > 0)
+      Seq("players" -> "player_stats", "field" -> "field_viz", "proj" -> "player_proj")
+        .foreach { case (c, name) => write(out.select(explode(col(c)).as("r")).select("r.*"), name) }
+    n
   }
 }

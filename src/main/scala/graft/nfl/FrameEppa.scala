@@ -16,11 +16,17 @@ package graft.nfl
   *    CPU path cumprods over the wrong axis.
   *
   * Memory shape: the reference materializes (F,T,T,J) ≈ 1.8 GB/frame; we
-  * never do. p_int_adj is the only (F,T,J) array (~44 MB); the trajectory
+  * never do. p_int_adj and the per-player completion are the two (F,T,J)
+  * arrays (~44 MB each, reused across a task's frames); the trajectory
   * integration walks τ per (f,T) with a running survival product —
-  * O(F·ΣT·J) ops, O(J) extra space. That is what makes one frame a
-  * sane unit of Spark work at 100 TB: ~50 MB peak, a few hundred ms of
-  * CPU.
+  * O(F·ΣT·J) ops, O(J) extra space. p_int_adj is filled one (cell, T)
+  * slice at a time, the first time a trajectory inside the catchable z
+  * window (or the true-pass projection) reads it — about half the
+  * slices — together with the slice's Π_j(1 − p_adj); a per-frame flag
+  * array marks the filled slices. Cells with a zero prior skip the trans
+  * pow and the per-player sums, which they would add +0.0 to. That is
+  * what makes one frame a sane unit of Spark work at 100 TB: ~100 MB of
+  * scratch, ~150 ms of CPU with the stub xyac scorer.
   */
 object FrameEppa {
 
@@ -142,10 +148,9 @@ object FrameEppa {
                      xyacBatch: XyacBatchScorer = null) {
 
     /** Per-J scratch. Arrays fully overwritten every frame are reused
-      * as-is; accumulators and conditionally-assigned arrays (ppcInd,
-      * prior, xyac, lMask) are memset at frame start — half the memory
-      * traffic of fresh allocation (the JVM zeroes new arrays anyway)
-      * and zero GC. */
+      * as-is; conditionally-assigned arrays (pAdjSet, prior, xyac, lMask)
+      * are memset at frame start — half the memory traffic of fresh
+      * allocation (the JVM zeroes new arrays anyway) and zero GC. */
     private final class Scratch(val J: Int) {
       val tTot = new Array[Double](F * J)
       val cosTh = new Array[Double](F * J)
@@ -154,10 +159,10 @@ object FrameEppa {
       val s0A = new Array[Double](F * J)
       val tLtA = new Array[Double](F * J)
       val dLtA = new Array[Double](F * J)
-      val pAdj = new Array[Double](F * NT * J)
-      val ppcInd = new Array[Double](F * NT * J) // accumulated: clear per frame
-      val pOffC = new Array[Double](F * NT)
-      val pDefC = new Array[Double](F * NT)
+      val pAdj = new Array[Double](F * NT * J)   // filled per (f, k) slice on first read
+      val pAdjSet = new Array[Boolean](F * NT)   // which slices are filled: clear per frame
+      val qAll = new Array[Double](F * NT)       // Π_j (1 − p_adj) of each filled slice
+      val ppcInd = new Array[Double](F * NT * J)
       val ppcOff = new Array[Double](F * NT)
       val ppcDef = new Array[Double](F * NT)
       val lMask = new Array[Double](F)           // conditional: clear per frame
@@ -166,7 +171,6 @@ object FrameEppa {
       val trans = new Array[Double](F * NT)
       val eppa1 = new Array[Double](F * NT)
       val xepaComp = new Array[Double](F * NT)
-      val pj = new Array[Double](J)
       var featBuf: Array[Double] = Array.emptyDoubleArray
       var cellIdx: Array[Int] = Array.emptyIntArray
       var scored: Array[Double] = Array.emptyDoubleArray
@@ -176,13 +180,25 @@ object FrameEppa {
         scored = new Array[Double](n)
       }
       def reset(): Unit = {
-        java.util.Arrays.fill(ppcInd, 0.0)
+        java.util.Arrays.fill(pAdjSet, false)
         java.util.Arrays.fill(lMask, 0.0)
         java.util.Arrays.fill(prior, 0.0)
         java.util.Arrays.fill(xyac, 0.0)
       }
     }
     private var scratch: Scratch = null
+
+    /** The flight-time steps τ ≤ k at which a ball thrown with flight time
+      * tOf(k) is inside the catchable z window, ascending. The ball's
+      * height depends on (k, τ) only, not on the landing cell. */
+    private val catchable: Array[Array[Int]] = Array.tabulate(NT) { k =>
+      val vz0 = tOf(k) * G / 2.0
+      (0 to k).filter { tau =>
+        val tt = tOf(tau)
+        val z = 2.0 + vz0 * tt - 0.5 * G * tt * tt
+        z > params.zMin && z < params.zMax
+      }.toArray
+    }
 
     /** F1–F10 for one frame. epaComp(i) = xepa if the play ends at
       * x = i + 0.5 (120 entries); epaInc = incompletion xepa. */
@@ -245,55 +261,50 @@ object FrameEppa {
         f += 1
       }
 
-      // ---- F3/F4: p_int + team combine + offense adjustment
+      // ---- F3/F4: p_int + team combine + offense adjustment, one (f, k)
+      // slice of p_adj at a time, filled the first time F7 or the true-pass
+      // projection reads it: F7 reaches only the cells a catchable
+      // trajectory passes through, about half of them
       // p_adj(f,k,j): offense scaled by (1 − p_def) (frame_eppa.py:205-207)
       val sigK = math.Pi / math.sqrt(3.0) / params.ttiSigma
       val pAdj = scratch.pAdj
-      val pOffC = scratch.pOffC // p_int_off after adjustment
-      val pDefC = scratch.pDefC
-      f = 0
-      while (f < F) {
-        var k = 0
-        while (k < NT) {
-          val tt = tOf(k)
-          var prodDef = 1.0
-          j = 0
-          while (j < J) {
-            // saturated-sigmoid guard: beyond |36/σk| the exp under/overflows
-            // to an exact 0/1 anyway — skip the transcendental (most field
-            // cells are far from most players, so this is the common case)
-            val a = sigK * (tt - tTot(f * J + j))
-            val p = if (a > 36.0) 1.0
-                    else if (a < -36.0) 0.0
-                    else 1.0 / (1.0 + math.exp(-a))
-            pAdj((f * NT + k) * J + j) = p
-            if (!ps(j).isOff) prodDef *= (1.0 - p)
-            j += 1
-          }
-          val pDef = 1.0 - prodDef
-          var prodOff = 1.0
-          j = 0
-          while (j < J) {
-            val i = (f * NT + k) * J + j
-            if (ps(j).isOff) {
-              pAdj(i) *= (1.0 - pDef)
-              prodOff *= (1.0 - pAdj(i))
-            }
-            j += 1
-          }
-          pOffC(f * NT + k) = 1.0 - prodOff
-          pDefC(f * NT + k) = pDef
-          k += 1
+      val pAdjSet = scratch.pAdjSet
+      val qAll = scratch.qAll
+      def fillPAdj(f: Int, k: Int): Unit = {
+        val tt = tOf(k)
+        val slice = f * NT + k
+        val base = slice * J
+        var prodDef = 1.0
+        var j = 0
+        while (j < J) {
+          // saturated-sigmoid guard: beyond |36/σk| the exp under/overflows
+          // to an exact 0/1 anyway — skip the transcendental (most field
+          // cells are far from most players, so this is the common case)
+          val a = sigK * (tt - tTot(f * J + j))
+          val p = if (a > 36.0) 1.0
+                  else if (a < -36.0) 0.0
+                  else 1.0 / (1.0 + math.exp(-a))
+          pAdj(base + j) = p
+          if (!ps(j).isOff) prodDef *= (1.0 - p)
+          j += 1
         }
-        f += 1
+        val pDef = 1.0 - prodDef
+        var prodAll = 1.0
+        j = 0
+        while (j < J) {
+          if (ps(j).isOff) pAdj(base + j) *= (1.0 - pDef)
+          prodAll *= (1.0 - pAdj(base + j))
+          j += 1
+        }
+        qAll(slice) = prodAll
+        pAdjSet(slice) = true
       }
 
       // ---- F7 trajectory completion (gpu path semantics) → ppc
       // (outputs copy scalars out of these; nothing escapes the call)
       val ppcOff = scratch.ppcOff
       val ppcDef = scratch.ppcDef
-      val ppcInd = scratch.ppcInd // completion per player (cleared in reset)
-      val pj = scratch.pj
+      val ppcInd = scratch.ppcInd // completion per player
       f = 0
       while (f < F) {
         val dx = gx(f) - bx; val dy = gy(f) - by
@@ -301,29 +312,24 @@ object FrameEppa {
         while (k < NT) {
           val T = tOf(k)
           val vx = dx / T; val vy = dy / T
-          val vz0 = T * G / 2.0
           var surv = 1.0
           val base = (f * NT + k) * J
-          var tau = 0
-          while (tau <= k) {
+          java.util.Arrays.fill(ppcInd, base, base + J, 0.0)
+          // the ball's cell matters only inside the catchable z window
+          val taus = catchable(k)
+          var ti = 0
+          while (ti < taus.length) {
+            val tau = taus(ti)
             val tt = tOf(tau)
-            val z = 2.0 + vz0 * tt - 0.5 * G * tt * tt
-            // the ball's cell matters only inside the catchable z window
-            if (z > params.zMin && z < params.zMax) {
-              val cx = math.rint(math.max(0.0, math.min(Nx - 1.0, bx + vx * tt))).toInt
-              val cy = math.rint(math.max(0.0, math.min(Ny - 1.0, by + vy * tt))).toInt
-              val cell = cy * Nx + cx
-              val cb = (cell * NT + tau) * J
-              var prodAll = 1.0
-              j = 0
-              while (j < J) {
-                val p = pAdj(cb + j); pj(j) = p; prodAll *= (1.0 - p); j += 1
-              }
-              j = 0
-              while (j < J) { ppcInd(base + j) += surv * pj(j); j += 1 }
-              surv *= prodAll
-            }
-            tau += 1
+            val cx = math.rint(math.max(0.0, math.min(Nx - 1.0, bx + vx * tt))).toInt
+            val cy = math.rint(math.max(0.0, math.min(Ny - 1.0, by + vy * tt))).toInt
+            val slice = (cy * Nx + cx) * NT + tau
+            if (!pAdjSet(slice)) fillPAdj(cy * Nx + cx, tau)
+            val cb = slice * J
+            j = 0
+            while (j < J) { ppcInd(base + j) += surv * pAdj(cb + j); j += 1 }
+            surv *= qAll(slice)
+            ti += 1
           }
           // team combine: 1 − Π(1 − ind) (play_eppa_gpu.py:428-430)
           var po = 1.0; var pd = 1.0
@@ -492,7 +498,9 @@ object FrameEppa {
       var transSum = 0.0
       var i = 0
       while (i < F * NT) {
-        trans(i) = prior(i) * math.pow(ppcOff(i), params.alpha)
+        // prior == 0 ⇒ trans == +0.0 exactly (ppcOff ∈ [0, 1] for finite
+        // inputs, so the pow is finite): skip the pow on the masked cells
+        trans(i) = if (prior(i) == 0.0) 0.0 else prior(i) * math.pow(ppcOff(i), params.alpha)
         transSum += trans(i)
         i += 1
       }
@@ -535,19 +543,23 @@ object FrameEppa {
         } else pass0
 
       // one sequential pass over ppcInd (cell-outer, player-inner); each
-      // player's sums still accumulate in cell order, so bits are unchanged
+      // player's sums still accumulate in cell order, so bits are unchanged.
+      // A cell with trans == 0 adds ±0.0 to sums that start at +0.0 and
+      // are never −0.0, which leaves them as they are: skip it
       val sV = new Array[Double](J); val sW = new Array[Double](J)
       var c = 0
       while (c < F * NT) {
         val tr = trans(c)
-        val dv = xepaComp(c) - epaInc
-        val cb = c * J
-        j = 0
-        while (j < J) {
-          val w = ppcInd(cb + j) * tr
-          sW(j) += w
-          sV(j) += w * dv
-          j += 1
+        if (tr != 0.0) {
+          val dv = xepaComp(c) - epaInc
+          val cb = c * J
+          j = 0
+          while (j < J) {
+            val w = ppcInd(cb + j) * tr
+            sW(j) += w
+            sV(j) += w * dv
+            j += 1
+          }
         }
         c += 1
       }
@@ -579,6 +591,7 @@ object FrameEppa {
         if (in.trueFIdx >= 0 && in.trueFIdx < F &&
             in.trueTIdx >= 0 && in.trueTIdx < NT) {
           val tfI = in.trueFIdx; val tkI = in.trueTIdx
+          if (!pAdjSet(tfI * NT + tkI)) fillPAdj(tfI, tkI)
           val T = tOf(tkI)
           Array.tabulate(J) { jj =>
             val idx = tfI * J + jj

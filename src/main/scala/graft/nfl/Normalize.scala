@@ -44,78 +44,77 @@ object Normalize {
           .otherwise(lit("FTBL")))
       .join(broadcast(plays.select("gameId", "playId", "possessionTeam")),
         Seq("gameId", "playId"))
-      // OFF/DEF/FTBL (normalize.py:30-31)
-      .withColumn("team_pos",
-        when(col("teamAbbr") === "FTBL", lit("FTBL"))
-          .when(col("teamAbbr") === col("possessionTeam"), lit("OFF"))
-          .otherwise(lit("DEF")))
-      // line of scrimmage: ball x at ball_snap, broadcast to the play via a
-      // whole-partition window instead of the reference's self-join (J3)
-      .withColumn("los", max(when(
-        col("displayName") === "Football" && col("event") === "ball_snap",
-        col("x"))).over(wPlay))
 
-    // direction normalization: all plays flow rightward (normalize.py:43-57)
-    val leftFlip = withDims
-      .withColumn("x", when(col("playDirection") === "left",
-        lit(Schemas.FieldXMax) - col("x")).otherwise(col("x")))
-      .withColumn("y", when(col("playDirection") === "left",
-        lit(Schemas.FieldYMax) - col("y")).otherwise(col("y")))
-      .withColumn("o", when(col("playDirection") === "left",
-        pmod(col("o") + 180.0, lit(360.0))).otherwise(col("o")))
-      .withColumn("dir", when(col("playDirection") === "left",
-        pmod(col("dir") + 180.0, lit(360.0))).otherwise(col("dir")))
-      .withColumn("los", when(col("playDirection") === "left",
-        lit(Schemas.FieldXMax) - col("los")).otherwise(col("los")))
+    // Each step below is one withColumns over the previous step's columns:
+    // one analysis per step, not one per derived column
+    val left = col("playDirection") === "left"
+    val flipped = withDims.withColumns(Map(
+      // OFF/DEF/FTBL (normalize.py:30-31)
+      "team_pos" -> when(col("teamAbbr") === "FTBL", lit("FTBL"))
+        .when(col("teamAbbr") === col("possessionTeam"), lit("OFF"))
+        .otherwise(lit("DEF")),
+      // direction normalization: all plays flow rightward
+      // (normalize.py:43-57)
+      "x" -> when(left, lit(Schemas.FieldXMax) - col("x")).otherwise(col("x")),
+      "y" -> when(left, lit(Schemas.FieldYMax) - col("y")).otherwise(col("y")),
+      "o" -> when(left, pmod(col("o") + 180.0, lit(360.0))).otherwise(col("o")),
+      "dir" -> when(left, pmod(col("dir") + 180.0, lit(360.0))).otherwise(col("dir")),
+      // line of scrimmage: ball x at ball_snap, broadcast to the play via a
+      // whole-partition window instead of the reference's self-join (J3),
+      // mirrored like x
+      "los" -> {
+        val los = max(when(
+          col("displayName") === "Football" && col("event") === "ball_snap",
+          col("x"))).over(wPlay)
+        when(left, lit(Schemas.FieldXMax) - los).otherwise(los)
+      }))
 
     // velocity decomposition (normalize.py:62-65): tracking `dir` is
     // degrees clockwise from +y; convert to standard math angle
-    val vel = leftFlip
-      .withColumn("s_dir", pmod(lit(90.0) - col("dir"), lit(360.0)))
-      .withColumn("s_dir_rad", radians(col("s_dir")))
-      .withColumn("v_x", col("s") * cos(col("s_dir_rad")))
-      .withColumn("v_y", col("s") * sin(col("s_dir_rad")))
-      .withColumn("v_theta", atan2(col("v_y"), col("v_x")))
-      .withColumn("v_mag", col("s"))
+    val sDir = pmod(lit(90.0) - col("dir"), lit(360.0))
+    val sDirRad = radians(sDir)
+    val vx = col("s") * cos(sDirRad)
+    val vy = col("s") * sin(sDirRad)
+    val vel = flipped.withColumns(Map(
+      "s_dir" -> sDir, "s_dir_rad" -> sDirRad, "v_x" -> vx, "v_y" -> vy,
+      "v_theta" -> atan2(vy, vx), "v_mag" -> col("s")))
 
     // ball rows have no s/dir: derive velocity from the position diff
     // (normalize.py:67-70), per play — same W1 lag-difference
-    val ballVel = vel
-      .withColumn("v_x", when(col("nflId") === 0,
-        (col("x") - lag("x", 1).over(w)) / D).otherwise(col("v_x")))
-      .withColumn("v_y", when(col("nflId") === 0,
-        (col("y") - lag("y", 1).over(w)) / D).otherwise(col("v_y")))
-      .withColumn("v_mag", when(col("nflId") === 0,
-        sqrt(col("v_x") * col("v_x") + col("v_y") * col("v_y")))
-        .otherwise(col("v_mag")))
+    val ballVel = vel.withColumns(Map(
+      "v_x" -> when(col("nflId") === 0,
+        (col("x") - lag("x", 1).over(w)) / D).otherwise(col("v_x")),
+      "v_y" -> when(col("nflId") === 0,
+        (col("y") - lag("y", 1).over(w)) / D).otherwise(col("v_y"))))
 
     // accelerations = velocity lag-difference (normalize.py:75-81)
-    val acc = ballVel
-      .withColumn("a_x", coalesce((col("v_x") - lag("v_x", 1).over(w)) / D, lit(0.0)))
-      .withColumn("a_y", coalesce((col("v_y") - lag("v_y", 1).over(w)) / D, lit(0.0)))
-      .withColumn("a_mag", sqrt(col("a_x") * col("a_x") + col("a_y") * col("a_y")))
-      .withColumn("a_theta", atan2(col("a_y"), col("a_x")))
-      .withColumn("a_old", col("a"))
+    val ax = coalesce((col("v_x") - lag("v_x", 1).over(w)) / D, lit(0.0))
+    val ay = coalesce((col("v_y") - lag("v_y", 1).over(w)) / D, lit(0.0))
+    val acc = ballVel.withColumns(Map(
+      "v_mag" -> when(col("nflId") === 0,
+        sqrt(col("v_x") * col("v_x") + col("v_y") * col("v_y")))
+        .otherwise(col("v_mag")),
+      "a_x" -> ax, "a_y" -> ay, "a_old" -> col("a")))
+      .withColumns(Map(
+        "a_mag" -> sqrt(col("a_x") * col("a_x") + col("a_y") * col("a_y")),
+        "a_theta" -> atan2(col("a_y"), col("a_x"))))
 
     // position group map (normalize.py:87-90) as a literal CASE chain
     val posMap = Schemas.positionGeneral.foldLeft(lit(null).cast("string")) {
       case (acc0, (k, v)) => when(col("position") === k, lit(v)).otherwise(acc0)
     }
 
-    val kinCols = Seq("los", "x", "y", "dis", "o", "s", "s_dir", "s_dir_rad",
+    val kinCols = Set("los", "x", "y", "dis", "o", "s", "s_dir", "s_dir_rad",
       "v_x", "v_y", "v_theta", "v_mag", "a_old", "a_x", "a_y", "a_theta", "a_mag")
-    val rounded = kinCols.foldLeft(acc.withColumn("position_general", posMap)) {
-      (df, c) => df.withColumn(c, round(col(c), 2)) // 2dp (normalize.py:85)
-    }
-
-    rounded.select(
-      col("gameId"), col("playId"), col("frameId"), col("event"), col("nflId"),
-      col("displayName"), col("jerseyNumber"), col("position"),
-      col("position_general"), col("team"), col("team_pos"), col("teamAbbr"),
-      col("route"), col("time"), col("los"), col("x"), col("y"), col("dis"),
-      col("o"), col("s"), col("s_dir"), col("s_dir_rad"), col("v_x"),
-      col("v_y"), col("v_theta"), col("v_mag"), col("a_old"), col("a_x"),
-      col("a_y"), col("a_theta"), col("a_mag"))
+    acc.select(Seq("gameId", "playId", "frameId", "event", "nflId",
+      "displayName", "jerseyNumber", "position", "position_general", "team",
+      "team_pos", "teamAbbr", "route", "time", "los", "x", "y", "dis", "o", "s",
+      "s_dir", "s_dir_rad", "v_x", "v_y", "v_theta", "v_mag", "a_old", "a_x",
+      "a_y", "a_theta", "a_mag").map {
+      case "position_general" => posMap.as("position_general")
+      case c if kinCols(c) => round(col(c), 2).as(c) // 2dp (normalize.py:85)
+      case c => col(c)
+    }: _*)
   }
 
   /** Read raw CSVs and write the normalized table partitioned by game —

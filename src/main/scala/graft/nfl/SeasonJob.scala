@@ -67,11 +67,11 @@ object SeasonJob {
     val xyac = xyacModel.map(XyacModel.kernelScorer)
       .getOrElse((_: Array[Double]) => 5.0)
     val xyacBatch = xyacModel.map(XyacModel.kernelBatchScorer).orNull
+    // the one owner of the kernel output's cache: the first write fills
+    // it, the other three read it
     val out = EppaJob.run(inputs, tables, params, priors, xyac, xyacBatch)
       .cache()
-    val n = out.count()
-    if (n > 0) EppaJob.writeOutputs(out, outDir)
-    out.unpersist()
-    n
+    try EppaJob.writeCounted(out, outDir)
+    finally out.unpersist()
   }
 }

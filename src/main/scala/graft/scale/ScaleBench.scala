@@ -97,7 +97,8 @@ object MetricsListener {
   * Generates ×10 and ×50 corpora from sf0.1 (= sf1 / sf5 row counts) via
   * [[ScaleData]], runs the dedup / ANN / pipeline / relational headline
   * family at ×1, ×10, ×50 with the xxhash64 production twins, and writes
-  * `SCALE_r5.json`: per query per scale — wall seconds, output rows, and
+  * `target/SCALE.json` (or `SPARK_GRAFT_OUT`; the committed `SCALE_r*.json`
+  * artifacts are such runs): per query per scale — wall seconds, output rows, and
   * task-metric totals (shuffle read/write bytes + records, input bytes,
   * spill, peak task memory) — plus the growth ratios that back each
   * claim:
@@ -133,7 +134,7 @@ object ScaleBench {
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,10,50")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_OUT", "SCALE_r6.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_OUT", "target/SCALE.json")
     val dataRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DATA", "target/scaledata")
 
     val spark = graft.GraftSession.local(cpus, appName = "graft-scale")

@@ -170,7 +170,9 @@ object Store {
     // full-cost rerun at 100 TB); a genuine read error must propagate
     val hPath = new org.apache.hadoop.fs.Path(outPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return input // no output yet → nothing to skip
+    // no output yet → nothing to skip; a dynamic-overwrite write of no
+    // rows leaves the directory empty, which is no output either
+    if (!fs.exists(hPath) || fs.listStatus(hPath).isEmpty) return input
     val existing = spark.read.parquet(outPath).select(keyCols.map(col): _*).distinct()
     input.join(broadcast(existing), keyCols, "left_anti")
   }

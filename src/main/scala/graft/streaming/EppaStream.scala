@@ -74,8 +74,9 @@ object EppaStream {
 
   /** Full streaming kernel output — the batch job's four tables' worth of
     * rows (pass summary, per-player stats, field surface, proj) per
-    * completed frame; split downstream with `.map(_.pass)` /
-    * `.flatMap(_.players)` / etc., exactly like EppaJob.writeOutputs. */
+    * completed frame; split downstream into the four tables with
+    * `select("pass.*")` / `explode(col("players"))` / etc., as
+    * EppaJob.writeOutputs does. */
   def frameOutputs(rows: Dataset[TrackRow],
                    epaTables: Map[(Long, Long), (Array[Double], Double)],
                    params: FrameEppa.Params = FrameEppa.Params(),

@@ -201,6 +201,11 @@ class StoreSpec extends SparkTestBase {
     assert(remaining.count() == ev.count() - firstHalf.count())
     // and against a nonexistent path, everything passes through
     assert(Store.skipExisting(ev, tmp() + "/nope", Seq("day")).count() == ev.count())
+    // and against the empty directory a dynamic overwrite of no rows leaves
+    val empty = tmp()
+    ev.limit(0).write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(empty)
+    assert(Store.skipExisting(ev, empty, Seq("day")).count() == ev.count())
   }
 
   test("keyed upsert rewrites only the partitions containing updated keys") {

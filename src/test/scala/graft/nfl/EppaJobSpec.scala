@@ -42,4 +42,24 @@ class EppaJobSpec extends SparkTestBase {
     }
     assert(KernelSpec.digest(parts.flatten.sortBy(key).toSeq) == KernelSpec.digest(want))
   }
+
+  test("writeOutputs leaves its caller's persistence as it found it") {
+    val spark2 = spark
+    import spark2.implicits._
+    val norm = Normalize(ToyData.tracking(spark), ToyData.games(spark),
+      ToyData.plays(spark))
+    val frames = EppaJob.frameInputs(norm).collect().take(3)
+      .map(f => f.copy(players = f.players.take(4)))
+    val epa = frames.map(f => (f.gameId, f.playId) -> (Array.fill(120)(1.0), -0.5)).toMap
+    val cached = EppaJob.run(spark.createDataset(frames.toSeq), epa).cache()
+    cached.count()
+    EppaJob.writeOutputs(cached, tempDir("graft_eppa_cached"))
+    assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    cached.unpersist()
+    val plain = EppaJob.run(spark.createDataset(frames.toSeq), epa)
+    val dir = tempDir("graft_eppa_plain")
+    EppaJob.writeOutputs(plain, dir)
+    assert(plain.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.read.parquet(s"$dir/passes").count() == frames.length)
+  }
 }

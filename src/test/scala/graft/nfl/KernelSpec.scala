@@ -223,4 +223,21 @@ object KernelSpec {
     outs.foreach(put)
     md.digest().map("%02x".format(_)).mkString
   }
+
+  /** SHA-256 over `df`'s schema and its rows in sorted order, doubles by
+    * their raw bits, so any change of a value, a column or its order moves
+    * the digest while row order does not. */
+  def rowsDigest(df: org.apache.spark.sql.DataFrame): String = {
+    def cell(v: Any): String = v match {
+      case null => "<null>"
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))
+      case x => x.toString
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
+      .mkString(",").getBytes("UTF-8"))
+    df.collect().map(_.toSeq.map(cell).mkString("|")).sorted
+      .foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
 }

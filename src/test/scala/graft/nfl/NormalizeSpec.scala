@@ -80,4 +80,9 @@ class NormalizeSpec extends SparkTestBase {
     val moving = ball.filter(abs(col("v_mag")) > 0.01)
     assert(moving.count() == 0)
   }
+
+  test("bit-exact pin: every row and the schema of the toy normalize") {
+    val digest = KernelSpec.rowsDigest(norm)
+    assert(digest == "d5893c7b3c8b82ce2846278c012ebf48d3f4faa442543acbb5c66257a871fcdd", s"normalize digest moved: $digest")
+  }
 }

@@ -72,4 +72,31 @@ class SeasonJobSpec extends SparkTestBase {
       "existing game-1 output merged with new game-2 output")
     assert(all.select("gameId").distinct().count() == 2)
   }
+
+  test("bit-exact pin: all four output tables of the toy plays") {
+    val dir = tempDir("graft_season_pin")
+    assert(SeasonJob.run(norm, preState, dir, xyacModel = None) == 48)
+    val got = Seq("passes", "player_stats", "field_viz", "player_proj").map { t =>
+      t -> KernelSpec.rowsDigest(spark.read.parquet(s"$dir/$t"))
+    }.toMap
+    val want = Map(
+      "passes" -> "1050379c10943f5ea1d262e71b8309101b908a2778cd82f543b11196b0e496ed",
+      "player_stats" -> "9ed02abd928d6aa47114b6a462860de75a0cd3212bcb37d0e9fd156f6624f119",
+      "field_viz" -> "8c6b81795fa64b94fab5e744c2bca7b2e4dfbfa3573dfc81e36db74c4f2e6b40",
+      "player_proj" -> "4c69ae3947405bd05708083377cf5ec5e3054650a27e3ae95f1b865c928c2981")
+    assert(got == want, s"season output digests moved: $got")
+  }
+
+  test("a first run with no in-window frames returns 0; a full run then resumes") {
+    val dir = tempDir("graft_season3")
+    // frames before snap+14 only: no play reaches the model window
+    val early = norm.filter(col("frameId") < ToyData.SnapFrame + EppaJob.MinFramesAfterSnap)
+    assert(SeasonJob.run(early, preState, dir, xyacModel = None) == 0)
+    assert(SeasonJob.run(norm, preState, dir, xyacModel = None) == 48)
+    assert(SeasonJob.run(norm, preState, dir, xyacModel = None) == 0,
+      "the full run's plays must be skipped on the next resume")
+    val passes = spark.read.parquet(s"$dir/passes")
+    assert(passes.count() == 48)
+    assert(passes.select("gameId", "playId").distinct().count() == 4)
+  }
 }
